@@ -33,7 +33,7 @@ object Bench {
     * calm = warmup within the bar; moderate = up to 2x the bar (the r14
     * 70 s band); heavy = beyond (the r15 375 s band). `fullWarmupRan`
     * guards the bar's precondition — with the registry warm pass skipped
-    * (env opt-out or missing sibling sf0.001 dir) warmup_sec measures
+    * (missing sibling sf0.001 dir) warmup_sec measures
     * different work and the label would be meaningless, so say so. */
   def weatherLabel(warmupSec: Double, fullWarmupRan: Boolean): String =
     if (!fullWarmupRan) "unknown"
@@ -117,155 +117,27 @@ object Bench {
 
   private var warmStreamDir: String = _
 
+  /** Per-query unpersist of checkpoint blocks. An early 138-gate
+    * measurement read ~neutral (124.1 vs 121.4 s same-weather), but the
+    * round-7/8 registry added several localCheckpoint-heavy gates (prefix
+    * index, substring spans, components) and the verdict flipped hard: the
+    * 8-query dedup subset measures 25.9 s with blocks accumulating vs 8.1 s
+    * unpersisting (dedup_simhash 3.9→0.5, _prefix 8.5→1.1, substring_spans
+    * 6.2→1.2 — same weather, warm, second round). Leaked blocks squeeze
+    * execution memory and the suite pays in shuffle spills, exactly what a
+    * long-lived cluster session would see; eager cleanup after each query's
+    * materialization mirrors what ContextCleaner does lazily on GC, just
+    * deterministically. Safe here because no gate re-executes another
+    * gate's plan: each builds fresh from Tables (unpersisting a
+    * localCheckpointed RDD makes RE-execution impossible — lineage is
+    * truncated — so this stays a harness policy, not a library default). */
+  private def unpersistAll(spark: SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Posture.sfDir
     val probe = cpuProbeSec()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // AQE OFF at bench scale (overridable): adaptive execution re-plans
-      // and re-codegens per materialized stage — pure overhead on sf0.1
-      // single-node shuffles (measured: 10 cheap gates 6.9 s -> 5.0 s, 12
-      // heavy gates 24.1 -> 20.6; only 2 of 22 regressed, <0.3 s). Its
-      // benefits (runtime coalesce, skew splits, join demotion) need
-      // cluster-scale shuffles — a 100 TB deployment keeps the default ON;
-      // operators never depend on it for correctness (Verify runs AQE-on).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      // whole-stage codegen stays ON: a 12-query subset suggested compile
-      // time dominates at one-shot sf0.1, but the full suite measured the
-      // opposite (138.5 s vs 124.6 s same-weather) — the pair-join
-      // conditions (Myers guard, banded DP, jaccard verify) are exactly
-      // where interpreted evaluation loses more than compile saves
-      .config("spark.sql.codegen.wholeStage",
-        sys.env.getOrElse("SPARK_GRAFT_WSCG", "true"))
-      // default 16, not cpus(32): with AQE off, every post-exchange stage
-      // runs exactly this many tasks, and at sf0.1 the pair-join/merge
-      // stages are overhead-bound — measured same-code back-to-back, the
-      // dedup/ts/pair family costs 21.0 s at 32 vs 17.1 (16) / 15.4-17.6
-      // (8) with no consistent loser at 16 (tools/HllProbe and the
-      // round-12 partition sweep). A 100 TB deployment sizes this to
-      // data-scale (and keeps AQE on); gates with known-tiny merge stages
-      // additionally pin their own (pagerank 8, HLL 8, streams 4).
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", "16"))
-      // state-store maintenance (snapshot/cleanup of loaded providers)
-      // defaults to every 60s — with six stream gates spread across the
-      // suite it fires DURING later queries' timed sections, working on
-      // stores of already-finished queries. Push it past the bench window
-      // (pure overhead for a minutes-long batch process; host-noise band
-      // ±10% prevented pinning a number on it). A long-running production
-      // stream keeps the default.
-      .config("spark.sql.streaming.stateStore.maintenanceInterval",
-        sys.env.getOrElse("SPARK_GRAFT_SS_MAINT", "3600s"))
-      // Micro-batch fixed-cost floor (A/B via env): no-data batches exist to
-      // advance watermarks with idle sources — every finite replay here is a
-      // drain-and-terminate AvailableNow run, so they are a pure extra trigger per gate
-      // (measured on the 6 stream gates: 24.7 → 17.8 s together with
-      // minBatchesToRetain). The one gate whose Append-mode emission NEEDS
-      // the trailing no-data batch (stream_session_windows) pins the conf
-      // back on around its own run; hash-equality of all six gates under
-      // these settings is pinned by tools/selfcheck.py on a Verify dump run
-      // with the same envs. minBatchesToRetain=2 (default 100) keeps two
-      // triggers of offset/commit/state history — a replay that is deleted
-      // right after the run has no restart to serve; production keeps the
-      // default for its restart window.
-      .config("spark.sql.streaming.noDataMicroBatches.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_NO_DATA_MB", "false"))
-      // 1 (was 2): keeps only the latest committed batch's offset/commit/
-      // state history — exactly what a restart needs (stream_sink_parquet's
-      // re-invocation restart works against the latest commit), and these
-      // replays' checkpoints are deleted right after the run anyway.
-      // Steady-state block A/B: 18.05 s at 2 → 17.12 s at 1 (13 gates,
-      // inside the noise band but consistently signed). Production keeps
-      // the default 100 for its restart window.
-      .config("spark.sql.streaming.minBatchesToRetain",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_RETAIN", "1"))
-      // RocksDB commit path (TWS gates): changelog checkpointing writes the
-      // per-commit delta instead of uploading a full snapshot per trigger —
-      // the production posture for large state; A/B knob at gate scale.
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "false"))
-      // State-store backend for the NON-TWS stateful gates (the TWS gates
-      // pin RocksDB themselves — the API requires it): A/B knob, engine
-      // default (HDFS-backed in-memory map) kept when unset. Measured r19
-      // (VERDICT ask 3): RocksDB loses at gate-scale state (see
-      // OPTIMIZATION_r19.md); at 100 TB state sizes RocksDB is the standard
-      // posture — this stays a deployment-sized choice, not a constant.
-      .config("spark.sql.streaming.stateStore.providerClass",
-        sys.env.getOrElse("SPARK_GRAFT_SS_PROVIDER",
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"))
-      // Every checkpoint this session writes lives under Scratch.root (a
-      // local tmpfs) — route WAL/commit/state-delta writes through the
-      // java.nio manager instead of FileContext's ~42 ms-per-rename local
-      // fallback (see LocalCheckpointFileManager's doc + FsProbe numbers).
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
-          graft.streaming.LocalCheckpointFileManager.confValue))
-      // Cross-query codegen reuse: the suite compiles ~142 distinct plans,
-      // and with stage IDs baked into generated class names (engine default,
-      // a debuggability aid) otherwise byte-identical stages cache-miss
-      // across queries — the janino cache is keyed on the source string.
-      // Stable names + a cache sized for the whole suite turn repeated
-      // scan/agg/exchange stages into cache hits (interleaved same-weather
-      // A/B, 4 runs each way: every cgfalse run beat its default neighbor,
-      // median delta ~5 s / ~6%). Semantics unaffected; Verify keeps engine
-      // defaults.
-      // 4000: the round-8 registry compiles ~1800 distinct sources across
-      // warm-up + timed run — at the old 2000 cap, LRU eviction was one
-      // registry growth spurt away from re-compiling early-warmed classes
-      // inside the timed loop
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-      .config("spark.sql.codegen.useIdInClassName",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_ID", "false"))
-      // Optimizer constraint propagation is O(plan-width^2) per node, paid
-      // at every (re)plan — including each micro-batch's incremental plan.
-      // Its execution payoff (inferred IsNotNull / join-key filters) is
-      // negligible on these already-explicit gates: interleaved A/B,
-      // min-of-2-runs per config, measured 64.2 s on → 60.4 s off with the
-      // largest per-query regression 0.15 s (noise band). Off for the
-      // bench session; correctness never depends on it and Verify keeps
-      // the engine default (on).
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "false"))
-      // Local-mode shuffles land in the page cache; lz4 may be pure CPU.
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
-      // NOTE: adaptive.coalescePartitions.parallelismFirst=false was
-      // measured here and REVERTED: it coalesces the CPU-bound pair-join
-      // probes to one partition (serializing them) — the default's
-      // parallelism-preserving coalesce is the right trade on local[32]
-      //
-      // AQE-on coalesce floor (only read when SPARK_GRAFT_AQE=true): even
-      // with parallelismFirst, the coalescer's target is
-      // max(totalBytes/parallelism, minPartitionSize) — the pair-join
-      // family's shuffles carry FEW BYTES but heavy per-row compute
-      // (candidate intersects), so the default 1 MB floor coalesces them
-      // to a handful of tasks and serializes CPU-bound work. A smaller
-      // floor restores task-wave parallelism for exactly those stages;
-      // measured A/B in COVERAGE.md round 14.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "1m"))
-      .config("spark.ui.enabled", "false")
-      // committer v2: task commit renames straight to the destination, job
-      // commit is O(1) — on the forked-chmod local FS (FsProbe) the v1
-      // double-rename costs ~4 ms/file extra across the write gates.
-      // Standard tradeoff (partial output visible on job failure) — these
-      // bench writes are all scratch.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        sys.env.getOrElse("SPARK_GRAFT_COMMITTER_V", "2"))
-      // file:// via the nio-permission RawLocalFileSystem subclass: the
-      // default LocalFileSystem pays a fork/exec chmod per created
-      // file/dir (no native Hadoop lib) plus CRC sidecar files — ~2x the
-      // committer's metadata ops on every local write (WriteProbe: 438 ->
-      // 294 ms median for a 16-file write). Local-scratch-only posture,
-      // like the checkpoint manager above.
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS", "graft.io.NioLocalFileSystem"))
-      .getOrCreate()
+    val spark = Posture.session(Posture.cpus(4), Posture.benchConfs)
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up OUTSIDE the timed loop: JVM class loading, first whole-stage
     // codegen compile, and parquet reader init otherwise all land on the
@@ -450,57 +322,56 @@ object Bench {
     // (Measured: in-suite a9_percentiles 1.29 s → 0.29 s warm floor,
     // a8_grouping_sets 1.18 → 0.24, a9b 1.07 → 0.29 — first-run compile
     // was being charged to gates whose operator families the hand-rolled
-    // warm-ups above don't cover.) SPARK_GRAFT_WARM_REGISTRY=false opts
-    // out; a missing sibling dir skips silently (warmup_sec stays honest).
-    var warmRegistryRan = false // weather label precondition (see weatherLabel)
-    if (sys.env.getOrElse("SPARK_GRAFT_WARM_REGISTRY", "true") == "true") {
-      val warmSf = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-      if (warmSf.isDirectory && warmSf.getAbsolutePath != new java.io.File(sfDir).getAbsolutePath) {
-        warmRegistryRan = true
-        val warmDir = warmSf.getAbsolutePath
-        // Shared scratch artifacts FIRST, sequentially: the landing and
-        // bucketed-table builders are once-per-(JVM, dir) caches whose
-        // update thunks may run more than once under TrieMap contention —
-        // two threads overwrite-writing the same path is the one real race
-        // in this pass, so take it off the table before going wide.
-        try {
-          graft.streaming.StreamOps.eventsLanding(spark, warmDir)
-          graft.streaming.StreamOps.eventsLandingWithSentinel(spark, warmDir)
-          graft.streaming.StreamOps.eventsLandingWithDuplicates(spark, warmDir)
-          graft.streaming.StreamOps.ordersChangesLanding(spark, warmDir)
-          graft.queries.CoreQueries.ensureBucketedPair(spark, warmDir)
-        } catch { case scala.util.control.NonFatal(_) => () }
-        // The warm pass exists only to compile code and JIT hot paths — a
-        // sequential run of 175 tiny sf0.001 queries is latency-bound on
-        // the driver (planning, job barriers), ~80 s of the ~110 s warmup.
-        // Run it on a small thread pool instead: each worker gets its OWN
-        // SparkSession (newSession = fresh SessionState over the shared
-        // context), so the conf-mutating gates (stream_*, j3/j4 pin
-        // shuffle partitions / broadcast thresholds and restore) stay
-        // session-local and cannot corrupt a neighbor's planning; janino's
-        // compile cache and the JIT are process-global, so every compile
-        // still transfers to the measured run. Query failures stay
-        // swallowed — a warm-up failure must never mask the measured
-        // run — but only NON-fatal ones: an OutOfMemoryError or other
-        // VirtualMachineError here means the heap entering the timed
-        // loop is hosed, and silently eating it would corrupt the
-        // measurements it exists to protect.
-        val threads = math.min(8, Runtime.getRuntime.availableProcessors)
-        val work = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex
-        val pool = (0 until threads).map { t =>
-          val session = spark.newSession()
-          new Thread(() => {
-            org.apache.spark.sql.SparkSession.setActiveSession(session)
-            work.foreach { case ((_, fn), i) =>
-              if (i % threads == t)
-                try fn(session, warmDir).queryExecution.toRdd.count(): Unit
-                catch { case scala.util.control.NonFatal(_) => () }
-            }
-          }, s"graft-warm-$t")
-        }
-        pool.foreach(_.start())
-        pool.foreach(_.join())
+    // warm-ups above don't cover.) A missing sibling dir skips silently
+    // (warmup_sec stays honest).
+    val warmSf = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
+    // weather label precondition (see weatherLabel)
+    val warmRegistryRan =
+      warmSf.isDirectory && warmSf.getAbsolutePath != new java.io.File(sfDir).getAbsolutePath
+    if (warmRegistryRan) {
+      val warmDir = warmSf.getAbsolutePath
+      // Shared scratch artifacts FIRST, sequentially: the landing and
+      // bucketed-table builders are once-per-(JVM, dir) caches whose
+      // update thunks may run more than once under TrieMap contention —
+      // two threads overwrite-writing the same path is the one real race
+      // in this pass, so take it off the table before going wide.
+      try {
+        graft.streaming.StreamOps.eventsLanding(spark, warmDir)
+        graft.streaming.StreamOps.eventsLandingWithSentinel(spark, warmDir)
+        graft.streaming.StreamOps.eventsLandingWithDuplicates(spark, warmDir)
+        graft.streaming.StreamOps.ordersChangesLanding(spark, warmDir)
+        graft.queries.CoreQueries.ensureBucketedPair(spark, warmDir)
+      } catch { case scala.util.control.NonFatal(_) => () }
+      // The warm pass exists only to compile code and JIT hot paths — a
+      // sequential run of 175 tiny sf0.001 queries is latency-bound on
+      // the driver (planning, job barriers), ~80 s of the ~110 s warmup.
+      // Run it on a small thread pool instead: each worker gets its OWN
+      // SparkSession (newSession = fresh SessionState over the shared
+      // context), so the conf-mutating gates (stream_*, j3/j4 pin
+      // shuffle partitions / broadcast thresholds and restore) stay
+      // session-local and cannot corrupt a neighbor's planning; janino's
+      // compile cache and the JIT are process-global, so every compile
+      // still transfers to the measured run. Query failures stay
+      // swallowed — a warm-up failure must never mask the measured
+      // run — but only NON-fatal ones: an OutOfMemoryError or other
+      // VirtualMachineError here means the heap entering the timed
+      // loop is hosed, and silently eating it would corrupt the
+      // measurements it exists to protect.
+      val threads = math.min(8, Runtime.getRuntime.availableProcessors)
+      val work = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex
+      val pool = (0 until threads).map { t =>
+        val session = spark.newSession()
+        new Thread(() => {
+          org.apache.spark.sql.SparkSession.setActiveSession(session)
+          work.foreach { case ((_, fn), i) =>
+            if (i % threads == t)
+              try fn(session, warmDir).queryExecution.toRdd.count(): Unit
+              catch { case scala.util.control.NonFatal(_) => () }
+          }
+        }, s"graft-warm-$t")
       }
+      pool.foreach(_.start())
+      pool.foreach(_.join())
     }
     // ONE full GC at the warm/measure boundary (distinct from the rejected
     // per-query GC, which evicted hot code between timed queries): the
@@ -527,11 +398,12 @@ object Bench {
     val selected =
       if (wanted.isEmpty) SparkEntry.queries.toSeq
       else SparkEntry.queries.filter(q => wanted(q._1)).toSeq
-    // diagnostic: SPARK_GRAFT_ROUNDS=N runs the suite N times and reports
-    // the LAST round — the steady-state floor with JIT/codegen fully warm.
-    // The recorded bench always uses 1 (the driver sets no env).
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_ROUNDS", "1").toInt
-    def runRound() = selected.sortBy(_._1).map { case (name, fn) =>
+    // compiles inside the timed loop: with the registry warm pass on, this
+    // should be ~0 — a big number means warm-pass plans and timed plans
+    // diverge (suite tax)
+    val cgBefore = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val results = selected.sortBy(_._1).map { case (name, fn) =>
       val t0 = System.nanoTime()
       // a failure must be VISIBLE, never a fast fake timing: record the
       // error message per query and poison the total.
@@ -541,76 +413,21 @@ object Bench {
       // were being timed as bare scans while the DuckDB oracle pays for a
       // full fetchall. toRdd evaluates every output column of the plan as
       // declared — the same work Verify pays — without adding hash overhead.
-      // diagnostic: SPARK_GRAFT_PLAN_ONLY=true times analysis+optimization+
-      // physical planning only (no execution) — splits the suite's fixed
-      // Catalyst cost from real work. Never set by the driver.
-      val planOnly = sys.env.getOrElse("SPARK_GRAFT_PLAN_ONLY", "false") == "true"
-      // diagnostic: SPARK_GRAFT_CG_PER_QUERY=true prints per-query janino
-      // compile deltas to stderr — finds gates whose data-dependent plan
-      // literals defeat the sf0.001 warm pass. Never set by the driver.
-      val cgPerQuery = sys.env.getOrElse("SPARK_GRAFT_CG_PER_QUERY", "false") == "true"
-      val cgq0 = if (cgPerQuery)
-        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      else 0L
       val err = try {
-        if (planOnly) { fn(spark, sfDir).queryExecution.executedPlan; () }
-        else fn(spark, sfDir).queryExecution.toRdd.count(): Unit
+        fn(spark, sfDir).queryExecution.toRdd.count(): Unit
         None
       } catch {
         case e: Throwable => Some(s"${e.getClass.getSimpleName}: ${e.getMessage}")
       }
       val elapsed = (System.nanoTime() - t0) / 1e9
-      if (cgPerQuery) {
-        val d = org.apache.spark.metrics.source.CodegenMetrics
-          .METRIC_COMPILATION_TIME.getCount - cgq0
-        if (d > 0) System.err.println(s"[cg] $name compiled $d sources")
-      }
-      // Per-query System.gc() measured and REJECTED (off by default): the
-      // full-GC nudge between queries read well once under throttled-host
-      // noise, but the controlled same-weather A/B says 121.4 s without vs
-      // 137.7 s with — full collections evict JIT-hot code and cached
-      // blocks that later queries re-pay for. The ContextCleaner's own
-      // weak-ref collection handles the per-query cache garbage fine.
-      if (sys.env.getOrElse("SPARK_GRAFT_GC_EACH", "false") == "true") System.gc()
-      // Per-query unpersist of checkpoint blocks: ON by default. An early
-      // 138-gate measurement read ~neutral (124.1 vs 121.4 s same-weather),
-      // but the round-7/8 registry added several localCheckpoint-heavy
-      // gates (prefix index, substring spans, components) and the verdict
-      // flipped hard: the 8-query dedup subset measures 25.9 s with blocks
-      // accumulating vs 8.1 s unpersisting (dedup_simhash 3.9→0.5,
-      // _prefix 8.5→1.1, substring_spans 6.2→1.2 — same weather, warm,
-      // ROUNDS=2). Leaked blocks squeeze execution memory and the suite
-      // pays in shuffle spills, exactly what a long-lived cluster session
-      // would see; eager cleanup after each query's materialization mirrors
-      // what ContextCleaner does lazily on GC, just deterministically. Safe
-      // here because no gate re-executes another gate's plan: each builds
-      // fresh from Tables (unpersisting a localCheckpointed RDD makes
-      // RE-execution impossible — lineage is truncated — so this stays a
-      // harness policy, not a library default).
-      if (sys.env.getOrElse("SPARK_GRAFT_UNPERSIST_EACH", "true") == "true")
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      // No per-query System.gc(): the same-weather A/B measured 121.4 s
+      // without vs 137.7 s with — full collections evict JIT-hot code and
+      // cached blocks that later queries re-pay for.
+      unpersistAll(spark)
       (name, elapsed, err)
     }
-    // compiles inside the REPORTED round only (the last — the one whose
-    // timings go in the JSON): with the registry warm pass on, this should
-    // be ~0 — a big number means warm-pass plans and timed plans diverge
-    // (suite tax). Snapshot at the START of the last round so multi-round
-    // steady-state runs don't count round-1's first-compile burst against
-    // the steady-state timings.
-    var cgBefore = 0L
-    val results = (1 to rounds).map { i =>
-      if (i == rounds) cgBefore = org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME.getCount
-      runRound()
-    }.last
     val cgTimed = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount - cgBefore
-    // diagnostic: dump cumulative Catalyst rule timings (analysis+optimizer)
-    // across the whole suite — pairs with SPARK_GRAFT_PLAN_ONLY to find
-    // planning hot spots. Never set by the driver.
-    if (sys.env.getOrElse("SPARK_GRAFT_RULE_DUMP", "false") == "true")
-      System.err.println(
-        org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent())
     def r3(v: Double): String = (math.rint(v * 1000) / 1000).toString
     val qs = results.map { case (k, v, err) =>
       jsonStr(k) + ":" + (if (err.isEmpty) r3(v) else jsonStr("ERROR " + err.get.take(120)))
@@ -632,8 +449,7 @@ object Bench {
           SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count(): Unit
           true
         } catch { case scala.util.control.NonFatal(_) => false }
-        if (sys.env.getOrElse("SPARK_GRAFT_UNPERSIST_EACH", "true") == "true")
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        unpersistAll(spark)
         (name, if (ok) (System.nanoTime() - t0) / 1e9 else GustRerunFailed)
       }
     val timedByName = results.map(r => r._1 -> r._2).toMap
@@ -687,9 +503,9 @@ object Bench {
     // repo root records the latest calm paired measurement; embedding it
     // here puts that context INSIDE every BENCH artifact.
     val paired = try {
-      // resolution order: explicit env override, then the repo root derived
-      // from where this class was loaded (…/target/scala-*/classes → two
-      // parents up), then the launch cwd as a last resort — a bench
+      // resolution order: the repo root derived from where this class was
+      // loaded (…/target/scala-*/classes → two parents up), then the
+      // launch cwd as a last resort — a bench
       // launched from elsewhere still finds the repo's file, and a stale
       // foreign PAIRED.json in some other cwd can't shadow it
       val fromCodeSource = try {
@@ -698,9 +514,7 @@ object Bench {
         Option(loc.getParent).flatMap(p => Option(p.getParent))
           .map(_.getParent).filter(_ != null).map(_.resolve("PAIRED.json"))
       } catch { case _: Exception => None }
-      val candidates =
-        sys.env.get("SPARK_GRAFT_PAIRED").map(java.nio.file.Paths.get(_)).toSeq ++
-        fromCodeSource.toSeq :+ java.nio.file.Paths.get("PAIRED.json")
+      val candidates = fromCodeSource.toSeq :+ java.nio.file.Paths.get("PAIRED.json")
       candidates.find(java.nio.file.Files.exists(_)) match {
         case Some(p) =>
           val raw = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: print the formatted physical plan of one or more
   * registry queries. The final action never runs, but queries built on
   * eager materialization (localCheckpoint in the dedup/corpus-clean family,
@@ -11,6 +9,10 @@ import org.apache.spark.sql.SparkSession
   * sf0.001) when auditing those.
   *
   * Usage: runMain graft.Explain <queryName>[,<queryName>...] [sfDir]
+  *
+  * The session is built from [[Posture.benchConfs]], so the printed plans
+  * are the plans the bench runs (AQE off, 16 shuffle partitions,
+  * constraint propagation off, stable codegen class names).
   *
   * This is the feedback loop the 100 TB posture demands: after a query is
   * correct, read its plan — pushed filters, exchange count, reused
@@ -22,17 +24,7 @@ object Explain {
     val names = args.headOption.map(_.split(",").toSeq)
       .getOrElse(sys.error("usage: Explain <queryName>[,<name>...] [sfDir]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      // mirror Bench's planner config (AQE off there — measured faster for
-      // the one-shot suite): without this, plans printed here show AQE's
-      // runtime broadcasts that the bench never gets, e.g. joins against
-      // stats-less localCheckpoint relations
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Posture.session(Posture.cpus(4), Posture.benchConfs)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

@@ -14,7 +14,7 @@ package graft
   * gate that wrote them.
   */
 object Scratch {
-  lazy val root: String = sys.env.get("GRAFT_SCRATCH_DIR").getOrElse {
+  lazy val root: String = Posture.scratchDir.getOrElse {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite) "/dev/shm"
     else System.getProperty("java.io.tmpdir")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -37,33 +36,8 @@ object Verify {
       val unknown = w.diff(SparkEntry.queries.keySet)
       require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // engine defaults unless overridden — lets the Bench session's
-      // streaming fixed-cost settings be correctness-checked through the
-      // same oracle compare (the driver sets no env)
-      .config("spark.sql.streaming.noDataMicroBatches.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_NO_DATA_MB", "true"))
-      .config("spark.sql.streaming.minBatchesToRetain",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_RETAIN", "100"))
-      // the nio checkpoint manager is DEFAULT here (unlike the perf confs
-      // above): it is library I/O code, so the driver's oracle compare is
-      // exactly where it must prove itself — every stream gate's hash runs
-      // through it. All Verify/Bench checkpoints live under Scratch.root
-      // (local), the manager's only supported scope.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
-          graft.streaming.LocalCheckpointFileManager.confValue))
-      // same library-I/O-code rationale as above: every gate's local read
-      // and write runs through the nio-permission local FS here, so the
-      // oracle compare is what proves it
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS", "graft.io.NioLocalFileSystem"))
-      .getOrCreate()
+    val cpus = Posture.cpus(4)
+    val spark = Posture.session(cpus, Posture.verifyConfs(cpus))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -38,8 +38,9 @@ object PageRank {
     * materialization: the checkpoint freezes HALF the rows and the other
     * half is derived per scan by a narrow column-swap projection over the
     * same frozen blocks — at any scale that halves the block-store write
-    * and the resident edge copy (measured r19: the materialization is
-    * ~50% of the gate's steady cost at sf0.1; see OPTIMIZATION_r19.md).
+    * and the resident edge copy. Its A/B is unrecorded: no measurement of
+    * `symmetricHalf` against the pre-built union exists yet (ROADMAP open
+    * item, graph_pagerank).
     */
   def pageRank(edges: DataFrame, iterations: Int,
                damping: Double = 0.85, noDangling: Boolean = false,

@@ -14,8 +14,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * Hadoop library is absent — this container, and most non-HDFS hosts).
   * Every `create`/`mkdirs` in a local write applies permissions, so the
   * fork tax lands on each file and directory an output committer touches:
-  * [[graft.tools.FsProbe]] measures ~7 ms per op forked vs ~0.05 ms
-  * through nio.
+  * ~7 ms per op forked vs ~0.05 ms through nio (COVERAGE "Rounds 10–13
+  * change notes", Round 12).
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = {
@@ -52,10 +52,10 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
   * corruption a re-runnable job would regenerate from source anyway.
   * Reading checksummed files others wrote still verifies as usual.
   *
-  * Registered via `spark.hadoop.fs.file.impl` in the Bench/Verify
-  * sessions, whose write targets are all local scratch
-  * ([[graft.tools.WriteProbe]]: 438 → 294 ms median for a 16-file
-  * parquet write). Production on HDFS/object stores never sees this
+  * Registered via `spark.hadoop.fs.file.impl` in the [[graft.Posture]]
+  * sessions, whose write targets are all local scratch (438 → 294 ms
+  * median for a 16-file parquet write; write gates ~25 % faster, same
+  * COVERAGE entry). Production on HDFS/object stores never sees this
   * class.
   */
 class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem) {

@@ -1358,7 +1358,8 @@ object CoreQueries {
         // Catalyst's one-distinct 4-stage plan, no Expand): one lineitem scan
         // instead of two scans + a join (1.03 s → measured below re-fusion).
         // Shuffle partitions pinned to 8 for the post-exchange stages
-        // (~230k distinct keys; tools/HllProbe: 0.70 s @ 32 → 0.52 s @ 8 —
+        // (~230k distinct keys; 0.70 s @ 32 → 0.52 s @ 8, COVERAGE
+        // "ScaleCheck: measured 10× scaling", Measured-and-TAKEN —
         // scan-side parallelism is unaffected, the win is task overhead on
         // the tiny merge stages); pin requires materializing inside it.
         val li = Tables.lineitem(spark, dir)
@@ -1410,7 +1411,7 @@ object CoreQueries {
       Some("""SELECT l_returnflag, CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_distinct
              |FROM lineitem GROUP BY l_returnflag""".stripMargin),
       (spark, dir) => {
-        // same parts=8 pin as hll_approx_distinct (tools/HllProbe): both
+        // same parts=8 pin as hll_approx_distinct (see there): both
         // legs end in few-key merge stages where 32 tasks is pure overhead
         val li = Tables.lineitem(spark, dir)
         GateConf.withShuffleParts(spark, "8") {

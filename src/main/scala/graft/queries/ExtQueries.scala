@@ -584,7 +584,8 @@ object ExtQueries {
              |""".stripMargin),
       (spark, dir) => {
         // 64 hashes / 32 bands (r=2), tuned against the MEASURED output-pair
-        // distribution (DedupProbe at sf0.1): every true pair has j >= 0.8
+        // distribution (sf0.1, COVERAGE "Rounds 10–13 change notes", Round
+        // 12): every true pair has j >= 0.8
         // (p05 = 0.91), where 32 bands miss with prob (1-0.64)^32 ~= 4e-15;
         // even a hypothetical pair AT the 0.4 threshold misses with only
         // 0.004. Halves the signature kernel and the banding join vs the
@@ -909,8 +910,8 @@ object ExtQueries {
       (spark, dir) => {
         val emb = Tables.embeddings(spark, dir)
         val probes = emb.filter(col("vec_id") < 10)
-        // nlist=16 / nprobe=8, floor 0.6: the AnnSweepProbe parameter-recall
-        // curve (sf0.001/0.01/0.1) measures 0.72/0.72/0.80 here — the
+        // nlist=16 / nprobe=8, floor 0.6: the parameter-recall curve in
+        // SimSearchSpec (sf0.001/0.01/0.1) measures 0.72/0.72/0.80 here — the
         // near-uniform testdata (true top-5 cosines 0.26-0.49) caps what any
         // cell partitioning can do below nprobe/nlist ~= 1/2. Safe config on
         // a recall miss: nprobe = nlist, i.e. probe EVERY cell — exact by
@@ -963,7 +964,7 @@ object ExtQueries {
         val probes = emb.filter(col("vec_id") < 10)
         // 3 planes, floor 0.5: sign-LSH on the near-uniform testdata loses
         // ~cos⁻¹(0.4)/π ≈ 37% of hyperplane votes per true neighbor, so
-        // recall falls fast with plane count (AnnSweepProbe curve at
+        // recall falls fast with plane count (SimSearchSpec curve at
         // sf0.001/0.01/0.1: planes=2 → 0.82/0.88/0.84, 3 → 0.54/0.74/0.68,
         // 4 → 0.36/0.54/0.46, 8 → ~0.1). planes=3 is the coarsest config
         // that still partitions (8 buckets + hamming-1 multiprobe); gate
@@ -972,7 +973,7 @@ object ExtQueries {
           k = 5, numPlanes = 3, dim = 64)
         // safe config on a recall miss: FEWER planes — 2 planes = 4 buckets
         // + hamming-1 multiprobe visits 3/4 of the corpus per probe, the
-        // coarsest partitioning that is still LSH (AnnSweepProbe: 0.82-0.88
+        // coarsest partitioning that is still LSH (SimSearchSpec: 0.82-0.88
         // recall across SFs, comfortably above the 0.5 floor)
         annRecallGate("ann_topk_lsh", emb, probes, approx,
           SimSearch.lshTopK(emb, probes, "vec_id", "embedding",

@@ -8,18 +8,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Session conf binds at ACTION time, not DataFrame construction, so a pin
   * is only effective if the gate materializes inside it — the body is
   * therefore eagerly `localCheckpoint()`ed before the conf is restored.
-  * Under `SPARK_GRAFT_PLAN_ONLY` (Bench's planning-cost diagnostic) the
-  * body is returned LAZY and unpinned instead, so the diagnostic stays
-  * execution-free for gates using this helper.
   */
 object GateConf {
-  def withShuffleParts(spark: SparkSession, parts: String)(body: => DataFrame): DataFrame =
-    if (sys.env.getOrElse("SPARK_GRAFT_PLAN_ONLY", "false") == "true") body
-    else {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-        body.localCheckpoint()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+  def withShuffleParts(spark: SparkSession, parts: String)(body: => DataFrame): DataFrame = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", parts)
+      body.localCheckpoint()
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
 }

@@ -25,71 +25,45 @@ object StreamOps {
     * the micro-batch floor. Prefer the RAM-backed tmpfs when present (the
     * local-mode analogue of putting state-store + checkpoint dirs on
     * executor-local NVMe, which is how you'd deploy on a real cluster);
-    * `GRAFT_STREAM_TMP` overrides, `java.io.tmpdir` is the fallback.
+    * see [[graft.Scratch.root]] for the override and the fallback.
     */
   def tmpRoot: String = graft.Scratch.root
 
   /** Shuffle-partition count the stream gates pin for their stateful
     * stages (state-store instances and their per-trigger commit machinery
     * scale with partition count, and gate-scale micro-batches are
-    * overhead-bound, not compute-bound). Env-tunable for A/B
-    * (`GRAFT_STREAM_PARTS`); a production stream sizes this to
-    * key-cardinality × executor count, not to a constant.
+    * overhead-bound, not compute-bound; a 1/2/4/8 A/B was flat, COVERAGE
+    * "ScaleCheck: measured 10× scaling", Measured-and-declined). A
+    * production stream sizes this to key-cardinality × executor count,
+    * not to a constant.
     */
-  def streamShuffleParts: String = sys.env.getOrElse("GRAFT_STREAM_PARTS", "4")
+  val streamShuffleParts: String = "4"
 
-  /** Whole-stage codegen for the finite micro-batch REPLAYS these run
-    * helpers drive: OFF by default. The incremental planner re-plans every
+  /** Whole-stage codegen is pinned OFF for the finite micro-batch REPLAYS
+    * these run helpers drive. The incremental planner re-plans every
     * trigger and bakes per-batch literals (watermark timestamps, batch
     * metadata) into the generated sources, so janino's source-keyed cache
     * can never hit across triggers or runs — measured on the 14-gate
     * stream block at sf0.1, ~190 fresh compiles per suite run land INSIDE
-    * the timed loop even with every batch plan already seen (steady-state
-    * ROUNDS=2, codegen_compiles_timed), and interpreted evaluation over
-    * the tiny per-trigger batches beats compile+run in every interleaved
-    * A/B pair (12.19→11.35, 14.60→8.70, 10.50→9.26 s). Scope: pinned only
-    * around `start()`/drain inside the run helpers (the stream snapshots
-    * session confs at start), so batch-side rollups and every non-stream
-    * gate keep codegen. A production stream with large per-trigger batches
-    * amortizes the compile and wants the engine default back:
-    * `SPARK_GRAFT_STREAM_WSCG=true`.
+    * the timed loop even with every batch plan already seen, and
+    * interpreted evaluation over the tiny per-trigger batches beats
+    * compile+run in every interleaved A/B pair (12.19→11.35, 14.60→8.70,
+    * 10.50→9.26 s); it also wins with 3M rows in one trigger
+    * (OPTIMIZATION_r19.md, ask 2). Scope: pinned only around
+    * `start()`/drain inside the run helpers (the stream snapshots session
+    * confs at start), so batch-side rollups and every non-stream gate keep
+    * codegen. Expression-level codegen (`codegen.factoryMode`) stays at the
+    * engine default: NO_CODEGEN read sign-inconsistent against it
+    * (OPTIMIZATION_r19.md, ask 3).
     */
-  def streamWholeStageCodegen: Boolean = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_STREAM_WSCG", "false")
-    // parse up front: a typo ('1', 'ture') must fail as a config error at
-    // helper entry, not as an opaque IllegalArgumentException at stream start
-    require(raw == "true" || raw == "false",
-      s"SPARK_GRAFT_STREAM_WSCG must be 'true' or 'false', got '$raw'")
-    raw.toBoolean
-  }
-
-  /** Expression-level codegen factory for the same scope (A/B knob only —
-    * engine default kept): whole-stage OFF still leaves UnsafeProjection/
-    * predicate/ordering codegen on the expression path, and the incremental
-    * planner bakes per-batch literals (watermark timestamps) into THOSE
-    * sources too — at sf0.1 steady state, all 198 janino compiles left
-    * inside the timed loop sit in the stream gates with whole-stage already
-    * pinned off, and NO_CODEGEN (the engine's own interpreted-fallback
-    * path, semantically identical) removes 154 of them. Measured r19,
-    * interleaved ROUNDS=3 on the 13-gate block: FALLBACK 8.17/8.98 s vs
-    * NO_CODEGEN 8.98/8.83 s — sign-inconsistent, the per-trigger expression
-    * compiles are off the critical path, so the default stays FALLBACK
-    * (interpreted projections are also the wrong scale posture).
-    */
-  private def streamFactoryMode: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_FACTORY", "FALLBACK")
-
   private def withStreamCodegen[T](spark: org.apache.spark.sql.SparkSession)
                                   (body: => T): T = {
     val key = "spark.sql.codegen.wholeStage"
-    val fKey = "spark.sql.codegen.factoryMode"
     val prev = spark.conf.get(key)
-    val prevF = spark.conf.get(fKey, "FALLBACK")
     try {
-      spark.conf.set(key, streamWholeStageCodegen.toString)
-      spark.conf.set(fKey, streamFactoryMode)
+      spark.conf.set(key, "false")
       body
-    } finally { spark.conf.set(key, prev); spark.conf.set(fKey, prevF) }
+    } finally spark.conf.set(key, prev)
   }
 
   /** Events schema of the LANDING drops: the landing is written from
@@ -479,7 +453,6 @@ object StreamOps {
     // removed after the run like the engine removes its temp checkpoints
     val ckpt = java.nio.file.Paths.get(graft.Scratch.root,
       s"graft_ckpt_${ProcessHandle.current().pid()}_${name}_${System.nanoTime()}")
-    val t0 = System.nanoTime()
     // Trigger.AvailableNow: the finite-replay trigger — snapshots the
     // available input at start, runs exactly the micro-batches that drain
     // it (plus any watermark-advance no-data batch the session enables),
@@ -487,31 +460,16 @@ object StreamOps {
     // extra idle-confirmation source round per gate; AvailableNow knows
     // its end. Same batches, same state transitions, same sink contents —
     // every gate's oracle hash pins that.
-    // codegen pinned per streamWholeStageCodegen for the start+drain window
-    // only (the stream snapshots session confs at start)
+    // codegen pinned off for the start+drain window only (the stream
+    // snapshots session confs at start)
     val q = withStreamCodegen(df.sparkSession) {
       df.writeStream.outputMode(mode).format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", ckpt.toString).start()
     }
     try {
-      val t1 = System.nanoTime()
       q.awaitTermination()
-      val t2 = System.nanoTime()
       q.stop()
-      val t3 = System.nanoTime()
-      // diagnostic: GRAFT_STREAM_PROGRESS=true dumps per-micro-batch wall
-      // and phase durations to stderr — splits trigger machinery (plan/
-      // state-commit/WAL) from real work when tuning gate overhead — plus
-      // the start/drain/stop wall split of the harness call itself.
-      if (sys.env.getOrElse("GRAFT_STREAM_PROGRESS", "false") == "true") {
-        q.recentProgress.foreach { p =>
-          System.err.println(s"[stream-progress] $name batch=${p.batchId} " +
-            s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-        }
-        System.err.println(f"[stream-progress] $name wall startMs=${(t1 - t0) / 1e6}%.0f " +
-          f"drainMs=${(t2 - t1) / 1e6}%.0f stopMs=${(t3 - t2) / 1e6}%.0f")
-      }
     }
     finally deleteTree(ckpt.toFile)
   }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Generic cold/warm split for ANY registry gate: runs
   * `SparkEntry.queries(name)` twice in one JVM against `dir`, with the
   * standard blocking cleanup between passes — the decomposition that
@@ -35,25 +33,15 @@ object GateTwice {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error(usage))
     val dir = args.lift(1).getOrElse("/tmp/scale100x")
-    val parts = args.lift(2).map(numArg(_, "shuffleParts").toString).getOrElse("32")
+    val parts = args.lift(2).map(numArg(_, "shuffleParts")).getOrElse(32)
     val passes = args.lift(3).map(numArg(_, "passes")).getOrElse(2)
     // resolve the gate BEFORE paying session startup, with the known names
     val gate = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown gate '$name'; known: " +
         graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))
-    // session posture matches ScaleCheck.session (same env overrides) so
-    // the two tools' readings stay comparable in one COVERAGE table
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        sys.env.getOrElse("SPARK_GRAFT_COMMITTER_V", "2"))
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS", "graft.io.NioLocalFileSystem"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // ScaleCheck's session, so the two tools' readings stay comparable in
+    // one COVERAGE table
+    val spark = ScaleCheck.session(parts)
     println(f"[gatetwice] gate=$name dir=$dir parts=$parts heap=${Runtime.getRuntime.maxMemory() / (1L << 30)}%dg")
     for (pass <- 1 to passes) {
       val t0 = System.nanoTime()

@@ -41,27 +41,16 @@ object ScaleCheck {
   /** Plan-compile warm-pass dir for [[run]]'s untimed first pass. */
   private val warmDir = "/root/testdata/sf0.001"
 
-  private def session(parts: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scalecheck")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // driver heap comes from the launcher (build.sbt javaOptions -Xmx /
-      // SPARK_DRIVER_MEM) — a spark.driver.memory builder conf is a no-op
-      // in an already-running local JVM
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      // same local-scratch I/O posture as Bench/Verify (nio-permission
-      // local FS + committer v2): without it the forked-chmod tax inflates
-      // every write/checkpoint phase and the 1x/10x absolutes aren't
-      // comparable to the bench's (growth ratios were unaffected — both
-      // scales paid it equally)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        sys.env.getOrElse("SPARK_GRAFT_COMMITTER_V", "2"))
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS", "graft.io.NioLocalFileSystem"))
-      .getOrCreate()
+  /** The bench posture ([[graft.Posture.benchConfs]]) with the shuffle
+    * partitions sized for the scale under test, so the 1x/10x absolutes
+    * compare with the bench's. The driver heap comes from the launcher
+    * (build.sbt javaOptions -Xmx / SPARK_DRIVER_MEM) — a
+    * spark.driver.memory conf is a no-op in an already-running local JVM. */
+  private[tools] def session(parts: Int): SparkSession = {
+    val s = graft.Posture.session(graft.Posture.cpus(32), graft.Posture.benchConfs ++ Seq(
+      "spark.app.name" -> "graft-scalecheck",
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.session.timeZone" -> "UTC"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

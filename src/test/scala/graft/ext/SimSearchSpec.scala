@@ -60,8 +60,8 @@ class SimSearchSpec extends AnyFunSuite with SparkSpec {
     // testdata embeddings are near-uniform (true top-5 cosines 0.26-0.49),
     // the hardest case for sign-LSH: a cos≈0.4 neighbor disagrees on ~37%
     // of hyperplanes, so recall decays fast with plane count. Measured
-    // parameter-recall curve (graft.tools.AnnSweepProbe, recall@5 at
-    // sf0.001 / sf0.01 / sf0.1):
+    // parameter-recall curve (round-12 sweep, COVERAGE "Rounds 10–13 change
+    // notes"; recall@5 at sf0.001 / sf0.01 / sf0.1):
     //   planes=2 → 0.82 / 0.88 / 0.84
     //   planes=3 → 0.54 / 0.74 / 0.68   <- this config
     //   planes=4 → 0.36 / 0.54 / 0.46
@@ -82,8 +82,9 @@ class SimSearchSpec extends AnyFunSuite with SparkSpec {
       k = 5, nlist = 16, nprobe = 8)
       .select("probe_id", "nbr_id").as[(Long, Long)].collect().toSet
     val recall = ivf.intersect(exact).size.toDouble / exact.size
-    // Measured (nlist, nprobe) → recall@5 curve (graft.tools.AnnSweepProbe,
-    // sf0.001 / sf0.01 / sf0.1) on the near-uniform testdata:
+    // Measured (nlist, nprobe) → recall@5 curve (round-12 sweep, COVERAGE
+    // "Rounds 10–13 change notes"; sf0.001 / sf0.01 / sf0.1) on the
+    // near-uniform testdata:
     //   (16, 4)  → 0.54 / 0.50 / 0.54
     //   (16, 8)  → 0.72 / 0.72 / 0.80   <- this config
     //   (32, 16) → 0.80 / 0.74 / 0.84

@@ -6,8 +6,9 @@ object Verify {
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
     * — a tab or CR in builder-authored SQL would otherwise make the
     * driver's json.load fail and silently zero the round's correctness.
-    * Shared with [[graft.tools.DumpOracle]] so the gauge's oracle dump
-    * can never drift from the driver-facing one. */
+    * Shared with [[graft.tools.DumpOracle]] so the dump that
+    * `perfbench/oracle_counts.py` reads can never drift from the
+    * driver-facing one. */
   private[graft] def jsonQuote(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
@@ -21,7 +22,7 @@ object Verify {
   /** The ONE renderer of an oracle_sql.json payload, shared with
     * [[graft.tools.DumpOracle]]. Hoisting only the escape left the
     * object-assembly line duplicated in both producers, where a format
-    * tweak to one would silently diverge the gauge's dump from the
+    * tweak to one would silently diverge DumpOracle's dump from the
     * driver-facing one — the whole map→JSON step lives here instead. */
   private[graft] def oracleJson(entries: Map[String, String]): String =
     entries.map { case (k, v) => s"${jsonQuote(k)}: ${jsonQuote(v)}" }

@@ -123,8 +123,8 @@ object ParquetIO {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .saveAsTable(s"`$db`.`$table`")
 
-  /** Local recursive delete for scratch/warm-up table directories — the
-    * one shared copy (Bench teardown, bucketed-gate pre-clean).
+  /** Local recursive delete for scratch table directories — the one shared
+    * copy (bucketed-gate pre-clean, scratch-table teardown).
     */
   def deleteRecursively(f: java.io.File): Unit = {
     val children = f.listFiles()

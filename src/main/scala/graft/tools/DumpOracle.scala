@@ -5,10 +5,10 @@ import java.nio.file.{Files, Paths}
 /** Dump the FULL `SparkEntry.oracleSql` map as `<outDir>/oracle_sql.json`
   * without running any query (no Spark session — the map is static).
   *
-  * Exists for the paired-bench weather gauge: `tools/oracletime.py` needs
-  * the oracle dump, and before this tool the only producer was a full
-  * `graft.Verify` run (minutes) or a stale dump from an earlier round —
-  * a subset Verify filters the dump to the subset. One JVM start, <1 s.
+  * Exists for `perfbench/oracle_counts.py`, which runs the oracle SQL in
+  * DuckDB to regenerate the benchmark's expected row counts; without this
+  * tool the only producer is a full `graft.Verify` run (minutes), and a
+  * subset Verify filters the dump to the subset. One JVM start, <1 s.
   *
   * usage: DumpOracle <outDir>
   */

@@ -147,7 +147,7 @@ object ScaleCheck {
     picked.foreach { case (name, fn) =>
       try fn(spark, warmDir).queryExecution.toRdd.count(): Unit
       catch { case scala.util.control.NonFatal(_) => () }
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.Bench.unpersistAll(spark, blocking = false)
     }
     val results = picked.map { case (name, fn) =>
       val t0 = System.nanoTime()
@@ -162,7 +162,7 @@ object ScaleCheck {
       // in-sequence pagerank 3x vs the same query isolated (34.4 s vs
       // 11.8 s, measured round 12); the timed number must be the family's
       // own cost, as Bench's per-query unpersist established suite-wide
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      graft.Bench.unpersistAll(spark, blocking = true)
       System.gc()
       System.err.println(f"[scalecheck] $name%-24s ${sec}%8.2f s  $rows rows ${err.getOrElse("")}")
       (name, sec, rows, err)

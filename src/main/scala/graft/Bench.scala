@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  private def jsonStr(s: String): String = {
+  /** `s` as a JSON string literal: quotes, backslashes and control
+    * characters escaped. The program's one JSON escaper. */
+  private[graft] def jsonStr(s: String): String = {
     val sb = new StringBuilder("\"")
     s.foreach {
       case '\\' => sb.append("\\\\")

@@ -72,8 +72,10 @@ object Posture {
     // family costs 21.0 s at 32 vs 17.1 (16) / 15.4-17.6 (8) with no
     // consistent loser at 16 (COVERAGE "ScaleCheck: measured 10× scaling",
     // Measured-and-TAKEN). A 100 TB deployment sizes this to data-scale (and
-    // keeps AQE on); gates with known-tiny merge stages additionally pin
-    // their own (pagerank 8, HLL 8, streams 4).
+    // keeps AQE on). Narrower counts are scoped with [[withConfs]]: the
+    // graph_pagerank gate sizes its own from the data (8 at sf0.1), the two
+    // HLL gates and lm_bigram_score pin 8, and every stream runs at
+    // `StreamOps.streamShuffleParts` (4), pinned by the stream run helpers.
     "spark.sql.shuffle.partitions" -> env("SPARK_GRAFT_SHUFFLE_PARTS").getOrElse("16"),
     // state-store maintenance (snapshot/cleanup of loaded providers) defaults
     // to every 60s — with six stream gates spread across the suite it fires
@@ -87,10 +89,11 @@ object Posture {
     // watermarks with idle sources — every finite replay here is a
     // drain-and-terminate AvailableNow run, so they are a pure extra trigger
     // per gate (measured on the 6 stream gates: 24.7 → 17.8 s together with
-    // minBatchesToRetain). The one gate whose Append-mode emission NEEDS the
-    // trailing no-data batch (stream_session_windows) pins the conf back on
-    // around its own run; StreamPostureSpec checks every stream gate returns
-    // the same rows under these confs as under engine defaults.
+    // minBatchesToRetain). The gates whose Append-mode emission NEEDS the
+    // trailing no-data batch (stream_session_windows, stream_session_tws,
+    // stream_stream_left_outer) pin the conf back on around their own runs;
+    // StreamPostureSpec checks every stream gate returns the same rows under
+    // these confs as under engine defaults.
     "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
     // 1 (default 100): keeps only the latest committed batch's offset/commit/
     // state history — exactly what a restart needs (stream_sink_parquet's
@@ -182,5 +185,24 @@ object Posture {
     val b = SparkSession.builder().master(s"local[$cpus]")
     confs.foreach { case (k, v) => b.config(k, v) }
     b.getOrCreate()
+  }
+
+  /** Run `body` with `pins` set on the session conf, in order, then put
+    * every pinned key back: its old value, or unset if it had none — also
+    * when `body` throws. The one place the program changes a session conf
+    * after start-up.
+    *
+    * A conf binds when a plan is built, when a stream starts (the stream
+    * clones the session's conf) or when an action runs, so a pin reaches
+    * only the work done inside the scope: a gate that wants a pin on its
+    * result must plan or materialize that result inside it. The session
+    * conf is shared, so two scopes on one session must not overlap in time.
+    */
+  def withConfs[T](spark: SparkSession, pins: (String, String)*)(body: => T): T = {
+    val saved = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      pins.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Posture.withConfs
 import graft.Tables
 import graft.ops._
 
@@ -79,20 +80,13 @@ object CoreQueries {
     * `executedPlan` caches it on the Dataset's QueryExecution — later
     * materialization by Bench reuses it), run `check` against the plan
     * string, then restore every conf. */
-  private def withPinnedPlan(spark: SparkSession, confs: Map[String, String])
-                            (mk: => DataFrame)(check: String => Unit): DataFrame = {
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+  private def withPinnedPlan(spark: SparkSession, confs: (String, String)*)
+                            (mk: => DataFrame)(check: String => Unit): DataFrame =
+    withConfs(spark, confs: _*) {
       val df = mk
-      val plan = df.queryExecution.executedPlan.toString
-      check(plan)
+      check(df.queryExecution.executedPlan.toString)
       df
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
-  }
 
   // shared by rank_top_per_group (window form) and rank_top_per_group_agg
   // (bounded-heap aggregate form): both must produce the identical rows
@@ -397,9 +391,9 @@ object CoreQueries {
              |GROUP BY 1""".stripMargin),
       (spark, dir) => {
         val (liT, oT) = ensureBucketedPair(spark, dir)
-        withPinnedPlan(spark, Map(
+        withPinnedPlan(spark,
           "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")) {
+          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
           spark.table(liT).join(spark.table(oT), "l_orderkey")
             .groupBy((col("l_orderkey") % 16).as("grp"))
             .agg(count(lit(1)).as("n"),
@@ -434,11 +428,11 @@ object CoreQueries {
              |WHERE o_orderpriority = '1-URGENT'
              |GROUP BY 1""".stripMargin),
       (spark, dir) =>
-        withPinnedPlan(spark, Map(
+        withPinnedPlan(spark,
           "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
           "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
           "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")) {
+          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
           val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_quantity", "l_returnflag")
           val sel = Tables.orders(spark, dir)
             .filter(col("o_orderpriority") === "1-URGENT")
@@ -1363,7 +1357,7 @@ object CoreQueries {
         // scan-side parallelism is unaffected, the win is task overhead on
         // the tiny merge stages); pin requires materializing inside it.
         val li = Tables.lineitem(spark, dir)
-        GateConf.withShuffleParts(spark, "8") {
+        withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
           li.groupBy("l_returnflag")
             .agg(count_distinct(col("l_partkey")).as("n_distinct"),
               approx_count_distinct(col("l_partkey"), 0.05)
@@ -1371,6 +1365,7 @@ object CoreQueries {
             .filter(abs(col("approx_l_partkey_count") - col("n_distinct"))
               <= col("n_distinct") * 0.15)
             .select("l_returnflag", "n_distinct")
+            .localCheckpoint()
         }
       }),
 
@@ -1414,7 +1409,7 @@ object CoreQueries {
         // same parts=8 pin as hll_approx_distinct (see there): both
         // legs end in few-key merge stages where 32 tasks is pure overhead
         val li = Tables.lineitem(spark, dir)
-        GateConf.withShuffleParts(spark, "8") {
+        withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
           val merged = AggOps.hllMergeEstimate(
             AggOps.hllSketches(li, Seq("l_returnflag", "l_linestatus"), "l_partkey"),
             Seq("l_returnflag"))
@@ -1424,6 +1419,7 @@ object CoreQueries {
             .filter(abs(col("approx_distinct") - col("n_distinct"))
               <= col("n_distinct") * 0.15)
             .select("l_returnflag", "n_distinct")
+            .localCheckpoint()
         }
       }),
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.Posture.withConfs
 import graft.Tables
 import graft.ext._
 import graft.ops.{AggOps, Skew}
@@ -25,6 +26,13 @@ object ExtQueries {
   val MinhashGateThreshold = 0.4
   val MinhashGateFastHashes = 64
   val MinhashGateFastBands = 32
+
+  // Stream-gate pins the run helpers (StreamOps.streamPins) cannot know:
+  // no-data batches back on for the Append-mode gates that flush in a
+  // trailing no-data batch, and RocksDB, which transformWithState requires.
+  private val noDataBatchesOn = "spark.sql.streaming.noDataMicroBatches.enabled" -> "true"
+  private val rocksDbState = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   // DuckDB-side token array, identical to TextOps.tokens semantics.
   private val duckTokens = "regexp_split_to_array(trim(text), '\\s+')"
@@ -293,15 +301,13 @@ object ExtQueries {
         // shuffle partitions sized to the relation widths for the EAGER
         // probability-table materialization inside bigramLmScores (its
         // aggregates are vocabulary-sized — thousands of rows drown in
-        // 32-way task launches; same reasoning as graph_pagerank) —
-        // restored after
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        try {
-          spark.conf.set("spark.sql.shuffle.partitions", "8")
+        // the session's 16-way task launches; same reasoning as
+        // graph_pagerank)
+        withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
           Pack.bigramLmScores(Tables.documents(spark, dir), "doc_id", "text")
             .withColumnsRenamed(Map("id" -> "doc_id"))
             .select("doc_id", "n_bigrams", "p_sum_scaled", "lm_avg_scaled")
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+        }
       }),
 
     // DSIR hashed-n-gram importance scores (integer-exact scaled variant):
@@ -1196,19 +1202,11 @@ object ExtQueries {
         import org.apache.spark.sql.streaming.OutputMode
         import graft.streaming.StreamOps
         val landing = StreamOps.eventsLanding(spark, dir)
-        // state-store partitions sized to the stream (shuffle.partitions is
-        // frozen into the state store at query start; 32 would mean 32 state
-        // tasks per micro-batch for a 10k-row stream) — restored after
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        val out = try {
-          spark.conf.set("spark.sql.shuffle.partitions", graft.streaming.StreamOps.streamShuffleParts)
-          val stream = StreamOps.readEventStream(spark, landing, maxFilesPerTrigger = Some(1))
-          StreamOps.runToMemory(
-            StreamOps.windowedCounts(stream, widthSeconds = 3600, slideSeconds = 3600),
-            "stream_tumbling_counts_sink", OutputMode.Complete())
-          spark.table("stream_tumbling_counts_sink")
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        out
+        val stream = StreamOps.readEventStream(spark, landing, maxFilesPerTrigger = Some(1))
+        StreamOps.runToMemory(
+          StreamOps.windowedCounts(stream, widthSeconds = 3600, slideSeconds = 3600),
+          "stream_tumbling_counts_sink", OutputMode.Complete())
+        spark.table("stream_tumbling_counts_sink")
           .select(col("window_start_s"), col("event_type"), col("n"),
             round(col("value_sum"), 4).as("value_sum"))
       }),
@@ -1226,21 +1224,13 @@ object ExtQueries {
         import org.apache.spark.sql.streaming.OutputMode
         import graft.streaming.StreamOps
         val landing = StreamOps.eventsLandingWithSentinel(spark, dir)
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        val prevNoData = spark.conf.get(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-        val out = try {
-          // 4 (round-7 re-measurement under honest toRdd materialization:
-          // 8 → 2.3 s, 4 → 2.0 s, 2 → 2.0 s, 1 → 2.4 s — the earlier "8 is
-          // 15% faster" read didn't survive; task overhead wins at 8+)
-          spark.conf.set("spark.sql.shuffle.partitions", graft.streaming.StreamOps.streamShuffleParts)
-          // This gate's Append-mode emission NEEDS one trailing no-data
-          // micro-batch: the sentinel's trigger only UPDATES the watermark;
-          // closed sessions flush in the batch AFTER it, which carries no
-          // data. Pin the conf on here so a session tuned for the other
-          // finite replays (which disable no-data batches — they only pay
-          // for them) cannot truncate this gate's output.
-          spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+        // This gate's Append-mode emission NEEDS one trailing no-data
+        // micro-batch: the sentinel's trigger only UPDATES the watermark;
+        // closed sessions flush in the batch AFTER it, which carries no
+        // data. Pin the conf on here so a session tuned for the other
+        // finite replays (which disable no-data batches — they only pay
+        // for them) cannot truncate this gate's output.
+        withConfs(spark, noDataBatchesOn) {
           // ALL drops (both base files + the sentinel) in ONE data trigger:
           // the watermark is computed at END-of-batch from the max event
           // time seen — sentinel included — so every real session is
@@ -1254,13 +1244,8 @@ object ExtQueries {
           val stream = StreamOps.readEventStream(spark, landing)
           StreamOps.runToMemory(StreamOps.sessionCounts(stream, gapSeconds = 1800),
             "stream_session_sink", OutputMode.Append())
-          spark.table("stream_session_sink")
-        } finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-          spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
         }
-        out
+        spark.table("stream_session_sink")
           .filter(col("user_id") =!= StreamOps.SentinelUser)
           .select(col("user_id"), col("n_events"),
             round(col("value_sum"), 4).as("value_sum"), col("start_s"), col("end_s"))
@@ -1278,35 +1263,15 @@ object ExtQueries {
         import org.apache.spark.sql.streaming.OutputMode
         import graft.streaming.StreamOps
         val landing = StreamOps.eventsLandingWithSentinel(spark, dir)
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        val prevNoData = spark.conf.get(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-        val prevProv = spark.conf.getOption(
-          "spark.sql.streaming.stateStore.providerClass")
-        val out = try {
-          spark.conf.set("spark.sql.shuffle.partitions", graft.streaming.StreamOps.streamShuffleParts)
-          // timers fire in the trailing no-data batch after the sentinel
-          // advances the watermark — same flush shape as session_window
-          spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        // timers fire in the trailing no-data batch after the sentinel
+        // advances the watermark — same flush shape as session_window
+        withConfs(spark, noDataBatchesOn, rocksDbState) {
           val stream = StreamOps.readEventStream(spark, landing)
           StreamOps.runToMemory(
             StreamOps.sessionizeTWS(spark, stream, gapSeconds = 1800),
             "stream_session_tws_sink", OutputMode.Append())
-          spark.table("stream_session_tws_sink")
-        } finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-          spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-          prevProv match {
-            case Some(p) => spark.conf.set(
-              "spark.sql.streaming.stateStore.providerClass", p)
-            case None => spark.conf.unset(
-              "spark.sql.streaming.stateStore.providerClass")
-          }
         }
-        out
+        spark.table("stream_session_tws_sink")
           .filter(col("user_id") =!= StreamOps.SentinelUser)
           .select(col("user_id"), col("n_events"),
             round(col("value_sum"), 4).as("value_sum"), col("start_s"), col("end_s"))
@@ -1344,17 +1309,11 @@ object ExtQueries {
         Tables.orders(spark, dir)
           .select(col("o_orderkey"), col("o_totalprice").as("price"))
           .coalesce(4).write.mode("overwrite").parquet(snap)
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        try {
-          // per-trigger work is a broadcast anti-join over a small snapshot:
-          // 32 shuffle partitions are pure task overhead here
-          spark.conf.set("spark.sql.shuffle.partitions", graft.streaming.StreamOps.streamShuffleParts)
-          val changes = spark.readStream
-            .schema("o_orderkey BIGINT, price DOUBLE, op STRING")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-          StreamOps.applyChangesStream(changes, snap, s"$base/ckpt", "o_orderkey", "op")
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+        val changes = spark.readStream
+          .schema("o_orderkey BIGINT, price DOUBLE, op STRING")
+          .option("maxFilesPerTrigger", 1)
+          .parquet(landing)
+        StreamOps.applyChangesStream(changes, snap, s"$base/ckpt", "o_orderkey", "op")
         spark.read.schema("o_orderkey BIGINT, price DOUBLE").parquet(snap)
           .select(col("o_orderkey"), round(col("price"), 2).as("price"))
       }),
@@ -1378,18 +1337,12 @@ object ExtQueries {
         val landing = StreamOps.eventsLanding(spark, dir)
         val base = s"${StreamOps.tmpRoot}/graft_sinkpq_" +
           s"${ProcessHandle.current().pid()}_${graft.Scratch.pathTag(dir)}"
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        try {
-          // row-level transform — no shuffle; small partition count keeps
-          // the per-trigger sink commit from writing 32 near-empty files
-          spark.conf.set("spark.sql.shuffle.partitions", graft.streaming.StreamOps.streamShuffleParts)
-          val stream = StreamOps.readEventStream(spark, landing,
-              maxFilesPerTrigger = Some(1))
-            .filter(col("user_id") % 2 === 0)
-            .select(col("event_id"), col("user_id"), col("event_type"),
-              unix_timestamp(col("ts")).as("ts_s"), col("value"))
-          StreamOps.runToParquet(stream, s"$base/out", s"$base/ckpt")
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+        val stream = StreamOps.readEventStream(spark, landing,
+            maxFilesPerTrigger = Some(1))
+          .filter(col("user_id") % 2 === 0)
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            unix_timestamp(col("ts")).as("ts_s"), col("value"))
+        StreamOps.runToParquet(stream, s"$base/out", s"$base/ckpt")
         spark.read.parquet(s"$base/out")
           .select("event_id", "user_id", "event_type", "ts_s", "value")
       }),
@@ -1401,21 +1354,17 @@ object ExtQueries {
         import org.apache.spark.sql.streaming.OutputMode
         import graft.streaming.StreamOps
         val landing = StreamOps.eventsLandingWithDuplicates(spark, dir)
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        val out = try {
-          spark.conf.set("spark.sql.shuffle.partitions", graft.streaming.StreamOps.streamShuffleParts)
-          // 2 files per trigger: originals land in trigger 1, the two dup
-          // copies (newer mtimes) in trigger 2 — duplicates still hit
-          // PRE-EXISTING state, which is what the gate must prove
-          val stream = StreamOps.readEventStream(spark, landing, maxFilesPerTrigger = Some(2))
-          StreamOps.runToMemory(
-            StreamOps.dedupByKey(stream, "event_id")
-              .groupBy("event_type")
-              .agg(count(lit(1)).as("n"), sum(col("value")).as("value_sum")),
-            "stream_dedup_sink", OutputMode.Complete())
-          spark.table("stream_dedup_sink")
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        out.select(col("event_type"), col("n"), round(col("value_sum"), 4).as("value_sum"))
+        // 2 files per trigger: originals land in trigger 1, the two dup
+        // copies (newer mtimes) in trigger 2 — duplicates still hit
+        // PRE-EXISTING state, which is what the gate must prove
+        val stream = StreamOps.readEventStream(spark, landing, maxFilesPerTrigger = Some(2))
+        StreamOps.runToMemory(
+          StreamOps.dedupByKey(stream, "event_id")
+            .groupBy("event_type")
+            .agg(count(lit(1)).as("n"), sum(col("value")).as("value_sum")),
+          "stream_dedup_sink", OutputMode.Complete())
+        spark.table("stream_dedup_sink")
+          .select(col("event_type"), col("n"), round(col("value_sum"), 4).as("value_sum"))
       }),
 
     // BOUNDED-STATE streaming dedup under the gate: the production form —
@@ -1433,18 +1382,14 @@ object ExtQueries {
         import org.apache.spark.sql.streaming.OutputMode
         import graft.streaming.StreamOps
         val landing = StreamOps.eventsLandingWithDuplicates(spark, dir)
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        val out = try {
-          spark.conf.set("spark.sql.shuffle.partitions", graft.streaming.StreamOps.streamShuffleParts)
-          val stream = StreamOps.readEventStream(spark, landing, maxFilesPerTrigger = Some(2))
-          StreamOps.runToMemory(
-            StreamOps.dedupByKeyWithinWatermark(stream, "ts", "35 days", "event_id")
-              .groupBy("event_type")
-              .agg(count(lit(1)).as("n"), sum(col("value")).as("value_sum")),
-            "stream_dedup_wm_sink", OutputMode.Complete())
-          spark.table("stream_dedup_wm_sink")
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        out.select(col("event_type"), col("n"), round(col("value_sum"), 4).as("value_sum"))
+        val stream = StreamOps.readEventStream(spark, landing, maxFilesPerTrigger = Some(2))
+        StreamOps.runToMemory(
+          StreamOps.dedupByKeyWithinWatermark(stream, "ts", "35 days", "event_id")
+            .groupBy("event_type")
+            .agg(count(lit(1)).as("n"), sum(col("value")).as("value_sum")),
+          "stream_dedup_wm_sink", OutputMode.Complete())
+        spark.table("stream_dedup_wm_sink")
+          .select(col("event_type"), col("n"), round(col("value_sum"), 4).as("value_sum"))
       }),
 
     // mapGroupsWithState under the gate: per-user running totals emitted
@@ -1458,17 +1403,15 @@ object ExtQueries {
         import org.apache.spark.sql.streaming.OutputMode
         import graft.streaming.StreamOps
         val landing = StreamOps.eventsLanding(spark, dir)
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        val out = try {
-          spark.conf.set("spark.sql.shuffle.partitions", graft.streaming.StreamOps.streamShuffleParts)
-          val stream = StreamOps.readEventStream(spark, landing, maxFilesPerTrigger = Some(1))
-          StreamOps.runToMemory(StreamOps.runningUserStats(spark, stream),
-            "stream_user_stats_sink", OutputMode.Update())
-          // Update mode re-emits a user's row per touching batch; final
-          // state = the max n_events. Build AND physically plan the
-          // rollup inside the conf scope (executedPlan is a forced lazy
-          // val) so its window exchange keeps the stream-sized partition
-          // count instead of re-inheriting the session's scan-scale one.
+        val stream = StreamOps.readEventStream(spark, landing, maxFilesPerTrigger = Some(1))
+        StreamOps.runToMemory(StreamOps.runningUserStats(spark, stream),
+          "stream_user_stats_sink", OutputMode.Update())
+        // Update mode re-emits a user's row per touching batch; final
+        // state = the max n_events. Build AND physically plan the rollup
+        // inside a stream-sized partition scope (executedPlan is a forced
+        // lazy val) so its window exchange keeps the stream's partition
+        // count instead of re-inheriting the session's scan-scale one.
+        withConfs(spark, "spark.sql.shuffle.partitions" -> StreamOps.streamShuffleParts) {
           val res = graft.ops.AggOps.dedupByKeyOrdered(
               spark.table("stream_user_stats_sink"), Seq("user_id"),
               Seq(col("n_events").desc))
@@ -1476,8 +1419,7 @@ object ExtQueries {
               round(col("value_sum"), 4).as("value_sum"))
           res.queryExecution.executedPlan
           res
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        out
+        }
       }),
 
     // The SAME running-stats state machine on Spark 4's transformWithState
@@ -1492,17 +1434,13 @@ object ExtQueries {
         import org.apache.spark.sql.streaming.OutputMode
         import graft.streaming.StreamOps
         val landing = StreamOps.eventsLanding(spark, dir)
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        val prevProv = spark.conf.getOption(
-          "spark.sql.streaming.stateStore.providerClass")
-        val out = try {
-          spark.conf.set("spark.sql.shuffle.partitions", graft.streaming.StreamOps.streamShuffleParts)
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        withConfs(spark, rocksDbState) {
           val stream = StreamOps.readEventStream(spark, landing, maxFilesPerTrigger = Some(1))
           StreamOps.runToMemory(StreamOps.runningUserStatsTWS(spark, stream),
             "stream_user_stats_tws_sink", OutputMode.Update())
-          // rollup planned inside the conf scope — see stream_user_stats
+        }
+        // rollup planned inside a stream-sized scope — see stream_user_stats
+        withConfs(spark, "spark.sql.shuffle.partitions" -> StreamOps.streamShuffleParts) {
           val res = graft.ops.AggOps.dedupByKeyOrdered(
               spark.table("stream_user_stats_tws_sink"), Seq("user_id"),
               Seq(col("n_events").desc))
@@ -1510,16 +1448,7 @@ object ExtQueries {
               round(col("value_sum"), 4).as("value_sum"))
           res.queryExecution.executedPlan
           res
-        } finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-          prevProv match {
-            case Some(p) => spark.conf.set(
-              "spark.sql.streaming.stateStore.providerClass", p)
-            case None => spark.conf.unset(
-              "spark.sql.streaming.stateStore.providerClass")
-          }
         }
-        out
       }),
 
     // MapState on transformWithState — the third state shape (ValueState:
@@ -1532,35 +1461,22 @@ object ExtQueries {
         import org.apache.spark.sql.streaming.OutputMode
         import graft.streaming.StreamOps
         val landing = StreamOps.eventsLanding(spark, dir)
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        val prevProv = spark.conf.getOption(
-          "spark.sql.streaming.stateStore.providerClass")
-        val out = try {
-          spark.conf.set("spark.sql.shuffle.partitions", graft.streaming.StreamOps.streamShuffleParts)
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        withConfs(spark, rocksDbState) {
           val stream = StreamOps.readEventStream(spark, landing, maxFilesPerTrigger = Some(1))
           StreamOps.runToMemory(StreamOps.typeCountsTWS(spark, stream),
             "stream_type_counts_tws_sink", OutputMode.Update())
-          // Update mode re-emits a (user,type) row per touching batch;
-          // final state = the max count (n strictly increases). Planned
-          // inside the conf scope — see stream_user_stats.
+        }
+        // Update mode re-emits a (user,type) row per touching batch; final
+        // state = the max count (n strictly increases). Planned inside a
+        // stream-sized scope — see stream_user_stats.
+        withConfs(spark, "spark.sql.shuffle.partitions" -> StreamOps.streamShuffleParts) {
           val res = graft.ops.AggOps.dedupByKeyOrdered(
               spark.table("stream_type_counts_tws_sink"),
               Seq("user_id", "event_type"), Seq(col("n").desc))
             .select("user_id", "event_type", "n")
           res.queryExecution.executedPlan
           res
-        } finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-          prevProv match {
-            case Some(p) => spark.conf.set(
-              "spark.sql.streaming.stateStore.providerClass", p)
-            case None => spark.conf.unset(
-              "spark.sql.streaming.stateStore.providerClass")
-          }
         }
-        out
       }),
 
     // Stream-STATIC join: every micro-batch enriches against a broadcast
@@ -1597,33 +1513,29 @@ object ExtQueries {
           f"(max drift $gridDrift%.2e) - the scaled-integer stream sum is " +
           f"unsound for this corpus; regenerated testdata?")
         val landing = StreamOps.eventsLanding(spark, dir)
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        val out = try {
-          spark.conf.set("spark.sql.shuffle.partitions", graft.streaming.StreamOps.streamShuffleParts)
-          val stream = StreamOps.readEventStream(spark, landing)
-          val dim = Tables.customer(spark, dir)
-            .select("c_custkey", "c_mktsegment")
-          // enrich AND aggregate inside the streaming query (Complete
-          // mode): the production shape — nobody sinks raw joined rows —
-          // and the sink then holds segment-count rows, not the full
-          // 100 k-row join output whose external-row re-conversion and
-          // 32-partition batch re-aggregation used to cost ~0.4 s more
-          // than the stream itself
-          // sum a SCALED INTEGER in the stream (value rides a 2-decimal
-          // grid): Complete mode re-accumulates state across micro-batches
-          // in a different association order than the oracle's single batch
-          // — long addition is order-free, so the gate's float margin does
-          // not depend on trigger count (the round-before-sum discipline)
-          StreamOps.runToMemory(
-            StreamOps.enrichWithDim(stream, dim, "user_id", "c_custkey")
-              .groupBy("c_mktsegment")
-              .agg(count(lit(1)).as("n_events"),
-                sum(round(col("value") * 100).cast("long")).as("value_sum_c")),
-            "stream_static_enrich_sink", OutputMode.Complete())
-          spark.table("stream_static_enrich_sink")
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        out.select(col("c_mktsegment"), col("n_events"),
-          round(col("value_sum_c") / 100.0, 4).as("value_sum"))
+        val stream = StreamOps.readEventStream(spark, landing)
+        val dim = Tables.customer(spark, dir)
+          .select("c_custkey", "c_mktsegment")
+        // enrich AND aggregate inside the streaming query (Complete
+        // mode): the production shape — nobody sinks raw joined rows —
+        // and the sink then holds segment-count rows, not the full
+        // 100 k-row join output whose external-row re-conversion and
+        // 32-partition batch re-aggregation used to cost ~0.4 s more
+        // than the stream itself
+        // sum a SCALED INTEGER in the stream (value rides a 2-decimal
+        // grid): Complete mode re-accumulates state across micro-batches
+        // in a different association order than the oracle's single batch
+        // — long addition is order-free, so the gate's float margin does
+        // not depend on trigger count (the round-before-sum discipline)
+        StreamOps.runToMemory(
+          StreamOps.enrichWithDim(stream, dim, "user_id", "c_custkey")
+            .groupBy("c_mktsegment")
+            .agg(count(lit(1)).as("n_events"),
+              sum(round(col("value") * 100).cast("long")).as("value_sum_c")),
+          "stream_static_enrich_sink", OutputMode.Complete())
+        spark.table("stream_static_enrich_sink")
+          .select(col("c_mktsegment"), col("n_events"),
+            round(col("value_sum_c") / 100.0, 4).as("value_sum"))
       }),
 
     // ----- multimodal plumbing ----------------------------------------------
@@ -2461,21 +2373,19 @@ object ExtQueries {
         // no extra Spark job inside the timed body): sf0.1 → 8 (the
         // historical pin, so the 1×/10× growth series stays comparable),
         // 30× → 24, 100× → capped at one task wave (the session's core
-        // count — 32 on the bench box). Restored after. KNIFE-EDGE to
+        // count — 32 on the bench box). KNIFE-EDGE to
         // know about when reading a shifted series: the 10× point holds
         // the pin of 8 by a ~4 % byte margin only (sf0.1 lineitem
         // ≈ 10.8 MB → 10× tile ≈ 108 MB vs the 112.5 MB 9-part boundary);
         // a testdata drop with fatter compression crosses it silently, so
         // attribute any 10× pagerank shift to the partition bucket FIRST
         // (ScaleCheck's timings expose it as a step, not noise).
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        try {
-          val liPath = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-          val liBytes = liPath.getFileSystem(spark.sessionState.newHadoopConf())
-            .getContentSummary(liPath).getLength
-          val oneWave = spark.sparkContext.defaultParallelism.toLong
-          spark.conf.set("spark.sql.shuffle.partitions",
-            math.max(8L, math.min(oneWave, liBytes / 12500000L)).toString)
+        val liPath = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
+        val liBytes = liPath.getFileSystem(spark.sessionState.newHadoopConf())
+          .getContentSummary(liPath).getLength
+        val oneWave = spark.sparkContext.defaultParallelism.toLong
+        withConfs(spark, "spark.sql.shuffle.partitions" ->
+            math.max(8L, math.min(oneWave, liBytes / 12500000L)).toString) {
           val ord = Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
           // one tiny driver-side agg (single column of orders) — the cost
           // of the tiled-safe offset, paid identically by the oracle's
@@ -2504,7 +2414,7 @@ object ExtQueries {
           graft.ext.PageRank.pageRank(fwd, iterations = 5, noDangling = true,
               symmetricHalf = true)
             .select(col("node"), round(col("rank"), 6).as("rank"))
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+        }
       }),
 
     // ----- technical indicators (the reference's stock-analytics domain) -----
@@ -2732,25 +2642,20 @@ object ExtQueries {
         import org.apache.spark.sql.streaming.OutputMode
         import graft.streaming.StreamOps
         val landing = StreamOps.eventsLanding(spark, dir)
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        val out = try {
-          spark.conf.set("spark.sql.shuffle.partitions", graft.streaming.StreamOps.streamShuffleParts)
-          // asymmetric triggers: the LEFT side drips one file per trigger
-          // (2 micro-batches), the right ingests everything in its first —
-          // left batch-2 rows must still match right rows buffered from an
-          // EARLIER trigger, so the cross-micro-batch state path fires with
-          // half the trigger count (micro-batch fixed cost dominates this
-          // finite replay)
-          val left = StreamOps.readEventStream(spark, landing, maxFilesPerTrigger = Some(1))
-            .filter(col("user_id") % 4 === 0)
-          val right = StreamOps.readEventStream(spark, landing, maxFilesPerTrigger = Some(2))
-            .filter(col("user_id") % 4 === 0)
-          StreamOps.runToMemory(
-            StreamOps.pairsWithin(left, right, withinSeconds = 300, watermark = "30 days"),
-            "stream_stream_join_sink", OutputMode.Append())
-          spark.table("stream_stream_join_sink")
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        out.select("user_id", "a_id", "b_id")
+        // asymmetric triggers: the LEFT side drips one file per trigger
+        // (2 micro-batches), the right ingests everything in its first —
+        // left batch-2 rows must still match right rows buffered from an
+        // EARLIER trigger, so the cross-micro-batch state path fires with
+        // half the trigger count (micro-batch fixed cost dominates this
+        // finite replay)
+        val left = StreamOps.readEventStream(spark, landing, maxFilesPerTrigger = Some(1))
+          .filter(col("user_id") % 4 === 0)
+        val right = StreamOps.readEventStream(spark, landing, maxFilesPerTrigger = Some(2))
+          .filter(col("user_id") % 4 === 0)
+        StreamOps.runToMemory(
+          StreamOps.pairsWithin(left, right, withinSeconds = 300, watermark = "30 days"),
+          "stream_stream_join_sink", OutputMode.Append())
+        spark.table("stream_stream_join_sink").select("user_id", "a_id", "b_id")
       }),
 
     // Stream-stream LEFT OUTER join under the gate: the outer form needs the
@@ -2774,14 +2679,9 @@ object ExtQueries {
         import org.apache.spark.sql.streaming.OutputMode
         import graft.streaming.StreamOps
         val landing = StreamOps.eventsLandingWithSentinel(spark, dir)
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        val prevNoData = spark.conf.get(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-        val out = try {
-          spark.conf.set("spark.sql.shuffle.partitions", graft.streaming.StreamOps.streamShuffleParts)
-          // unmatched lefts flush in the batch AFTER the sentinel advanced
-          // the watermark — that batch carries no data, so it must run
-          spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+        // unmatched lefts flush in the batch AFTER the sentinel advanced
+        // the watermark — that batch carries no data, so it must run
+        withConfs(spark, noDataBatchesOn) {
           // ALL drops (base pair + sentinel) in ONE data trigger: the
           // watermark is computed at end-of-batch from the max event time
           // seen — sentinel included — so the unmatched-left flush still
@@ -2796,13 +2696,9 @@ object ExtQueries {
           StreamOps.runToMemory(
             StreamOps.pairsWithinLeftOuter(side(), side(), withinSeconds = 300),
             "stream_stream_left_outer_sink", OutputMode.Append())
-          spark.table("stream_stream_left_outer_sink")
-        } finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-          spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
         }
-        out.filter(col("user_id") =!= StreamOps.SentinelUser)
+        spark.table("stream_stream_left_outer_sink")
+          .filter(col("user_id") =!= StreamOps.SentinelUser)
           .select("user_id", "a_id", "b_id")
       }),
   )

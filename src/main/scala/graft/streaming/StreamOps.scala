@@ -29,42 +29,44 @@ object StreamOps {
     */
   def tmpRoot: String = graft.Scratch.root
 
-  /** Shuffle-partition count the stream gates pin for their stateful
-    * stages (state-store instances and their per-trigger commit machinery
-    * scale with partition count, and gate-scale micro-batches are
-    * overhead-bound, not compute-bound; a 1/2/4/8 A/B was flat, COVERAGE
-    * "ScaleCheck: measured 10× scaling", Measured-and-declined). A
-    * production stream sizes this to key-cardinality × executor count,
-    * not to a constant.
+  /** Shuffle-partition count every stream runs at (see [[streamPins]]). A
+    * production stream sizes this to key-cardinality × executor count, not
+    * to a constant.
     */
   val streamShuffleParts: String = "4"
 
-  /** Whole-stage codegen is pinned OFF for the finite micro-batch REPLAYS
-    * these run helpers drive. The incremental planner re-plans every
-    * trigger and bakes per-batch literals (watermark timestamps, batch
-    * metadata) into the generated sources, so janino's source-keyed cache
-    * can never hit across triggers or runs — measured on the 14-gate
-    * stream block at sf0.1, ~190 fresh compiles per suite run land INSIDE
-    * the timed loop even with every batch plan already seen, and
-    * interpreted evaluation over the tiny per-trigger batches beats
-    * compile+run in every interleaved A/B pair (12.19→11.35, 14.60→8.70,
-    * 10.50→9.26 s); it also wins with 3M rows in one trigger
-    * (OPTIMIZATION_r19.md, ask 2). Scope: pinned only around
-    * `start()`/drain inside the run helpers (the stream snapshots session
-    * confs at start), so batch-side rollups and every non-stream gate keep
-    * codegen. Expression-level codegen (`codegen.factoryMode`) stays at the
-    * engine default: NO_CODEGEN read sign-inconsistent against it
-    * (OPTIMIZATION_r19.md, ask 3).
+  /** Session confs the run helpers pin around `start()` only: the stream
+    * clones the session's conf when it starts, so a pin there reaches every
+    * trigger — the `foreachBatch` body of [[applyChangesStream]] included —
+    * and nothing outside the stream. Batch-side rollups and every non-stream
+    * gate keep the session's values.
+    *
+    *   - Shuffle partitions at [[streamShuffleParts]]: the count is frozen
+    *     into the state store at the first start, state-store instances and
+    *     their per-trigger commit machinery scale with it, and gate-scale
+    *     micro-batches are overhead-bound, not compute-bound — at the bench's
+    *     16 a 10k-row stream pays 16 state tasks per micro-batch, a file
+    *     sink behind a shuffle commits 16 near-empty files per trigger, and
+    *     the CDC merge runs 16 tasks for a broadcast anti-join over a small
+    *     snapshot. A 1/2/4/8 A/B was flat (session windows: 8 → 2.3 s,
+    *     4 → 2.0 s, 2 → 2.0 s, 1 → 2.4 s; COVERAGE "ScaleCheck: measured
+    *     10× scaling", Measured-and-declined).
+    *   - Whole-stage codegen OFF: the incremental planner re-plans every
+    *     trigger and bakes per-batch literals (watermark timestamps, batch
+    *     metadata) into the generated sources, so janino's source-keyed cache
+    *     can never hit across triggers or runs — measured on the 14-gate
+    *     stream block at sf0.1, ~190 fresh compiles per suite run land INSIDE
+    *     the timed loop even with every batch plan already seen, and
+    *     interpreted evaluation over the tiny per-trigger batches beats
+    *     compile+run in every interleaved A/B pair (12.19→11.35, 14.60→8.70,
+    *     10.50→9.26 s); it also wins with 3M rows in one trigger
+    *     (OPTIMIZATION_r19.md, ask 2). Expression-level codegen
+    *     (`codegen.factoryMode`) stays at the engine default: NO_CODEGEN read
+    *     sign-inconsistent against it (OPTIMIZATION_r19.md, ask 3).
     */
-  private def withStreamCodegen[T](spark: org.apache.spark.sql.SparkSession)
-                                  (body: => T): T = {
-    val key = "spark.sql.codegen.wholeStage"
-    val prev = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "false")
-      body
-    } finally spark.conf.set(key, prev)
-  }
+  private val streamPins = Seq(
+    "spark.sql.shuffle.partitions" -> streamShuffleParts,
+    "spark.sql.codegen.wholeStage" -> "false")
 
   /** Events schema of the LANDING drops: the landing is written from
     * `graft.Tables.events` (which normalizes whatever physical timestamp
@@ -460,9 +462,7 @@ object StreamOps {
     // extra idle-confirmation source round per gate; AvailableNow knows
     // its end. Same batches, same state transitions, same sink contents —
     // every gate's oracle hash pins that.
-    // codegen pinned off for the start+drain window only (the stream
-    // snapshots session confs at start)
-    val q = withStreamCodegen(df.sparkSession) {
+    val q = graft.Posture.withConfs(df.sparkSession, streamPins: _*) {
       df.writeStream.outputMode(mode).format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", ckpt.toString).start()
@@ -489,8 +489,7 @@ object StreamOps {
     * off. StreamOpsSpec drives the restart/no-duplication contract.
     */
   def runToParquet(df: Dataset[_], path: String, checkpoint: String): Unit = {
-    // same codegen pinning as runToMemory (confs snapshot at start)
-    val q = withStreamCodegen(df.sparkSession) {
+    val q = graft.Posture.withConfs(df.sparkSession, streamPins: _*) {
       df.writeStream.outputMode(OutputMode.Append())
         .format("parquet").option("path", path)
         .option("checkpointLocation", checkpoint)
@@ -532,9 +531,7 @@ object StreamOps {
   def applyChangesStream(changes: DataFrame, snapshotPath: String,
                          checkpoint: String, keyCol: String, opCol: String,
                          outFiles: Int = 4): Unit = {
-    // same codegen pinning as runToMemory (confs snapshot at start; the
-    // foreachBatch body plans under the stream's cloned session)
-    val q = withStreamCodegen(changes.sparkSession) { changes.writeStream
+    val q = graft.Posture.withConfs(changes.sparkSession, streamPins: _*) { changes.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val ss = batch.sparkSession

@@ -11,7 +11,8 @@ package graft.tools
   * Covers ALL six heavy families since round 15: `graph_pagerank`'s
   * registry gate derives its supplier offset from max(o_custkey) and
   * data-sizes its own shuffle partitions, so tiled key ranges are safe
-  * (it overrides the [parts] arg for its own body, like the stream gates).
+  * (it overrides the [parts] arg for its own body, as the stream run
+  * helpers do for every stream).
   *
   * usage: GateTwice <gateName> <dir> [shuffleParts=32] [passes=2]
   */

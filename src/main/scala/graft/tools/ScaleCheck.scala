@@ -55,10 +55,15 @@ object ScaleCheck {
     s
   }
 
-  def main(args: Array[String]): Unit = args.headOption match {
-    case Some("gen") => gen(args(1), args(2), if (args.length > 3) args(3).toInt else 10)
-    case Some("run") => run(args(1), if (args.length > 2) Some(args(2).split(",").toSeq) else None)
-    case _ => System.err.println("usage: ScaleCheck gen <src> <dst> [tiles] | run <dir> [names]")
+  private val usage = "usage: ScaleCheck gen <src> <dst> [tiles] | run <dir> [names]"
+
+  /** Usage errors throw, so the JVM exits non-zero before any session. */
+  def main(args: Array[String]): Unit = args.toSeq match {
+    case Seq("gen", src, dst) => gen(src, dst, 10)
+    case Seq("gen", src, dst, tiles) if tiles.toIntOption.exists(_ > 0) => gen(src, dst, tiles.toInt)
+    case Seq("run", dir) => run(dir, None)
+    case Seq("run", dir, names) => run(dir, Some(names.split(",").toSeq))
+    case _ => sys.error(usage)
   }
 
   /** Injective-token-remap tiling (see class doc). Tile 0 is byte-identical
@@ -132,16 +137,32 @@ object ScaleCheck {
     * series did not pay, bounded well inside the weather noise band, and
     * measured-inclusive by the round-15 GateTwice points.
     */
-  private def families: Seq[(String, (SparkSession, String) => DataFrame)] = {
-    val gates = graft.SparkEntry.queries
-    Seq("dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_substring_spans",
-      "corpus_clean", "ann_topk_ivf_persist", "graph_pagerank")
-      .map(n => n -> gates(n))
+  private val families = Seq("dedup_ngram_jaccard", "dedup_minhash_lsh",
+    "dedup_substring_spans", "corpus_clean", "ann_topk_ivf_persist", "graph_pagerank")
+
+  /** The registry gates of the families named in `only` (all when None); an
+    * unknown name fails here, listing the known ones, before any session. */
+  private[tools] def pick(only: Option[Seq[String]]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val unknown = only.getOrElse(Nil).filterNot(families.contains)
+    if (unknown.nonEmpty)
+      sys.error(s"unknown families ${unknown.mkString("'", "', '", "'")}; known: ${families.mkString(", ")}")
+    families.filter(n => only.forall(_.contains(n))).map(n => n -> graft.SparkEntry.queries(n))
+  }
+
+  /** The one JSON line [[run]] prints: the dir, then per family its
+    * seconds, rows and (if it failed) the escaped error message. */
+  private[tools] def resultLine(dir: String,
+                                results: Seq[(String, Double, Long, Option[String])]): String = {
+    import graft.Bench.jsonStr
+    val fields = results.map { case (n, s, r, e) =>
+      s"""${jsonStr(n)}:{"sec":${f"$s%.2f"},"rows":$r${e.fold("")(m => ""","error":""" + jsonStr(m))}}"""
+    }
+    (s""""dir":${jsonStr(dir)}""" +: fields).mkString("{", ",", "}")
   }
 
   def run(dir: String, only: Option[Seq[String]]): Unit = {
+    val picked = pick(only)
     val spark = session(32)
-    val picked = families.filter { case (n, _) => only.forall(_.contains(n)) }
     // one untimed warm pass per family at sf0.001 compiles the plans so the
     // timed numbers measure execution, as Bench's registry warm pass does
     picked.foreach { case (name, fn) =>
@@ -167,10 +188,7 @@ object ScaleCheck {
       System.err.println(f"[scalecheck] $name%-24s ${sec}%8.2f s  $rows rows ${err.getOrElse("")}")
       (name, sec, rows, err)
     }
-    val json = results.map { case (n, s, r, e) =>
-      s""""$n":{"sec":${f"$s%.2f"},"rows":$r${e.fold("")(m => s""","error":"$m"""")}}"""
-    }.mkString(",")
-    println(s"""{"dir":"$dir",$json}""")
+    println(resultLine(dir, results))
     spark.stop()
   }
 }

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The one-reader rule: the environment is read in `graft/Posture.scala`
   * only, and only for the deployment settings and the settings
   * PRODUCTION.md cites as workload-dependent. Every other session setting
-  * is a constant there.
+  * is a constant there, and a conf changed after start-up goes through its
+  * one scoped primitive, `Posture.withConfs`.
   */
 class PostureSpec extends AnyFunSuite {
 
@@ -27,6 +28,20 @@ class PostureSpec extends AnyFunSuite {
     val envRead = "sys\\.env|System\\.getenv".r
     val readers = mainSources.filter(p => envRead.findFirstIn(Files.readString(p)).isDefined)
     assert(readers === Seq(posture))
+  }
+
+  test("only Posture.withConfs changes a session conf after start-up") {
+    // the one exception: the parquet reader reads nanosAsLong at execution,
+    // so Tables.events sets it session-wide rather than in a scope
+    val confWrite = "conf\\.(set|unset)\\(".r
+    val sites = mainSources.filter(_ != posture).flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if confWrite.findFirstIn(line).isDefined &&
+            !(p.endsWith("graft/Tables.scala") && line.contains("\"spark.sql.legacy.parquet.nanosAsLong\"")) =>
+          s"${mainRoot.relativize(p)}:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(sites.isEmpty, sites.mkString("\n", "\n", ""))
   }
 
   test("Posture reads exactly the ten deployment and workload-dependent names") {

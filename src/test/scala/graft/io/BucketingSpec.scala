@@ -3,6 +3,7 @@ package graft.io
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkSpec, Tables}
+import graft.Posture.withConfs
 
 /** Co-located bucketed join: same bucketing on both sides ⇒ the join plans
   * with NO exchange (the write-once-join-many trade at 100 TB).
@@ -51,9 +52,7 @@ class BucketingSpec extends AnyFunSuite with SparkSpec {
 
     // force the non-broadcast path: at real fact-fact scale neither side
     // broadcasts, which is exactly when bucketing pays
-    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("bkt_db.li_b").join(spark.table("bkt_db.o_b"), "l_orderkey")
       joined.collect()
       val plan = joined.queryExecution.executedPlan.toString
@@ -64,6 +63,6 @@ class BucketingSpec extends AnyFunSuite with SparkSpec {
 
       val expected = li.join(o, li("l_orderkey") === o("o_orderkey")).count()
       assert(joined.count() === expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkSpec, Tables}
+import graft.Posture.withConfs
 
 /** Runtime bloom-filter join pruning — Catalyst injects a bloom filter
   * built from the SELECTIVE side of a shuffle join into the probe side's
@@ -16,17 +17,12 @@ class RuntimeFilterSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   test("selective dim filter injects a bloom filter into the fact scan") {
-    val keep = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-    ).map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      // fixture-sized thresholds: any probe scan qualifies; broadcast off so
-      // the join actually shuffles (a broadcast join needs no runtime filter)
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    // fixture-sized thresholds: any probe scan qualifies; broadcast off so
+    // the join actually shuffles (a broadcast join needs no runtime filter)
+    withConfs(spark,
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_quantity")
       val sel = Tables.orders(spark, sfDir)
         .filter($"o_orderpriority" === "1-URGENT")
@@ -37,9 +33,6 @@ class RuntimeFilterSpec extends AnyFunSuite with SparkSpec {
       val p = joined.queryExecution.executedPlan.toString
       assert(p.contains("might_contain"),
         s"expected an injected runtime bloom filter on the probe side:\n$p")
-    } finally keep.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

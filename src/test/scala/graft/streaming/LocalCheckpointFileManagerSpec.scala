@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkSpec, Tables}
+import graft.Posture.withConfs
 
 /** Contract tests for [[LocalCheckpointFileManager]]: the atomic
   * write-commit semantics `HDFSMetadataLog` and the state stores rely on,
@@ -142,10 +143,8 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("end-to-end: stream + restart under the manager, exactly-once held") {
-    val prev = spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass")
-    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-      LocalCheckpointFileManager.confValue)
-    try {
+    withConfs(spark, "spark.sql.streaming.checkpointFileManagerClass" ->
+        LocalCheckpointFileManager.confValue) {
       val land = Files.createTempDirectory("graft-ckpt-land")
       val sink = Files.createTempDirectory("graft-ckpt-sink").resolve("out").toString
       val ckpt = Files.createTempDirectory("graft-ckpt-root").resolve("cp").toString
@@ -160,11 +159,6 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite with SparkSpec {
       run() // restart against the nio-written checkpoint: no re-emission
       assert(spark.read.parquet(sink).count() === 200,
         "restart re-emitted rows — offsets not recovered through the manager")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.checkpointFileManagerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
-      }
     }
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkSpec, Tables}
+import graft.Posture.withConfs
 
 /** Streaming ops driven by the batch events parquet as a one-file stream
   * (memory sink + processAllAvailable = synchronous micro-batch).
@@ -13,6 +14,9 @@ import graft.{SparkSpec, Tables}
   */
 class StreamOpsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
+
+  private val rocksDbState = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   // stage the normalized events as a one-file drop (the landing-zone
   // layout — landings are written from Tables.events, ts as TimestampType)
@@ -201,11 +205,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("RocksDB state store provider: streaming agg ≡ batch under the " +
     "production state backend") {
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    withConfs(spark, rocksDbState) {
       val stream = StreamOps.readEventStream(spark, streamDir)
       StreamOps.runToMemory(
         StreamOps.windowedCounts(stream, 3600, 3600), "rocks_tumb",
@@ -221,11 +221,6 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
           $"event_type", $"count")
         .as[(Long, String, Long)].collect().toSet
       assert(got === want, "RocksDB-backed state must be result-identical")
-    } finally prev match {
-      case Some(p) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -244,16 +239,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
   test("sessionizeTWS (event-time timers) ≡ batch gaps-and-islands sessions") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    val prevProv = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    val prevNoData = spark.conf.getOption(
-      "spark.sql.streaming.noDataMicroBatches.enabled")
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // timers fire in the trailing batch AFTER the sentinel advances the
-      // watermark — that batch carries no data
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    // timers fire in the trailing batch AFTER the sentinel advances the
+    // watermark — that batch carries no data
+    withConfs(spark, rocksDbState,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") {
       val landing = StreamOps.eventsLandingWithSentinel(spark, sfDir)
       val stream = StreamOps.readEventStream(spark, landing)
       StreamOps.runToMemory(
@@ -278,24 +267,11 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
         .select($"user_id", $"n_events", $"v", $"start_s", $"end_s")
         .as[(Long, Long, Double, Long, Long)].collect().toSet
       assert(got === want && got.nonEmpty)
-    } finally {
-      prevProv match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-      prevNoData.foreach(v => spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", v))
     }
   }
 
   test("typeCountsTWS (MapState) final counts ≡ batch groupBy(user, type)") {
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    withConfs(spark, rocksDbState) {
       val stream = StreamOps.readEventStream(spark, streamDir)
       StreamOps.runToMemory(StreamOps.typeCountsTWS(spark, stream),
         "type_counts_tws", OutputMode.Update())
@@ -308,11 +284,6 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
         .groupBy("user_id", "event_type").count()
         .as[(Long, String, Long)].collect().toSet
       assert(got === want && got.nonEmpty)
-    } finally prev match {
-      case Some(p) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -334,12 +305,8 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("transformWithState running stats ≡ mapGroupsWithState ≡ batch " +
     "(new arbitrary-state API, RocksDB-backed)") {
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    try {
-      // transformWithState requires the RocksDB provider
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // transformWithState requires the RocksDB provider
+    withConfs(spark, rocksDbState) {
       val stream = StreamOps.readEventStream(spark, streamDir)
       StreamOps.runToMemory(
         StreamOps.runningUserStatsTWS(spark, stream), "running_tws",
@@ -353,11 +320,6 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
       val want = Tables.events(spark, sfDir)
         .groupBy("user_id").count().as[(Long, Long)].collect().toMap
       assert(got === want)
-    } finally prev match {
-      case Some(p) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

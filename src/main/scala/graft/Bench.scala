@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Freeze, SparkSession}
 object Bench {
 
   /** `s` as a JSON string literal: quotes, backslashes and control
@@ -14,26 +14,6 @@ object Bench {
     }
     sb.append("\"").toString
   }
-
-  /** Unpersist every persisted RDD of the session, checkpoint blocks
-    * included. As Bench's per-query policy (non-blocking) an early 138-gate
-    * measurement read ~neutral (124.1 vs 121.4 s same-weather), but the
-    * round-7/8 registry added several localCheckpoint-heavy gates (prefix
-    * index, substring spans, components) and the verdict flipped hard: the
-    * 8-query dedup subset measures 25.9 s with blocks accumulating vs 8.1 s
-    * unpersisting (dedup_simhash 3.9→0.5, _prefix 8.5→1.1, substring_spans
-    * 6.2→1.2 — same weather, warm, second round). Leaked blocks squeeze
-    * execution memory and the suite pays in shuffle spills, exactly what a
-    * long-lived cluster session would see; eager cleanup after each query's
-    * materialization mirrors what ContextCleaner does lazily on GC, just
-    * deterministically. Safe here because no gate re-executes another
-    * gate's plan: each builds fresh from Tables (unpersisting a
-    * localCheckpointed RDD makes RE-execution impossible — lineage is
-    * truncated — so this stays a harness policy, not a library default).
-    * `blocking = true` waits until the blocks are actually freed; callers
-    * that time one gate after another at scale need it (see ScaleCheck). */
-  private[graft] def unpersistAll(spark: SparkSession, blocking: Boolean): Unit =
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking))
 
   /** One timed gate: wall seconds, and the error text if it threw. */
   final case class GateResult(name: String, sec: Double, error: Option[String])
@@ -133,7 +113,7 @@ object Bench {
     val warmSf = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
     if (warmSf.isDirectory && warmSf.getAbsolutePath != new java.io.File(sfDir).getAbsolutePath) {
       // Sequentially, on the measured session itself. Jobs that a gate
-      // launches through Dataset actions (eager localCheckpoint, sizing
+      // launches through Dataset actions (eager Freeze, sizing
       // collects) carry the session's job-artifact state, so the executor
       // side compiles their code under a per-session class loader and the
       // janino cache key differs per session: a pass on newSession()s left
@@ -146,7 +126,7 @@ object Bench {
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
         try fn(spark, warmSf.getAbsolutePath).queryExecution.toRdd.count(): Unit
         catch { case scala.util.control.NonFatal(_) => () }
-        unpersistAll(spark, blocking = false)
+        Freeze.releaseAll(spark, blocking = false)
       }
     }
     // ONE full GC at the warm/measure boundary (distinct from the rejected
@@ -186,7 +166,7 @@ object Bench {
       // No per-query System.gc(): the same-weather A/B measured 121.4 s
       // without vs 137.7 s with — full collections evict JIT-hot code and
       // cached blocks that later queries re-pay for.
-      unpersistAll(spark, blocking = false)
+      Freeze.releaseAll(spark, blocking = false)
       GateResult(name, elapsed, err)
     }
     // Janino-compile telemetry: compile count and cumulative ms over the

@@ -2,11 +2,11 @@ package graft
 
 /** Plan-inspection tool: print the formatted physical plan of one or more
   * registry queries. The final action never runs, but queries built on
-  * eager materialization (localCheckpoint in the dedup/corpus-clean family,
-  * connectedComponents' iteration) DO execute those intermediate jobs at
-  * construction, and their checkpoints print as lineage-truncated
-  * `Scan ExistingRDD` nodes — prefer the cheap scan/join/agg queries (or
-  * sf0.001) when auditing those.
+  * eager materialization (`org.apache.spark.sql.Freeze` in the
+  * dedup/corpus-clean family, connectedComponents' iteration) DO execute
+  * those intermediate jobs at construction, and their freezes print as
+  * lineage-truncated `Scan ExistingRDD` nodes — prefer the cheap
+  * scan/join/agg queries (or sf0.001) when auditing those.
   *
   * Usage: runMain graft.Explain <queryName>[,<queryName>...] [sfDir]
   *

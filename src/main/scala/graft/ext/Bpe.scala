@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Freeze, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed BPE merge training (Sennrich et al. 2016's subword
@@ -55,9 +55,8 @@ object Bpe {
   def trainMerges(spark: SparkSession, df: DataFrame, textCol: String,
                   numMerges: Int, driverMaxVocab: Long = 1L << 21): DataFrame = {
     require(numMerges >= 1, "numMerges must be >= 1")
-    var words = wordCounts(df, textCol)
-      .select(col("word"), col("cnt"), seq0.as("seq"))
-      .localCheckpoint()
+    var words = Freeze(wordCounts(df, textCol)
+      .select(col("word"), col("cnt"), seq0.as("seq")))
     val rules = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
     // The corpus scan is done — `words` is the REDUCED word-frequency
     // relation (vocabulary-sized regardless of corpus size). When it fits
@@ -109,9 +108,8 @@ object Bpe {
           rules += (i -> best)
           val Array(a, b) = best.split(" ", 2)
           // tokens are alphabetic by construction — safe to inline in the expr
-          words = words
-            .withColumn("seq", expr(s"replace(seq, '($a)($b)', '($a$b)')"))
-            .localCheckpoint()
+          words = Freeze(words
+            .withColumn("seq", expr(s"replace(seq, '($a)($b)', '($a$b)')")))
         }
       }
     }

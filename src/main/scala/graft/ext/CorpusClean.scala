@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Freeze}
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus cleaning for training data — the composed pipeline a
@@ -26,18 +26,17 @@ object CorpusClean {
           minTokens: Int, maxPunct: Double,
           langs: Seq[String], n: Int, threshold: Double): DataFrame = {
     val t = col(textCol)
-    val kept = df
+    // materialize the (much smaller) surviving corpus once: the near-dup
+    // stage consumes it three times (both sides of the pair self-join +
+    // the survivor join), and each re-read would re-run the full
+    // quality/language scoring scan. At production scale this is the
+    // stage boundary you'd write to a table; [[Freeze]] is the
+    // single-job equivalent.
+    val kept = Freeze(df
       .filter(TextOps.tokenCount(t) >= minTokens)
       // punctRatio is NULL for empty text, and NULL <= maxPunct filters out
       .filter(TextOps.punctRatio(t) <= maxPunct)
-      .filter(TextOps.languageId(t, TextOps.defaultLexicons).isin(langs: _*))
-      // materialize the (much smaller) surviving corpus once: the near-dup
-      // stage consumes it three times (both sides of the pair self-join +
-      // the survivor join), and each re-read would re-run the full
-      // quality/language scoring scan. At production scale this is the
-      // stage boundary you'd write to a table; localCheckpoint is the
-      // single-job equivalent.
-      .localCheckpoint()
+      .filter(TextOps.languageId(t, TextOps.defaultLexicons).isin(langs: _*)))
     Dedup.dropNearDups(kept, idCol, textCol, n, threshold)
   }
 

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Freeze}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -64,8 +64,8 @@ object Dedup {
         // materialized once: both sides of the self-join below reference this
         // subtree, and without the checkpoint the full df-aggregate over the
         // exploded shingle relation would run twice (once per side)
-        val hubs = sh0.groupBy("s").agg(count(lit(1)).as("df")).filter(col("df") >= cap)
-          .select("s").localCheckpoint()
+        val hubs = Freeze(sh0.groupBy("s").agg(count(lit(1)).as("df"))
+          .filter(col("df") >= cap).select("s"))
         sh0.join(broadcast(hubs), Seq("s"), "left_anti")
       case None => sh0
     }
@@ -124,10 +124,9 @@ object Dedup {
     // exploded index, a regression at every scale measured.
     // materialized once: the exploded index, both prefix sides, and the
     // verify all read this relation
-    val sets = df.select(col(idCol).as("id"),
+    val sets = Freeze(df.select(col(idCol).as("id"),
         graft.functions.ShingleHashes.shingleHashes(col(textCol), n).as("set"))
-      .filter(size(col("set")) > 0)
-      .localCheckpoint()
+      .filter(size(col("set")) > 0))
     val ex = sets.select(col("id"), size(col("set")).cast("long").as("sz"),
       explode(col("set")).as("s"))
     // df lives in a vocab-sized aggregate, not a window over the exploded
@@ -221,14 +220,13 @@ object Dedup {
     * from this materialized (id, shingle-hash set) relation — without it the
     * kernel re-runs over the full corpus three times (sig build + each side
     * of the candidate verify join). At production scale this is the shingle
-    * table you'd persist alongside the corpus; localCheckpoint is the
+    * table you'd persist alongside the corpus; [[Freeze]] is the
     * single-job equivalent.
     */
   private def minhashShingleSets(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =
-    df.select(col(idCol).as("id"),
-        graft.functions.ShingleHashes.shingleHashes(col(textCol), n).as("set"))
-      .localCheckpoint()
+    Freeze(df.select(col(idCol).as("id"),
+        graft.functions.ShingleHashes.shingleHashes(col(textCol), n).as("set")))
 
   private def minhashLshPairsFromSets(sets: DataFrame, threshold: Double,
       numHashes: Int, bands: Int): DataFrame = {
@@ -288,24 +286,11 @@ object Dedup {
       n: Int, threshold: Double, fastHashes: Int, fastBands: Int,
       escalateBelow: Double, safeHashes: Int = 128, safeBands: Int = 64): (DataFrame, Boolean) = {
     val sets = minhashShingleSets(df, idCol, textCol, n)
-    val fast = minhashLshPairsFromSets(sets, threshold, fastHashes, fastBands)
-      .localCheckpoint()
-    val escalate = fast.agg(min(col("jaccard"))).head().getAs[Any](0) match {
-      case null => true // zero pairs: anomalous — take the safe config
-      case j: Double => j < escalateBelow
-      case other => sys.error(s"unexpected min(jaccard) value: $other")
-    }
-    if (escalate) {
-      // blocking: the safe rerun allocates immediately — a non-blocking
-      // free may not land first, and the transient double-occupancy
-      // squeezes execution memory (ADVICE r12; same effect ScaleCheck
-      // fixed between timed families)
-      org.apache.spark.sql.GraftPlanShim.unpersistLocalCheckpoint(fast, blocking = true)
-      // localCheckpoint: both branches return the same materialized shape —
-      // callers get a frame whose pipeline has already run either way
-      (minhashLshPairsFromSets(sets, threshold, safeHashes, safeBands)
-        .localCheckpoint(), true)
-    } else (fast, false)
+    Freeze.escalating(minhashLshPairsFromSets(sets, threshold, fastHashes, fastBands)) {
+      // zero pairs: anomalous — take the safe config
+      (pairs, nPairs) =>
+        nPairs == 0 || pairs.agg(min(col("jaccard"))).head().getDouble(0) < escalateBelow
+    }(minhashLshPairsFromSets(sets, threshold, safeHashes, safeBands))
   }
 
   /** 64-bit SimHash fingerprint per document: per-token xxhash64, each hash
@@ -368,16 +353,15 @@ object Dedup {
     * each round joins labels across undirected edges and keeps the
     * element-wise min; converges in O(component diameter) rounds — near-dup
     * clusters are shallow (dozens of docs), so a handful of distributed
-    * rounds, each a hash join + aggregate. `localCheckpoint` every round
+    * rounds, each a hash join + aggregate. A [[Freeze]] every round
     * truncates lineage so plans don't grow with iterations.
     *
     * Output: (id, component) for every node appearing in `edges`.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50,
                           driverEdgeLimit: Long = 1L << 20): DataFrame = {
-    val und = edges.select(col("id_a").as("u"), col("id_b").as("v"))
-      .unionByName(edges.select(col("id_b").as("u"), col("id_a").as("v")))
-      .localCheckpoint()
+    val (und, nUnd) = Freeze.counted(edges.select(col("id_a").as("u"), col("id_b").as("v"))
+      .unionByName(edges.select(col("id_b").as("u"), col("id_a").as("v"))))
     // Near-dup pair graphs are tiny relative to their corpus (edges exist
     // only between near-identical docs), so the common case fits on the
     // driver by orders of magnitude: union-find over one single-direction
@@ -391,12 +375,11 @@ object Dedup {
       case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType => true
       case _ => false
     }
-    val edgeCount = und.count() / 2
+    val edgeCount = nUnd / 2
     if (integralIds && edgeCount <= driverEdgeLimit)
       return unionFindDriver(und, edges.sparkSession)
-    var labels = und.select(col("u").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint()
+    var labels = Freeze(und.select(col("u").as("id")).distinct()
+      .withColumn("component", col("id")))
     // Convergence check: for integral ids, labels only ever decrease
     // element-wise, so the exact (decimal, no overflow) label sum strictly
     // decreases until the fixpoint — one cheap scan of the checkpointed
@@ -416,10 +399,9 @@ object Dedup {
       val nbrMin = und
         .join(labels.withColumnsRenamed(Map("id" -> "v", "component" -> "vlbl")), "v")
         .groupBy(col("u").as("id")).agg(min(col("vlbl")).as("nbr"))
-      val next = labels.join(nbrMin, Seq("id"), "left")
+      val next = Freeze(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"),
-          least(col("component"), coalesce(col("nbr"), col("component"))).as("component"))
-        .localCheckpoint()
+          least(col("component"), coalesce(col("nbr"), col("component"))).as("component")))
       if (integralIds) {
         val nextSum = labelSum(next)
         converged = nextSum.compareTo(prevSum) == 0

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Freeze}
 import org.apache.spark.sql.functions._
 
 /** Data Selection via Importance Resampling — the hashed-n-gram importance
@@ -80,9 +80,9 @@ object Dsir {
     // each corpus is EXPLODED and scanned exactly once: the totals come
     // from summing the B-row count relations, not a second corpus pass,
     // and the B-row relations are materialized because both the join and
-    // the total read them (localCheckpoint of ≤B rows)
-    val scnt = s.groupBy("b").agg(count(lit(1)).as("cs")).localCheckpoint()
-    val tcnt = t.groupBy("b").agg(count(lit(1)).as("ct")).localCheckpoint()
+    // the total read them (a Freeze of ≤B rows)
+    val scnt = Freeze(s.groupBy("b").agg(count(lit(1)).as("cs")))
+    val tcnt = Freeze(t.groupBy("b").agg(count(lit(1)).as("ct")))
     val stot = scnt.agg(sum(col("cs")).as("ns"))
     val ttot = tcnt.agg(coalesce(sum(col("ct")), lit(0L)).as("nt"))
     scnt
@@ -123,12 +123,11 @@ object Dsir {
                              textCol: String, numBuckets: Int): DataFrame = {
     val toks = graft.functions.FastTokens.fastTokens(col(textCol))
     val grams = graft.functions.ShingleStrings.shingleStrings(toks, 2)
-    val hb = corpus.select(col(idCol).as("id"), isTarget.as("is_t"), explode(grams).as("g"))
-      .select(col("id"), col("is_t"), bucketOf(col("g"), numBuckets).as("b"))
-      .localCheckpoint()
-    val cnt = hb.groupBy("b").agg(count(lit(1)).as("cs"),
-        count(when(col("is_t"), lit(1))).as("ct"))
-      .localCheckpoint() // ≤B rows; read by the ratio join AND the totals
+    val hb = Freeze(corpus.select(col(idCol).as("id"), isTarget.as("is_t"), explode(grams).as("g"))
+      .select(col("id"), col("is_t"), bucketOf(col("g"), numBuckets).as("b")))
+    val cnt = Freeze( // ≤B rows; read by the ratio join AND the totals
+      hb.groupBy("b").agg(count(lit(1)).as("cs"),
+        count(when(col("is_t"), lit(1))).as("ct")))
     val tot = cnt.agg(sum(col("cs")).as("ns"), sum(col("ct")).as("nt"))
     val rt = cnt.crossJoin(broadcast(tot))
       .select(col("b"), rScaled(col("cs"), col("ct"), col("ns"), col("nt"),

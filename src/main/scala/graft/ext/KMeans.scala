@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Freeze}
 import org.apache.spark.sql.functions._
 
 /** Lloyd's k-means over embeddings, INTEGER-EXACT: vectors are quantized
@@ -64,7 +64,7 @@ object KMeans {
     // launch overhead; ~50 k vectors/task amortizes it, and a 100 TB
     // corpus exceeds the upstream partition count and keeps full
     // parallelism.
-    val (q0, nVec) = org.apache.spark.sql.GraftPlanShim.localCheckpointWithCount(
+    val (q0, nVec) = Freeze.counted(
       embeddings
         .select(col(idCol).as("id"), quantize(col(vecCol), scale).as("qv")))
     val qParts = math.max(1, math.min(q0.rdd.getNumPartitions,

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Freeze}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -97,15 +97,14 @@ object Pack {
     // count table and yields the bigram-type cardinality the broadcast
     // gate needs (a separate .count() re-paid a job for a number the
     // eager checkpoint had already computed and discarded)
-    val (bcAll, nTypes) = org.apache.spark.sql.GraftPlanShim
-      .localCheckpointWithCount(
-        toks.select(col("id"), size(col("ts")).as("n"),
-            posexplode(graft.functions.ShingleStrings.shingleStrings(
-              concat(col("ts"), array(lit(""))), 2)).as(Seq("p", "bg")))
-          // appended array has n+1 tokens → n shingles at positions
-          // 0..n-1; position n-1 is the sentinel, the rest are real
-          .groupBy("bg").agg(count(lit(1)).as("cb"),
-            count(when(col("p") < col("n") - 1, lit(1))).as("cbr")))
+    val (bcAll, nTypes) = Freeze.counted(
+      toks.select(col("id"), size(col("ts")).as("n"),
+          posexplode(graft.functions.ShingleStrings.shingleStrings(
+            concat(col("ts"), array(lit(""))), 2)).as(Seq("p", "bg")))
+        // appended array has n+1 tokens → n shingles at positions
+        // 0..n-1; position n-1 is the sentinel, the rest are real
+        .groupBy("bg").agg(count(lit(1)).as("cb"),
+          count(when(col("p") < col("n") - 1, lit(1))).as("cbr")))
     val uni = bcAll
       .groupBy(substring_index(col("bg"), " ", 1).as("w1"))
       .agg(sum(col("cb")).as("cu"))
@@ -127,7 +126,7 @@ object Pack {
         // unbounded-vocabulary fallback: one explicit stream shuffle on
         // the bigram; build side = pTab (a sort-merge would sort the
         // full stream)
-        val stream = exploded.repartition(col("bg")).localCheckpoint()
+        val stream = Freeze(exploded.repartition(col("bg")))
         stream.join(pTab(uni).hint("shuffle_hash"), Seq("bg"))
       }
     joined

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Freeze}
 import org.apache.spark.sql.functions._
 
 /** Distributed PageRank — iterative sparse matrix–vector multiply, the
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * destination (one hash exchange on dst); dangling mass (rank parked on
   * zero-out-degree nodes) is collected by ONE in-plan aggregate and
   * redistributed uniformly — no driver-side action per iteration. Lineage
-  * is truncated with `localCheckpoint` each round so plan depth stays
+  * is truncated with a [[Freeze]] every other round so plan depth stays
   * O(1) regardless of iteration count — at 100 TB the edge relation is
   * hash-partitioned by src once and every iteration reuses that layout;
   * rank state is O(nodes), never O(edges).
@@ -49,8 +49,7 @@ object PageRank {
     // checkpoint + count FUSED into one pass per eager relation (the eager
     // checkpoint already runs a counting action) — saves one block-scan job
     // each for the edge, degree, and (general-path) node relations
-    val (e0, halfCount) = org.apache.spark.sql.GraftPlanShim
-      .localCheckpointWithCount(edges.select(col("src"), col("dst")))
+    val (e0, halfCount) = Freeze.counted(edges.select(col("src"), col("dst")))
     val eCount = if (symmetricHalf) 2L * halfCount else halfCount
     // The edge relation is scanned once per iteration (as the probe side of
     // the broadcast join), so its partition count is a per-iteration task
@@ -68,9 +67,8 @@ object PageRank {
         eHalf.unionByName(
           eHalf.select(col("dst").as("src"), col("src").as("dst")))
       else eHalf
-    val (deg, degCount) = org.apache.spark.sql.GraftPlanShim
-      .localCheckpointWithCount( // computed once, not per broadcast job per iteration
-        e.groupBy("src").agg(count(lit(1)).cast("double").as("d")))
+    val (deg, degCount) = Freeze.counted( // computed once, not per broadcast job per iteration
+      e.groupBy("src").agg(count(lit(1)).cast("double").as("d")))
     // under noDangling every node has an out-edge, so deg's key set IS the
     // node set — the endpoint-union distinct (a second shuffle over the
     // edge relation, plus its checkpoint and count) exists only for the
@@ -78,7 +76,7 @@ object PageRank {
     val (nodes, n) =
       if (noDangling) (deg.select(col("src").as("node")), degCount.toDouble)
       else {
-        val (nd, nc) = org.apache.spark.sql.GraftPlanShim.localCheckpointWithCount(
+        val (nd, nc) = Freeze.counted(
           e.select(col("src").as("node"))
             .unionByName(e.select(col("dst").as("node")))
             .distinct())
@@ -150,7 +148,7 @@ object PageRank {
       // re-computation of one uncheckpointed level is cheaper than its
       // block write + job boundary.
       if (iter % 2 == 0 || iter == iterations)
-        ranks = ranks.localCheckpoint(eager = false)
+        ranks = Freeze.deferred(ranks)
     }
     ranks
   }

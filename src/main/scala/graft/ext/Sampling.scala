@@ -75,19 +75,17 @@ object Sampling {
     * Shape at 100 TB: the fence selection's two bounded-state actions
     * over `df`, then ONE shuffle-free scan (binary-search tier + digest
     * compare, both codegen'd). Same multi-action determinism contract as
-    * `equiDepthHistogram` — pass `stabilize = true` for nondeterministic
-    * upstreams.
+    * `equiDepthHistogram` — a caller with a nondeterministic upstream runs
+    * `Freeze(df)` on it first.
     *
     * @return surviving rows of `df` plus a `bucket` column (0 = lowest
     *         scores), in the `rates` tier order
     */
-  def qualityBucketSample(df0: DataFrame, scoreCol: String, keyCol: String,
-                          rates: Seq[Double], salt: String = "",
-                          stabilize: Boolean = false): DataFrame = {
+  def qualityBucketSample(df: DataFrame, scoreCol: String, keyCol: String,
+                          rates: Seq[Double], salt: String = ""): DataFrame = {
     require(rates.nonEmpty && rates.forall(r => r >= 0.0),
       "rates must be non-negative, one per tier")
     val k = rates.length
-    val df = if (stabilize) df0.localCheckpoint() else df0
     val probs = (1 until k).map(j => j.toDouble / k)
     val fences =
       if (probs.isEmpty) Seq.empty

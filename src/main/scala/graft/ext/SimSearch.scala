@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Freeze, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (SURVEY.md §2b).
@@ -339,11 +339,10 @@ object SimSearch {
     * empty result stands and the oracle fails loud — correct: that is a
     * quality collapse no parameter bump explains.
     *
-    * Both branches return a materialized (`localCheckpoint`'d) frame —
-    * the symmetric-contract discipline from the minhash twin; the
-    * abandoned fast frame's blocks are freed blocking-ly before the rerun
-    * allocates. `safeApprox` is by-name: the safe pipeline is only built
-    * when escalation fires.
+    * Both branches return a frozen frame and the abandoned fast frame's
+    * blocks are freed before the rerun allocates ([[Freeze.escalating]],
+    * shared with the minhash twin). `safeApprox` is by-name: the safe
+    * pipeline is only built when escalation fires.
     *
     * PRECONDITION (since round 14): `floor` must be > 0. A floor of 0 made
     * the recall filter vacuous, so an empty output could only mean "zero
@@ -364,23 +363,18 @@ object SimSearch {
     require(floor > 0.0,
       s"recallGateAdaptive: floor must be > 0 (got $floor) - at floor <= 0 " +
       "an empty output cannot be read as a recall miss; use recallGate directly")
-    // checkpoint + count in ONE pass (the eager checkpoint already runs a
-    // counting action) — a separate isEmpty would pay a second job
-    val (fast, n) = org.apache.spark.sql.GraftPlanShim.localCheckpointWithCount(
-      recallGate(corpus, probes, fastApprox, idCol, vecCol, k, floor))
-    if (n > 0L) (fast, false)
-    // empty PROBES would read as a recall miss and build the safe pipeline
-    // for a false diagnosis; the extra probes job runs only on this
-    // already-rare empty-result path, never on the serving path
-    else if (probes.isEmpty) (fast, false)
-    else {
-      org.apache.spark.sql.GraftPlanShim.unpersistLocalCheckpoint(fast, blocking = true)
+    // the freeze's own count is the emptiness check (the eager freeze
+    // already runs a counting action) — a separate isEmpty would pay a
+    // second job. Empty PROBES would read as a recall miss and build the
+    // safe pipeline for a false diagnosis; the extra probes job runs only
+    // on this already-rare empty-result path, never on the serving path.
+    Freeze.escalating(recallGate(corpus, probes, fastApprox, idCol, vecCol, k, floor)) {
+      (_, n) => n == 0 && !probes.isEmpty
+    }(
       // NOTE the safe rerun rebuilds the bruteForceTopK truth — deliberate:
       // sharing it across configs (the Dedup twin's `sets` pattern) would
-      // need an eager truth checkpoint on the COMMON path, taxing every
+      // need an eager truth freeze on the COMMON path, taxing every
       // healthy run with an extra job to cheapen the drift-only rerun.
-      (recallGate(corpus, probes, safeApprox, idCol, vecCol, k, floor)
-        .localCheckpoint(), true)
-    }
+      recallGate(corpus, probes, safeApprox, idCol, vecCol, k, floor))
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Freeze}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,9 +41,8 @@ object IndexOps {
     * scans it twice within one job): `df` must be deterministic across actions —
     * parquet scans and pure transforms are; `rand()`, unstable sampling, or
     * a source mutating between actions are not, and would silently gap or
-    * duplicate indices. For such inputs pass `stabilize = true`, which
-    * materializes the bucketed relation once (localCheckpoint) and derives
-    * all three passes from the frozen copy.
+    * duplicate indices. A caller with such an input runs `Freeze(df)` on
+    * it first, so all three passes read the same frozen rows.
     */
   /** `relativeError` only skews bucket BALANCE (a 0.01 error on a 1/64
     * boundary misplaces ≤1% of rows into the neighbor bucket), never the
@@ -52,16 +51,8 @@ object IndexOps {
     * first pass for no output difference.
     */
   def globalIndex(df: DataFrame, orderCol: String, outName: String = "idx",
-                  numBuckets: Int = 64, relativeError: Double = 0.01,
-                  stabilize: Boolean = false): DataFrame = {
+                  numBuckets: Int = 64, relativeError: Double = 0.01): DataFrame = {
     require(numBuckets >= 1, "numBuckets must be >= 1")
-    if (stabilize) {
-      // freeze ONCE up front: the sketch, the counts and the final pass all
-      // read the same materialized rows, so a non-deterministic input
-      // cannot disagree with itself between actions
-      return globalIndex(df.localCheckpoint(), orderCol, outName,
-        numBuckets, relativeError, stabilize = false)
-    }
     // phase 1: boundary sketch. Distinct-sorted; duplicate quantiles (heavy
     // hitters / tiny inputs) would only create empty buckets, drop them.
     val probs = (1 until numBuckets).map(_.toDouble / numBuckets)
@@ -147,15 +138,14 @@ object IndexOps {
     // cap, so a gate-scale vocab stops paying dozens of near-empty shuffle
     // partitions (each a task launch + window sort) while a 10^8-row term
     // universe keeps the full numBuckets-way spread.
-    val (frozen, n) = org.apache.spark.sql.GraftPlanShim.localCheckpointWithCount(df)
+    val (frozen, n) = Freeze.counted(df)
     val buckets = math.max(1, math.min(numBuckets,
       math.ceil(n.toDouble / rowsPerBucket).toInt))
-    val bucketed = frozen
+    val bucketed = Freeze(frozen
       .repartitionByRange(buckets, order: _*)
-      // spark_partition_id() is deterministic WITHIN the frozen copy below;
-      // it is only ever read post-checkpoint
-      .withColumn("__gx_bucket", spark_partition_id())
-      .localCheckpoint()
+      // spark_partition_id() is deterministic WITHIN the frozen copy;
+      // it is only ever read post-freeze
+      .withColumn("__gx_bucket", spark_partition_id()))
     val wOff = Window.orderBy(col("__gx_bucket").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = bucketed.groupBy("__gx_bucket").count()

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Freeze}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -63,7 +63,7 @@ object Outliers {
                   k: Double, roundTo: Int = 4,
                   boundedState: Boolean = false): DataFrame = {
     val v = col(valueCol)
-    // NOTE: no localCheckpoint of DF here even though three consumers re-run
+    // NOTE: no Freeze of DF here even though three consumers re-run
     // the upstream plan — measured at sf0.1 the eager materialization costs
     // MORE than re-scanning a pruned parquet branch (checkpoint breaks
     // whole-stage fusion and blocks). Callers with an expensive upstream
@@ -72,8 +72,7 @@ object Outliers {
     // without it the med machinery re-executes inside every mad subtree.
     def fences(in: DataFrame, value: Column, out: String): DataFrame =
       if (boundedState)
-        QuantileSelect.groupPercentile(in, groupCols, value, 0.5, out)
-          .localCheckpoint()
+        Freeze(QuantileSelect.groupPercentile(in, groupCols, value, 0.5, out))
       else in.groupBy(groupCols.map(col): _*)
         .agg(graft.functions.PercentileCompact
           .percentileCompact(value, 0.5).as(out))
@@ -106,11 +105,11 @@ object Outliers {
     require(0 <= pLo && pLo < pHi && pHi <= 1, "need 0 <= pLo < pHi <= 1")
     val fences =
       if (boundedState)
-        QuantileSelect.groupPercentile(df, groupCols, col(valueCol), pLo, "lo")
+        // one row per group; freeze so the med machinery doesn't
+        // re-execute inside every consumer subtree
+        Freeze(QuantileSelect.groupPercentile(df, groupCols, col(valueCol), pLo, "lo")
           .join(QuantileSelect.groupPercentile(df, groupCols, col(valueCol),
-            pHi, "hi"), groupCols)
-          .localCheckpoint() // one row per group; freeze so the med machinery
-                             // doesn't re-execute inside every consumer subtree
+            pHi, "hi"), groupCols))
       else df.groupBy(groupCols.map(col): _*)
         .agg(graft.functions.PercentileCompact
           .percentileCompact(col(valueCol), Seq(pLo, pHi)).as("__f"))

@@ -94,15 +94,11 @@ object Profile {
     * (sketch; counts+band) — `df` must be deterministic across actions.
     * Parquet scans and pure transforms are; `rand()`-derived columns or
     * unstable sampling are NOT and would yield fences that disagree between
-    * the two passes. For such inputs pass `stabilize = true`, which
-    * materializes `df` once (localCheckpoint) and derives every pass from
-    * the frozen copy — the same escape hatch as
-    * [[IndexOps.globalIndex]]'s `stabilize`.
+    * the two passes. A caller with such an input runs `Freeze(df)` on it
+    * first, so every pass reads the same frozen rows.
     */
-  def equiDepthHistogram(df0: DataFrame, valueCol: String, b: Int,
-                         stabilize: Boolean = false): DataFrame = {
+  def equiDepthHistogram(df: DataFrame, valueCol: String, b: Int): DataFrame = {
     require(b >= 2, "need at least 2 buckets")
-    val df = if (stabilize) df0.localCheckpoint() else df0
     val probs = (1 until b).map(j => j.toDouble / b)
     QuantileSelect.selectWithCounts(df, valueCol, probs) match {
       case Some((_, _, 0L)) =>

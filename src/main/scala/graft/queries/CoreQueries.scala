@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Freeze, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1358,14 +1358,13 @@ object CoreQueries {
         // the tiny merge stages); pin requires materializing inside it.
         val li = Tables.lineitem(spark, dir)
         withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
-          li.groupBy("l_returnflag")
+          Freeze(li.groupBy("l_returnflag")
             .agg(count_distinct(col("l_partkey")).as("n_distinct"),
               approx_count_distinct(col("l_partkey"), 0.05)
                 .as("approx_l_partkey_count"))
             .filter(abs(col("approx_l_partkey_count") - col("n_distinct"))
               <= col("n_distinct") * 0.15)
-            .select("l_returnflag", "n_distinct")
-            .localCheckpoint()
+            .select("l_returnflag", "n_distinct"))
         }
       }),
 
@@ -1415,11 +1414,10 @@ object CoreQueries {
             Seq("l_returnflag"))
           val exact = li.groupBy("l_returnflag")
             .agg(count_distinct(col("l_partkey")).as("n_distinct"))
-          exact.join(merged, Seq("l_returnflag"))
+          Freeze(exact.join(merged, Seq("l_returnflag"))
             .filter(abs(col("approx_distinct") - col("n_distinct"))
               <= col("n_distinct") * 0.15)
-            .select("l_returnflag", "n_distinct")
-            .localCheckpoint()
+            .select("l_returnflag", "n_distinct"))
         }
       }),
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.Freeze
 import org.apache.spark.sql.functions._
 
 import graft.Posture.withConfs
@@ -944,14 +945,16 @@ object ExtQueries {
         val probes = emb.filter(col("vec_id") < 10)
         val idx = SimSearch.buildIvfIndex(emb, "vec_id", "embedding", nlist = 16)
         val path = s"${graft.Scratch.root}/graft_ivf_index_${ProcessHandle.current().pid()}"
-        SimSearch.writeIvfIndex(idx, path)
-        val loaded = SimSearch.readIvfIndex(spark, path)
         // materialize the (probes×k)-row answer, then DELETE the on-disk
-        // index — unlike the k1/k2 leak-one-copy artifacts this one holds
-        // a corpus copy, and Scratch.root may be RAM-backed (/dev/shm)
-        val approx = SimSearch.ivfTopKIndexed(loaded, probes, "vec_id", "embedding",
-          k = 5, nprobe = 8).localCheckpoint() // 16/8, floor 0.6: see ann_topk_ivf
-        graft.io.ParquetIO.deleteRecursively(new java.io.File(path))
+        // index, also when the write, the read or the freeze throws —
+        // unlike the k1/k2 leak-one-copy artifacts this one holds a corpus
+        // copy, and Scratch.root may be RAM-backed (/dev/shm)
+        val approx =
+          try {
+            SimSearch.writeIvfIndex(idx, path)
+            Freeze(SimSearch.ivfTopKIndexed(SimSearch.readIvfIndex(spark, path), probes,
+              "vec_id", "embedding", k = 5, nprobe = 8)) // 16/8, floor 0.6: see ann_topk_ivf
+          } finally graft.io.ParquetIO.deleteRecursively(new java.io.File(path))
         // safe re-query serves from the IN-MEMORY index (`idx`): the on-disk
         // copy is already deleted, and SimSearchSpec pins the persisted path
         // row-identical to the direct one, so the escape hatch answers the

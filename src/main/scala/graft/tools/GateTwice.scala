@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.Freeze
+
 /** Generic cold/warm split for ANY registry gate: runs
   * `SparkEntry.queries(name)` twice in one JVM against `dir`, with the
   * standard blocking cleanup between passes — the decomposition that
@@ -48,11 +50,11 @@ object GateTwice {
       val t0 = System.nanoTime()
       val rows = gate(spark, dir).queryExecution.toRdd.count()
       val sec = (System.nanoTime() - t0) / 1e9
-      // BLOCKING unpersist + GC between passes: non-blocking returns before
+      // BLOCKING release + GC between passes: non-blocking returns before
       // the blocks are freed, so the next pass would run under this pass's
       // storage pressure (at 10x data in-sequence pagerank read 34.4 s vs
       // 11.8 s isolated, measured round 12 — see ScaleCheck.run)
-      graft.Bench.unpersistAll(spark, blocking = true)
+      Freeze.releaseAll(spark, blocking = true)
       System.gc()
       println(f"[gatetwice] pass_$pass $sec%.2f s ($rows rows)")
     }

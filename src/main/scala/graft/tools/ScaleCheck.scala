@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Freeze, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scaling harness: derives a 10× corpus (sf1) from the driver's sf0.1
@@ -168,7 +168,7 @@ object ScaleCheck {
     picked.foreach { case (name, fn) =>
       try fn(spark, warmDir).queryExecution.toRdd.count(): Unit
       catch { case scala.util.control.NonFatal(_) => () }
-      graft.Bench.unpersistAll(spark, blocking = false)
+      Freeze.releaseAll(spark, blocking = false)
     }
     val results = picked.map { case (name, fn) =>
       val t0 = System.nanoTime()
@@ -177,13 +177,13 @@ object ScaleCheck {
         catch { case scala.util.control.NonFatal(e) =>
           (0L, Some(s"${e.getClass.getSimpleName}: ${e.getMessage}")) }
       val sec = (System.nanoTime() - t0) / 1e9
-      // BLOCKING unpersist + GC between families: non-blocking returns
+      // BLOCKING release + GC between families: non-blocking returns
       // before the blocks are actually freed, so a later family runs under
       // the earlier family's storage pressure — at 10x data this inflated
       // in-sequence pagerank 3x vs the same query isolated (34.4 s vs
       // 11.8 s, measured round 12); the timed number must be the family's
-      // own cost, as Bench's per-query unpersist established suite-wide
-      graft.Bench.unpersistAll(spark, blocking = true)
+      // own cost, as Bench's per-query release established suite-wide
+      Freeze.releaseAll(spark, blocking = true)
       System.gc()
       System.err.println(f"[scalecheck] $name%-24s ${sec}%8.2f s  $rows rows ${err.getOrElse("")}")
       (name, sec, rows, err)

@@ -2,49 +2,14 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge into the two `private[sql]` seams a library-defined operator
-  * needs: building a DataFrame from a custom [[LogicalPlan]] node. Lives in
+/** Bridge into the `private[sql]` seam a library-defined operator needs:
+  * building a DataFrame from a custom [[LogicalPlan]] node. Lives in
   * `org.apache.spark.sql` for visibility only — no Spark behavior is
   * modified. (Strategy injection needs no shim: `spark.experimental
-  * .extraStrategies` is public API.)
+  * .extraStrategies` is public API. Freezing intermediates uses the same
+  * visibility, in [[Freeze]].)
   */
 object GraftPlanShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** `df.localCheckpoint()` fused with its row count: the eager checkpoint
-    * already runs a counting action to force materialization, so callers
-    * that size-gate on the checkpointed relation's cardinality (broadcast
-    * vs shuffle path choices) were paying a SECOND job for a number the
-    * first one discarded. Same incantation as Dataset.checkpoint —
-    * row-copy, localCheckpoint, count, LogicalRDD.fromDataset — returning
-    * the count alongside the checkpointed frame.
-    */
-  def localCheckpointWithCount(df: DataFrame): (DataFrame, Long) = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    val n = rdd.count()
-    val logical = execution.LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)
-    (classic.Dataset.ofRows(ds.sparkSession, logical), n)
-  }
-
-  /** Free the storage blocks behind a `localCheckpoint()`'d frame.
-    * `Dataset.unpersist` only talks to the cache manager, which never sees
-    * a checkpointed RDD — the blocks live on the RDD itself, reachable
-    * through the plan's [[execution.LogicalRDD]] leaves. No-op on frames
-    * that aren't checkpoint-backed.
-    *
-    * `blocking = true` when the caller immediately re-allocates (e.g. an
-    * escalation rerun): non-blocking frees may not land before the next
-    * job's blocks arrive, and the transient double-occupancy pressures
-    * execution memory (the same effect that inflated ScaleCheck's
-    * in-sequence timings 3×). Default stays non-blocking for the
-    * end-of-query Bench cleanup path where nothing follows immediately.
-    */
-  def unpersistLocalCheckpoint(df: DataFrame, blocking: Boolean = false): Unit =
-    df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed.foreach {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking): Unit
-      case _ => ()
-    }
 }

@@ -13,16 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * one scoped primitive, `Posture.withConfs`.
   */
 class PostureSpec extends AnyFunSuite {
+  import PostureSpec._
 
-  private val mainRoot = Paths.get("src/main/scala")
   private val posture = mainRoot.resolve("graft/Posture.scala")
-
-  private def mainSources: Seq[Path] = {
-    assert(Files.isDirectory(mainRoot), s"run from the repository root (no $mainRoot)")
-    val walk = Files.walk(mainRoot)
-    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-    finally walk.close()
-  }
 
   test("only graft/Posture.scala reads the environment") {
     val envRead = "sys\\.env|System\\.getenv".r
@@ -52,5 +45,17 @@ class PostureSpec extends AnyFunSuite {
       "SPARK_GRAFT_AQE", "SPARK_GRAFT_AQE_MIN_PART", "SPARK_GRAFT_SHUFFLE_PARTS",
       "SPARK_GRAFT_ROCKSDB_CHANGELOG", "SPARK_GRAFT_LOCAL_FS",
       "SPARK_GRAFT_CKPT_FM", "SPARK_GRAFT_COMMITTER_V"))
+  }
+}
+
+object PostureSpec {
+  val mainRoot: Path = Paths.get("src/main/scala")
+
+  /** Every Scala source under `src/main/scala`, for the one-module rules. */
+  def mainSources: Seq[Path] = {
+    assert(Files.isDirectory(mainRoot), s"run from the repository root (no $mainRoot)")
+    val walk = Files.walk(mainRoot)
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
   }
 }

@@ -1,9 +1,9 @@
 package graft
-import org.apache.spark.sql.{Freeze, SparkSession}
 object Bench {
 
   /** `s` as a JSON string literal: quotes, backslashes and control
-    * characters escaped. The program's one JSON escaper. */
+    * characters escaped. The program's one JSON escaper (oracle_sql.json
+    * too: a tab or CR in oracle SQL would break its json.load). */
   private[graft] def jsonStr(s: String): String = {
     val sb = new StringBuilder("\"")
     s.foreach {
@@ -15,9 +15,6 @@ object Bench {
     sb.append("\"").toString
   }
 
-  /** One timed gate: wall seconds, and the error text if it threw. */
-  final case class GateResult(name: String, sec: Double, error: Option[String])
-
   /** The two artifact lines, full then compact. The compact line is printed
     * LAST: the driver keeps only the final ~2000 chars of stdout, and the
     * full line (~4 KB at 184 queries) gets truncated mid-object there. It
@@ -28,7 +25,7 @@ object Bench {
     * line was re-logged as "[info] {…}" with a "[success]" trailer, so no
     * stdout line ever started with '{'). Any errored gate poisons `value`
     * to -1 on both lines: a failure must never read as a fast total. */
-  def artifactLines(sfDir: String, results: Seq[GateResult], warmupSec: Double,
+  def artifactLines(sfDir: String, results: Seq[Gates.Result], warmupSec: Double,
                     cgN: Long, cgTimed: Long, cgMs: Long): (String, String) = {
     def r3(v: Double): String = (math.rint(v * 1000) / 1000).toString
     val qs = results.map { r =>
@@ -55,16 +52,9 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // optional CLI args = exact query names to run (iteration aid); no args
-    // = full suite. Checked BEFORE the session is built, so a typo fails in
-    // milliseconds instead of after the whole warm-up.
-    val wanted = args.toSet
-    val unknown = wanted.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, // a typo must not yield a silently-empty "successful" bench
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}" +
-        " — positional args are exact query-name filters; the SF dir is" +
-        " env-only: SPARK_GRAFT_SF_DIR=/path/to/sfN (a path passed as an" +
-        " arg lands here)")
+    // optional CLI args = exact gate names to run, in name order like the
+    // full suite; the SF dir is env-only (SPARK_GRAFT_SF_DIR)
+    val selected = Gates.pick(args.toSeq).sortBy(_._1)
     val sfDir = Posture.sfDir
     val spark = Posture.session(Posture.cpus(4), Posture.benchConfs)
     spark.sparkContext.setLogLevel("WARN")
@@ -119,15 +109,8 @@ object Bench {
       // janino cache key differs per session: a pass on newSession()s left
       // ~65 such compiles (dedup, corpus, ANN, BPE families) to the timed
       // loop (measured at sf0.1 on 4 cores: codegen_compiles_timed 519-523
-      // vs 242-246 on the measured session). Query failures stay swallowed — a
-      // warm-up failure must never mask the measured run — but only
-      // NON-fatal ones: an OutOfMemoryError or other VirtualMachineError
-      // here means the heap entering the timed loop is hosed.
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try fn(spark, warmSf.getAbsolutePath).queryExecution.toRdd.count(): Unit
-        catch { case scala.util.control.NonFatal(_) => () }
-        Freeze.releaseAll(spark, blocking = false)
-      }
+      // vs 242-246 on the measured session).
+      Gates.warm(spark, Gates.registry, warmSf.getAbsolutePath)
     }
     // ONE full GC at the warm/measure boundary (distinct from the rejected
     // per-query GC, which evicted hot code between timed queries): the
@@ -135,39 +118,14 @@ object Bench {
     // that otherwise forces the first collections INSIDE the timed loop.
     System.gc()
     val warmupSec = (System.nanoTime() - w0) / 1e9
-    // deterministic (sorted) execution order so JVM warm-up lands on the
-    // same first query every round and per-query numbers compare across runs
-    val selected =
-      if (wanted.isEmpty) SparkEntry.queries.toSeq
-      else SparkEntry.queries.filter(q => wanted(q._1)).toSeq
     // compiles inside the timed loop: with the registry warm pass on, only
     // the stream gates (watermark literals, ~200 at sf0.1) and a few
     // data-sized plans should compile here — a bigger number means
     // warm-pass plans and timed plans diverge (suite tax)
     val cgSrc = org.apache.spark.metrics.source.CodegenMetrics
     val cgBefore = cgSrc.METRIC_COMPILATION_TIME.getCount
-    val results = selected.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      // a failure must be VISIBLE, never a fast fake timing: record the
-      // error message per query and poison the total.
-      // Materialize via the compiled plan's own RDD, NOT .count(): a count
-      // on top lets Catalyst prune every unreferenced projection, so
-      // map-only queries (p1, p2, txt_redact_pii, emb_quantize_int8, …)
-      // were being timed as bare scans while the DuckDB oracle pays for a
-      // full fetchall. toRdd evaluates every output column of the plan as
-      // declared — the same work Verify pays — without adding hash overhead.
-      val err = try {
-        fn(spark, sfDir).queryExecution.toRdd.count(): Unit
-        None
-      } catch {
-        case e: Throwable => Some(s"${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      // No per-query System.gc(): the same-weather A/B measured 121.4 s
-      // without vs 137.7 s with — full collections evict JIT-hot code and
-      // cached blocks that later queries re-pay for.
-      Freeze.releaseAll(spark, blocking = false)
-      GateResult(name, elapsed, err)
+    val results = selected.map { case (name, gate) =>
+      Gates.time(spark, name, gate, sfDir, isolate = false)
     }
     // Janino-compile telemetry: compile count and cumulative ms over the
     // whole JVM (warm-up included) — the deterministic counterpart to the

@@ -21,16 +21,14 @@ package graft
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val names = args.headOption.map(_.split(",").toSeq)
-      .getOrElse(sys.error("usage: Explain <queryName>[,<name>...] [sfDir]"))
+    val picked = Gates.pick(args.headOption.map(_.split(",").toSeq)
+      .getOrElse(sys.error("usage: Explain <queryName>[,<name>...] [sfDir]")))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val spark = Posture.session(Posture.cpus(4), Posture.benchConfs)
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query '$name'; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
+    picked.foreach { case (name, gate) =>
       println(s"===== $name =====")
-      fn(spark, sfDir).explain("formatted")
+      gate(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -2354,7 +2354,7 @@ object ExtQueries {
     // 100000: both engines compute it from the same relation, so node ids
     // stay hash-identical, and the gate is safe on ScaleCheck's tiled dirs
     // (whose custkeys exceed any sf0.1-era constant) — the generic
-    // cold/warm tool (GateTwice) can now measure this family too.
+    // cold/warm tool (`ScaleCheck twice`) can now measure this family too.
     GQ("graph_pagerank",
       Some(graft.ext.PageRank.pageRankOracleSql(
         """SELECT o_custkey AS src, l_suppkey + (SELECT max(o_custkey) + 1 FROM orders) AS dst

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Freeze, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.Gates
 
 /** Scaling harness: derives a 10× corpus (sf1) from the driver's sf0.1
   * testdata and times the heavy operator families on both, to falsify (or
@@ -29,12 +31,13 @@ import org.apache.spark.sql.functions._
   *     fair linear-scaling input for PageRank.
   *
   * `gen <srcDir> <dstDir> [tiles]` writes the derived tables;
-  * `run <sfDir> [csvNames]` times the heavy families once each (same
-  * forcing as Bench: `queryExecution.toRdd.count()`) and prints one JSON
-  * line per family — every family, PageRank included, runs the REGISTRY
-  * gate verbatim (the gate derives its supplier offset from
-  * max(o_custkey) and data-sizes its shuffle partitions, so tiled key
-  * ranges are safe since round 15).
+  * `run <sfDir> [csvNames]` times the heavy families once each (through
+  * [[graft.Gates]], as Bench does) and prints one JSON line per family —
+  * every family, PageRank included, runs the REGISTRY gate verbatim (the
+  * gate derives its supplier offset from max(o_custkey) and data-sizes its
+  * shuffle partitions, so tiled key ranges are safe since round 15);
+  * `twice <gate> <dir> [shuffleParts=32] [passes=2]` splits ANY registry
+  * gate into cold and warm passes in one JVM (see [[twice]]).
   */
 object ScaleCheck {
 
@@ -55,14 +58,24 @@ object ScaleCheck {
     s
   }
 
-  private val usage = "usage: ScaleCheck gen <src> <dst> [tiles] | run <dir> [names]"
+  private val usage = "usage: ScaleCheck gen <src> <dst> [tiles] | run <dir> [names]" +
+    " | twice <gate> <dir> [shuffleParts=32] [passes=2]"
+
+  // a typo'd count fails at the usage line, not deep inside Spark conf
+  // parsing; passes=0 would measure nothing and exit 0, which a wrapper
+  // would read as a completed measurement
+  private def posInt(v: String, what: String): Int =
+    v.toIntOption.filter(_ > 0).getOrElse(sys.error(s"$what must be a positive integer (got '$v'); $usage"))
 
   /** Usage errors throw, so the JVM exits non-zero before any session. */
   def main(args: Array[String]): Unit = args.toSeq match {
     case Seq("gen", src, dst) => gen(src, dst, 10)
     case Seq("gen", src, dst, tiles) if tiles.toIntOption.exists(_ > 0) => gen(src, dst, tiles.toInt)
-    case Seq("run", dir) => run(dir, None)
-    case Seq("run", dir, names) => run(dir, Some(names.split(",").toSeq))
+    case Seq("run", dir) => run(dir, Nil)
+    case Seq("run", dir, names) => run(dir, names.split(",").toSeq)
+    case Seq("twice", name, dir, rest @ _*) if rest.size <= 2 =>
+      twice(name, dir, rest.lift(0).fold(32)(posInt(_, "shuffleParts")),
+        rest.lift(1).fold(2)(posInt(_, "passes")))
     case _ => sys.error(usage)
   }
 
@@ -135,60 +148,54 @@ object ScaleCheck {
     * body; the offset DERIVATION adds one single-column max over orders
     * (≲0.5 s at 100×, proportionally less below) — a cost the r13/r14
     * series did not pay, bounded well inside the weather noise band, and
-    * measured-inclusive by the round-15 GateTwice points.
+    * measured-inclusive by the round-15 cold/warm ([[twice]]) points.
     */
-  private val families = Seq("dedup_ngram_jaccard", "dedup_minhash_lsh",
-    "dedup_substring_spans", "corpus_clean", "ann_topk_ivf_persist", "graph_pagerank")
-
-  /** The registry gates of the families named in `only` (all when None); an
-    * unknown name fails here, listing the known ones, before any session. */
-  private[tools] def pick(only: Option[Seq[String]]): Seq[(String, (SparkSession, String) => DataFrame)] = {
-    val unknown = only.getOrElse(Nil).filterNot(families.contains)
-    if (unknown.nonEmpty)
-      sys.error(s"unknown families ${unknown.mkString("'", "', '", "'")}; known: ${families.mkString(", ")}")
-    families.filter(n => only.forall(_.contains(n))).map(n => n -> graft.SparkEntry.queries(n))
-  }
+  private[tools] def families = Gates.pick(Seq("dedup_ngram_jaccard", "dedup_minhash_lsh",
+    "dedup_substring_spans", "corpus_clean", "ann_topk_ivf_persist", "graph_pagerank"))
 
   /** The one JSON line [[run]] prints: the dir, then per family its
     * seconds, rows and (if it failed) the escaped error message. */
-  private[tools] def resultLine(dir: String,
-                                results: Seq[(String, Double, Long, Option[String])]): String = {
+  private[tools] def resultLine(dir: String, results: Seq[Gates.Result]): String = {
     import graft.Bench.jsonStr
-    val fields = results.map { case (n, s, r, e) =>
-      s"""${jsonStr(n)}:{"sec":${f"$s%.2f"},"rows":$r${e.fold("")(m => ""","error":""" + jsonStr(m))}}"""
+    val fields = results.map { r =>
+      s"""${jsonStr(r.name)}:{"sec":${f"${r.sec}%.2f"},"rows":${r.rows}${r.error.fold("")(m => ""","error":""" + jsonStr(m))}}"""
     }
     (s""""dir":${jsonStr(dir)}""" +: fields).mkString("{", ",", "}")
   }
 
-  def run(dir: String, only: Option[Seq[String]]): Unit = {
-    val picked = pick(only)
+  /** Time the families named in `names` (all when empty) on `dir`, after
+    * one untimed warm pass at sf0.001 that compiles their plans, so the
+    * timed numbers measure execution, as Bench's registry warm pass does. */
+  def run(dir: String, names: Seq[String]): Unit = {
+    val picked = Gates.pick(names, families)
     val spark = session(32)
-    // one untimed warm pass per family at sf0.001 compiles the plans so the
-    // timed numbers measure execution, as Bench's registry warm pass does
-    picked.foreach { case (name, fn) =>
-      try fn(spark, warmDir).queryExecution.toRdd.count(): Unit
-      catch { case scala.util.control.NonFatal(_) => () }
-      Freeze.releaseAll(spark, blocking = false)
-    }
-    val results = picked.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val (rows, err) =
-        try (fn(spark, dir).queryExecution.toRdd.count(), None)
-        catch { case scala.util.control.NonFatal(e) =>
-          (0L, Some(s"${e.getClass.getSimpleName}: ${e.getMessage}")) }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // BLOCKING release + GC between families: non-blocking returns
-      // before the blocks are actually freed, so a later family runs under
-      // the earlier family's storage pressure — at 10x data this inflated
-      // in-sequence pagerank 3x vs the same query isolated (34.4 s vs
-      // 11.8 s, measured round 12); the timed number must be the family's
-      // own cost, as Bench's per-query release established suite-wide
-      Freeze.releaseAll(spark, blocking = true)
-      System.gc()
-      System.err.println(f"[scalecheck] $name%-24s ${sec}%8.2f s  $rows rows ${err.getOrElse("")}")
-      (name, sec, rows, err)
+    Gates.warm(spark, picked, warmDir)
+    val results = picked.map { case (name, gate) =>
+      val r = Gates.time(spark, name, gate, dir, isolate = true)
+      System.err.println(f"[scalecheck] $name%-24s ${r.sec}%8.2f s  ${r.rows} rows ${r.error.getOrElse("")}")
+      r
     }
     println(resultLine(dir, results))
     spark.stop()
+  }
+
+  /** Cold/warm split for ANY registry gate, on [[run]]'s session and
+    * isolation: `passes` runs in one JVM against `dir` — the decomposition
+    * that closed the 100× pagerank question in round 13 (262 s cold →
+    * 73.4 s warm). Pass 1 carries cold-start (page cache for the scale
+    * tiles, JIT, parquet footers) plus whatever throttling the window
+    * dealt; pass 2 is the number comparable across scales. Any failed pass
+    * exits non-zero. */
+  def twice(name: String, dir: String, parts: Int, passes: Int): Unit = {
+    val Seq((_, gate)) = Gates.pick(Seq(name))
+    val spark = session(parts)
+    println(f"[twice] gate=$name dir=$dir parts=$parts heap=${Runtime.getRuntime.maxMemory() / (1L << 30)}%dg")
+    val results = (1 to passes).map { pass =>
+      val r = Gates.time(spark, name, gate, dir, isolate = true)
+      println(f"[twice] pass_$pass ${r.sec}%.2f s (${r.rows} rows)${r.error.fold("")(" " + _)}")
+      r
+    }
+    spark.stop()
+    if (results.exists(_.error.nonEmpty)) sys.exit(1)
   }
 }

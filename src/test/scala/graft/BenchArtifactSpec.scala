@@ -9,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * JSON escaping of gate names and error messages.
   */
 class BenchArtifactSpec extends AnyFunSuite {
-  import Bench.GateResult
+  import Gates.Result
 
-  private def lines(results: Seq[GateResult]): (String, String) =
+  private def lines(results: Seq[Result]): (String, String) =
     Bench.artifactLines("/data/sf0.1", results, warmupSec = 42.5,
       cgN = 1000L, cgTimed = 3L, cgMs = 9000L)
 
@@ -19,9 +19,9 @@ class BenchArtifactSpec extends AnyFunSuite {
 
   test("one errored gate poisons value to -1 and counts one error on both lines") {
     val (full, compact) = lines(Seq(
-      GateResult("a1", 0.5, None),
-      GateResult("b2", 0.1, Some("RuntimeException: boom")),
-      GateResult("c3", 1.25, None)))
+      Result("a1", 0.5, 0L, None),
+      Result("b2", 0.1, 0L, Some("RuntimeException: boom")),
+      Result("c3", 1.25, 0L, None)))
     for (line <- Seq(full, compact)) {
       assert(line.endsWith(""","value":-1.0}"""), line)
       assert(line.contains(""""errors":1,"""), line)
@@ -35,7 +35,7 @@ class BenchArtifactSpec extends AnyFunSuite {
 
   test("a clean suite reports the summed total last") {
     val (full, compact) = lines(Seq(
-      GateResult("a1", 0.5, None), GateResult("c3", 1.25, None)))
+      Result("a1", 0.5, 0L, None), Result("c3", 1.25, 0L, None)))
     for (line <- Seq(full, compact)) {
       assert(line.endsWith(""","value":1.75}"""), line)
       assert(field(line, "errors") === JInt(0))
@@ -45,10 +45,10 @@ class BenchArtifactSpec extends AnyFunSuite {
   }
 
   test("184 gates plus 3 all-control-character errors still fit 1900 chars") {
-    val ok = (1 to 184).map(i => GateResult(f"gate_$i%03d_with_a_long_family_name", i / 10.0, None))
+    val ok = (1 to 184).map(i => Result(f"gate_$i%03d_with_a_long_family_name", i / 10.0, 0L, None))
     // every control char escapes to six chars, the worst case per message
     val ctrl = (0 until 200).map(i => (i % 0x20).toChar).mkString
-    val errs = (1 to 3).map(i => GateResult(s"err_$i", 0.0, Some(ctrl)))
+    val errs = (1 to 3).map(i => Result(s"err_$i", 0.0, 0L, Some(ctrl)))
     val (full, compact) = lines(ok ++ errs)
     assert(full.contains("\\u0001\\u0002"))
     assert(compact.length <= 1900, compact.length)
@@ -65,7 +65,7 @@ class BenchArtifactSpec extends AnyFunSuite {
     val name = "q\"uo\\te"
     val msg = "Err: path C:\\tmp\\x said \"no\"\tthen\nstopped"
     val (full, compact) = lines(Seq(
-      GateResult(name, 2.0, None), GateResult(name + "_err", 0.0, Some(msg))))
+      Result(name, 2.0, 0L, None), Result(name + "_err", 0.0, 0L, Some(msg))))
     assert(field(full, "queries") \ name === JDouble(2.0))
     assert(field(full, "queries") \ (name + "_err") === JString("ERROR " + msg))
     assert(field(compact, "queries") \ name === JDouble(2.0))

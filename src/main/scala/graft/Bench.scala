@@ -87,9 +87,10 @@ object Bench {
     // gate measure the exchange-free join, and the write cost stays
     // visible in warmup_sec.
     graft.queries.CoreQueries.ensureBucketedPair(spark, sfDir)
-    // Run the WHOLE registry once against the smallest testdata scale
-    // (sibling sf0.001 dir). Whole-stage-codegen sources never embed file
-    // paths — only schemas and expression trees — so every stage compiled
+    // Run the selected gates (the WHOLE registry when no name is given)
+    // once against the smallest testdata scale (sibling sf0.001 dir).
+    // Whole-stage-codegen sources never embed file paths — only schemas
+    // and expression trees — so every stage compiled
     // here is a byte-identical janino-cache HIT for the measured sf run;
     // likewise C2 JIT, aggregate/class loading, the streaming engine's
     // state machinery, and catalog/scratch machinery get their one-time
@@ -110,7 +111,7 @@ object Bench {
       // ~65 such compiles (dedup, corpus, ANN, BPE families) to the timed
       // loop (measured at sf0.1 on 4 cores: codegen_compiles_timed 519-523
       // vs 242-246 on the measured session).
-      Gates.warm(spark, Gates.registry, warmSf.getAbsolutePath)
+      Gates.warm(spark, selected, warmSf.getAbsolutePath)
     }
     // ONE full GC at the warm/measure boundary (distinct from the rejected
     // per-query GC, which evicted hot code between timed queries): the

@@ -58,7 +58,8 @@ object Posture {
     // only 2 of 22 regressed, <0.3 s). Its benefits (runtime coalesce, skew
     // splits, join demotion) need cluster-scale shuffles — a 100 TB
     // deployment keeps the default ON; operators never depend on it for
-    // correctness (Verify runs AQE-on).
+    // correctness (Verify runs AQE-on). The daily pipeline's two transform
+    // jobs pin it back on under every posture ([[pipelineConfs]]).
     "spark.sql.adaptive.enabled" -> env("SPARK_GRAFT_AQE").getOrElse("false"),
     // whole-stage codegen stays ON: a 12-query subset suggested compile time
     // dominates at one-shot sf0.1, but the full suite measured the opposite
@@ -166,6 +167,17 @@ object Posture {
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" ->
       env("SPARK_GRAFT_COMMITTER_V").getOrElse("2"),
     localFs)
+
+  /** Scoped confs of the daily pipeline's two transform jobs
+    * (`graft.pipeline.Jobs`), pinned with [[withConfs]] whatever the session
+    * posture. AQE ON there, unlike the gates: a gate's shuffles lose to its
+    * re-planning, but one date's ~1 MB shuffles coalesce from 16 partitions
+    * to 1, which is also the Glue 4 (Spark 3.3) default the reference runs
+    * under. Measured on perfbench `etl_backfill`, together with one
+    * exchange per job and the known-schema raw read: 94 → 31 tasks and
+    * 26 → 6 refined files per steady date, and `cpu_s` 13.0 → 9.4 s
+    * (median of 10 interleaved pairs, 4 cores). */
+  val pipelineConfs: Seq[(String, String)] = Seq("spark.sql.adaptive.enabled" -> "true")
 
   /** Session confs of the correctness dump (`graft.Verify`): engine
     * defaults apart from the partition count, the time zone and the local

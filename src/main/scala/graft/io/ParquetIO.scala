@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, spark_partition_id, xxhash64}
+import org.apache.spark.sql.types.StructType
 
 /** Partitioned parquet sources/sinks (SURVEY.md §2a S4, K1–K2).
   *
@@ -15,10 +16,17 @@ object ParquetIO {
 
   /** S4 — read one (or any) Hive partition by predicate, pruning at the
     * file index. `partitionFilters` e.g. Map("dataproc" -> "20240501").
+    *
+    * A caller that knows the table's schema passes it, data and partition
+    * columns both: the read then types the partition columns as given (no
+    * inference: `dataproc` stays a STRING) and runs no footer-inference job.
+    * None keeps the generic infer-from-footers path.
     */
   def readPartitioned(spark: SparkSession, root: String,
-                      partitionFilters: Map[String, String] = Map.empty): DataFrame = {
-    val base = spark.read.option("basePath", root).parquet(root)
+                      partitionFilters: Map[String, String] = Map.empty,
+                      schema: Option[StructType] = None): DataFrame = {
+    val reader = schema.fold(spark.read)(s => spark.read.schema(s))
+    val base = reader.option("basePath", root).parquet(root)
     partitionFilters.foldLeft(base) { case (df, (k, v)) => df.filter(col(k) === v) }
   }
 
@@ -91,7 +99,7 @@ object ParquetIO {
     */
   def compact(spark: SparkSession, inPath: String, outPath: String,
               targetBytes: Long = 256L * 1024 * 1024,
-              schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
+              schema: Option[StructType] = None): Unit = {
     require(targetBytes > 0)
     val fs = new org.apache.hadoop.fs.Path(inPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Posture
 import graft.io.{Catalog, ParquetIO}
 import graft.ops._
 
@@ -16,7 +17,10 @@ import graft.ops._
   * Differences from the reference, on purpose (SURVEY.md §4 "write
   * amplification"): no repeated count()/show() actions recomputing the plan,
   * no double catalog+path write, agg-join-back realized as one-shuffle
-  * window aggregates.
+  * window aggregates, the full-row dedup (A4) subsumed by the keyed one
+  * (A5). Each transform job plans one exchange and runs with AQE on
+  * ([[graft.Posture.pipelineConfs]]), so a date's small shuffle coalesces
+  * to a task or two and each refined partition gets one file.
   */
 object Jobs {
 
@@ -68,86 +72,97 @@ object Jobs {
   }
 
   /** TransformStocksJob (`transform_stocks_job.py`): read one raw partition
-    * (S4, pruned) → date cast + validity filters (P4/P5) → Portuguese rename
-    * (P2) → per-sector aggregates attached (A1+J2, one shuffle) → lag-window
-    * variation (W1, P12, P7) → two-level partitioned refined write (K2).
+    * (S4, pruned, known schema) → date cast + validity filters (P4/P5) →
+    * Portuguese rename (P2) → per-sector aggregates attached (A1+J2) →
+    * lag-window variation (W1, P12, P7) → two-level partitioned refined
+    * write (K2). Both windows share the one exchange on `setor`.
     */
-  def transformStocks(spark: SparkSession, cfg: Config): Unit = {
-    import spark.implicits._
-    val raw = ParquetIO.readPartitioned(spark, cfg.rawStocks,
-      Map("dataproc" -> cfg.processDate))
+  def transformStocks(spark: SparkSession, cfg: Config): Unit =
+    Posture.withConfs(spark, Posture.pipelineConfs: _*) {
+      import spark.implicits._
+      val raw = ParquetIO.readPartitioned(spark, cfg.rawStocks,
+        Map("dataproc" -> cfg.processDate),
+        Some(Model.stockRawSchema.add("dataproc", StringType)))
 
-    val cleaned = CleanOps.filterValid(
-      CleanOps.castColumns(raw, Map("date" -> DateType, "close" -> DoubleType,
-        "high" -> DoubleType, "low" -> DoubleType, "open" -> DoubleType,
-        "volume" -> LongType)),
-      Seq($"sector".isNotNull, $"close" > 0, $"volume" > 0))
+      val cleaned = CleanOps.filterValid(
+        CleanOps.castColumns(raw, Map("date" -> DateType, "close" -> DoubleType,
+          "high" -> DoubleType, "low" -> DoubleType, "open" -> DoubleType,
+          "volume" -> LongType)),
+        Seq($"sector".isNotNull, $"close" > 0, $"volume" > 0))
 
-    val renamed = CleanOps.renameAll(cleaned, Map(
-      "ticker" -> "codigoAcao", "company" -> "nomeEmpresa", "date" -> "data",
-      "close" -> "precoFechamento", "high" -> "precoMaximo",
-      "low" -> "precoMinimo", "open" -> "precoAbertura",
-      "volume" -> "volumeNegociacao", "sector" -> "setor"))
+      val renamed = CleanOps.renameAll(cleaned, Map(
+        "ticker" -> "codigoAcao", "company" -> "nomeEmpresa", "date" -> "data",
+        "close" -> "precoFechamento", "high" -> "precoMaximo",
+        "low" -> "precoMinimo", "open" -> "precoAbertura",
+        "volume" -> "volumeNegociacao", "sector" -> "setor"))
 
-    val withAggs = JoinOps.withGroupAggregates(renamed, Seq("setor"), Seq(
-      "mediaFechamento" -> avg($"precoFechamento"),
-      "totalVolume" -> sum($"volumeNegociacao")))
+      val withAggs = JoinOps.withGroupAggregates(renamed, Seq("setor"), Seq(
+        "mediaFechamento" -> avg($"precoFechamento"),
+        "totalVolume" -> sum($"volumeNegociacao")))
 
-    // lagDelta computes-and-drops the reference's fechamentoAnterior helper
-    // column internally (the P7 drop at transform_stocks_job.py:198)
-    val withVar = WindowOps.lagDelta(withAggs, Seq("codigoAcao"), Seq($"data".asc),
-      "precoFechamento", "variacaoFechamento")
+      // (setor, codigoAcao) partitions the lag exactly as codigoAcao alone:
+      // the dim join gives each ticker one sector (Model.stockDim's tickers
+      // are unique). With setor in the keys, the sector window's
+      // hashpartitioning(setor) satisfies this window too: one exchange.
+      // lagDelta computes-and-drops the reference's fechamentoAnterior
+      // helper column internally (the P7 drop at transform_stocks_job.py:198)
+      val withVar = WindowOps.lagDelta(withAggs, Seq("setor", "codigoAcao"),
+        Seq($"data".asc), "precoFechamento", "variacaoFechamento")
 
-    ParquetIO.writePartitioned(
-      CleanOps.withProcessDate(withVar, cfg.processDate),
-      cfg.refinedStocks, Seq("dataproc", "setor"))
-    Catalog.ensureDatabase(spark, cfg.stockDb)
-    Catalog.createExternalTable(spark, cfg.stockDb, "stocks_clean",
-      Model.stocksCleanSchema,
-      Seq("dataproc" -> "STRING", "setor" -> "STRING"), cfg.refinedStocks)
-    Catalog.repairTable(spark, cfg.stockDb, "stocks_clean")
-  }
+      ParquetIO.writePartitioned(
+        CleanOps.withProcessDate(withVar, cfg.processDate),
+        cfg.refinedStocks, Seq("dataproc", "setor"))
+      Catalog.ensureDatabase(spark, cfg.stockDb)
+      Catalog.createExternalTable(spark, cfg.stockDb, "stocks_clean",
+        Model.stocksCleanSchema,
+        Seq("dataproc" -> "STRING", "setor" -> "STRING"), cfg.refinedStocks)
+      Catalog.repairTable(spark, cfg.stockDb, "stocks_clean")
+    }
 
   /** TransformNewsJob (`transform_news_job.py`): catalog scan (S5) → dynamic
     * schema normalization (P11) → ISO truncate + parse (P8/P9) → same-day
-    * filter (P6) → drop helpers (P7) → full-row + keyed dedup (A4/A5) →
-    * na.drop (P10) → partitioned refined write + catalog (K1/K3-equivalent).
+    * filter (P6) → drop helpers (P7) → keyed dedup (A5, which subsumes the
+    * reference's full-row dedup A4: one exchange, on `link`) → na.drop
+    * (P10) → partitioned refined write + catalog (K1/K3-equivalent).
     */
-  def transformNews(spark: SparkSession, cfg: Config): Unit = {
-    import spark.implicits._
-    val raw = Catalog.readTable(spark, cfg.newsDb, "news_raw")
+  def transformNews(spark: SparkSession, cfg: Config): Unit =
+    Posture.withConfs(spark, Posture.pipelineConfs: _*) {
+      import spark.implicits._
+      val raw = Catalog.readTable(spark, cfg.newsDb, "news_raw")
 
-    val normalized = SchemaOps.normalizeToStringSchema(
-      raw, Model.newsColumns :+ "dataproc")
-    val required = Seq("title", "link", "published_time", "extracted_at")
-    require(required.forall(normalized.columns.contains),
-      s"missing required columns") // :100-102 guard
+      val normalized = SchemaOps.normalizeToStringSchema(
+        raw, Model.newsColumns :+ "dataproc")
+      val required = Seq("title", "link", "published_time", "extracted_at")
+      require(required.forall(normalized.columns.contains),
+        s"missing required columns") // :100-102 guard
 
-    val dated = CleanOps.parseDate(
-      CleanOps.parseDate(
-        CleanOps.truncateIsoToDate(
-          CleanOps.truncateIsoToDate(normalized, "published_time", "published_date_str"),
-          "extracted_at", "extracted_date_str"),
-        "published_date_str", "published_date"),
-      "extracted_date_str", "extracted_date")
+      val dated = CleanOps.parseDate(
+        CleanOps.parseDate(
+          CleanOps.truncateIsoToDate(
+            CleanOps.truncateIsoToDate(normalized, "published_time", "published_date_str"),
+            "extracted_at", "extracted_date_str"),
+          "published_date_str", "published_date"),
+        "extracted_date_str", "extracted_date")
 
-    val sameDay = CleanOps.sameDayFilter(dated, $"published_date", $"extracted_date")
-    val dropped = CleanOps.dropColumns(sameDay,
-      "published_date_str", "extracted_date_str", "published_date", "extracted_date")
+      val sameDay = CleanOps.sameDayFilter(dated, $"published_date", $"extracted_date")
+      val dropped = CleanOps.dropColumns(sameDay,
+        "published_date_str", "extracted_date_str", "published_date", "extracted_date")
 
-    val deduped = AggOps.dedupByKeyOrdered(
-      AggOps.distinctRows(dropped),
-      Seq("link"), Seq($"extracted_at".asc, $"title".asc))
-    val complete = CleanOps.dropNullsIn(deduped, Seq("title", "link", "source"))
+      // no full-row dedup (A4) first: one row survives per link, so a
+      // full-row duplicate can never survive twice, and the set of possible
+      // survivors is the same with or without it
+      val deduped = AggOps.dedupByKeyOrdered(dropped,
+        Seq("link"), Seq($"extracted_at".asc, $"title".asc))
+      val complete = CleanOps.dropNullsIn(deduped, Seq("title", "link", "source"))
 
-    ParquetIO.writePartitioned(complete.drop("dataproc")
-        .transform(CleanOps.withProcessDate(_, cfg.processDate)),
-      cfg.refinedNews, Seq("dataproc"))
-    Catalog.ensureDatabase(spark, cfg.newsDb)
-    Catalog.createExternalTable(spark, cfg.newsDb, "news_clean",
-      Model.newsRawSchema, Seq("dataproc" -> "STRING"), cfg.refinedNews)
-    Catalog.repairTable(spark, cfg.newsDb, "news_clean")
-  }
+      ParquetIO.writePartitioned(complete.drop("dataproc")
+          .transform(CleanOps.withProcessDate(_, cfg.processDate)),
+        cfg.refinedNews, Seq("dataproc"))
+      Catalog.ensureDatabase(spark, cfg.newsDb)
+      Catalog.createExternalTable(spark, cfg.newsDb, "news_clean",
+        Model.newsRawSchema, Seq("dataproc" -> "STRING"), cfg.refinedNews)
+      Catalog.repairTable(spark, cfg.newsDb, "news_clean")
+    }
 }
 
 object Pipeline {

@@ -28,11 +28,11 @@ object Posture {
   /** Local-mode core count; each entry point keeps its own default. */
   def cpus(default: Int): String = env("SPARK_GRAFT_CPUS").getOrElse(default.toString)
 
-  /** Scratch root override (see [[Scratch.root]]). */
+  /** Scratch root override (see [[Scratch]]). */
   def scratchDir: Option[String] = env("GRAFT_SCRATCH_DIR")
 
-  // Every checkpoint this program writes lives under Scratch.root (a local
-  // tmpfs): route WAL/commit/state-delta writes through the java.nio
+  // Every checkpoint this program writes lives in Scratch (a local
+  // tmpfs when present): route WAL/commit/state-delta writes through the java.nio
   // manager instead of FileContext's ~42 ms-per-rename local fallback (see
   // LocalCheckpointFileManager's doc and COVERAGE "Rounds 10–13 change
   // notes", Round 12).

@@ -42,8 +42,6 @@ object TextOps {
     coalesce(graft.functions.ShingleStrings.shingleStrings(tokens(text), n),
       array().cast("array<string>"))
 
-  def distinctShingles(text: Column, n: Int): Column = array_distinct(shingles(text, n))
-
   /** Punctuation-character ratio, NULL for empty text (the ANSI
     * DIVIDE_BY_ZERO guard). One definition shared by [[qualityMetrics]] and
     * [[CorpusClean]] so the two gates cannot de-sync on the character

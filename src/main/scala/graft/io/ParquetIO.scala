@@ -130,13 +130,4 @@ object ParquetIO {
       .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .saveAsTable(s"`$db`.`$table`")
-
-  /** Local recursive delete for scratch table directories — the one shared
-    * copy (bucketed-gate pre-clean, scratch-table teardown).
-    */
-  def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
 }

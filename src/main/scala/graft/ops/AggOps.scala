@@ -21,13 +21,9 @@ object AggOps {
   /** A4 — full-row dedup (`transform_news_job.py:121`). */
   def distinctRows(df: DataFrame): DataFrame = df.dropDuplicates()
 
-  /** A5 — keyed dedup, arbitrary survivor (`transform_news_job.py:123-124`).
-    * Matches the reference's nondeterministic first-row-per-key semantics.
-    */
-  def dedupByKey(df: DataFrame, keys: Seq[String]): DataFrame = df.dropDuplicates(keys)
-
-  /** A5 (deterministic variant) — first row per key under an explicit total
-    * order, via `row_number` (SURVEY.md §2a A5 note). The `orderBy` must be a
+  /** A5 — keyed dedup with a deterministic survivor: first row per key
+    * under an explicit total order, via `row_number` (SURVEY.md §2a A5
+    * note; the reference keeps an arbitrary survivor). The `orderBy` must be a
     * total order (include a unique tie-break column) for determinism.
     *
     * Scale note: one shuffle on `keys` + in-partition sort; equivalent cost

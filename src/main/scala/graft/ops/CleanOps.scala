@@ -97,12 +97,6 @@ object CleanOps {
     if (present.isEmpty) df else df.na.drop(present)
   }
 
-  /** P12 — arithmetic expression: daily variation = close − previous close
-    * (`transform_stocks_job.py:195-197`).
-    */
-  def difference(df: DataFrame, left: String, right: String, outName: String): DataFrame =
-    df.withColumn(outName, col(left) - col(right))
-
   /** P13 — string sanitize: the reference UTF-8-encodes with errors="ignore"
     * then strips (`extract_news_job.py:142-155`), driver-side before
     * `createDataFrame`. Same here: [[sanitizeString]] is the ingest-time

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 
-/** Sort / limit / top-k operators (SURVEY.md §2a O1–O2).
+/** Sort / limit / top-k operators (SURVEY.md §2a O1).
   *
   * `orderBy(...).limit(k)` is rewritten by Catalyst to
   * `TakeOrderedAndProject`: each task keeps a k-row heap, the driver merges
@@ -16,10 +16,4 @@ object TopKOps {
     */
   def topK(df: DataFrame, orderBy: Seq[Column], k: Int): DataFrame =
     df.orderBy(orderBy: _*).limit(k)
-
-  /** O2 — unordered head sample (`extract_stocks_job.py:368`): first k rows
-    * in partition order, used only for logging/smoke — nondeterministic by
-    * construction.
-    */
-  def sample(df: DataFrame, k: Int): DataFrame = df.limit(k)
 }

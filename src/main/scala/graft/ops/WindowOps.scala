@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Window-function operators (SURVEY.md §2a W1 + §2b ranking/frames).
+/** Window-function operators (SURVEY.md §2a W1 + §2b ranking).
   *
   * Every window here partitions by a key before ordering — a global
   * (unpartitioned) window would serialize 100 TB through one task and is
@@ -33,16 +33,6 @@ object WindowOps {
   def topNPerGroup(df: DataFrame, partitionKeys: Seq[String], orderBy: Seq[Column], n: Int): DataFrame = {
     val w = Window.partitionBy(partitionKeys.map(col): _*).orderBy(orderBy: _*)
     df.withColumn("rn", row_number().over(w)).filter(col("rn") <= n)
-  }
-
-  /** §2b moving aggregate over a row frame (moving average pattern):
-    * e.g. 7-row trailing mean of close per ticker.
-    */
-  def movingAgg(df: DataFrame, partitionKeys: Seq[String], orderBy: Seq[Column],
-                agg: Column, precedingRows: Int, outName: String): DataFrame = {
-    val w = Window.partitionBy(partitionKeys.map(col): _*).orderBy(orderBy: _*)
-      .rowsBetween(-precedingRows.toLong, 0)
-    df.withColumn(outName, agg.over(w))
   }
 
   /** Time-series resample + forward fill: snap an irregular event stream

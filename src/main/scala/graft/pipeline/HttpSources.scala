@@ -160,16 +160,11 @@ object ChartJson {
   */
 final class HttpQuoteSource(fetch: String => String) extends QuoteSource {
 
-  def chartUrl(ticker: String): String = ChartJson.chartUrl(ticker)
-
   def fetchQuotes(spark: SparkSession, tickers: Seq[String]): DataFrame = {
     val rows = tickers.flatMap { t =>
-      try parseChart(fetch(chartUrl(t)))
+      try ChartJson.parse(fetch(ChartJson.chartUrl(t)))
       catch { case scala.util.control.NonFatal(_) => Seq.empty }
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows), ChartJson.schema)
   }
-
-  /** Parse one v8 chart JSON document into long-form rows. */
-  def parseChart(json: String): Seq[Row] = ChartJson.parse(json)
 }

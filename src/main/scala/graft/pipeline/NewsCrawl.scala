@@ -16,15 +16,15 @@ object NewsCrawl {
 
   private val Domain = "https://news.google.com"
 
-  /** Search URL with the reference's locale pinning
-    * (`extract_news_job.py:170-171`).
-    */
   /** Percent-encoding à la Python's urllib quote(): %20, not form "+".
     * Shared by every URL builder in the ingestion layer.
     */
   def percentEncode(s: String): String =
     URLEncoder.encode(s, StandardCharsets.UTF_8).replace("+", "%20")
 
+  /** Search URL with the reference's locale pinning
+    * (`extract_news_job.py:170-171`).
+    */
   def searchUrl(term: String): String =
     s"$Domain/search?q=${percentEncode(term)}&hl=pt-BR&gl=BR&ceid=BR:pt-419"
 

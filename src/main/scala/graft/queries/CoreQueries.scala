@@ -34,10 +34,6 @@ final case class GQ(name: String, oracle: Option[String], run: (SparkSession, St
   */
 object CoreQueries {
 
-  // k3's previous scratch location (see the gate's per-invocation-path
-  // comment): deleted on the NEXT invocation so the leak stays one copy
-  private val k3PrevLoc = new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** Write-once cache for j3's co-bucketed table pair (the operator's cost
     * model IS write-once-join-many: the bucketed layout is paid at ingest,
     * every later join is exchange-free). Returns the two catalog table
@@ -63,7 +59,7 @@ object CoreQueries {
         val loc = new java.io.File(
           spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
           s"$db.db/$t")
-        if (loc.exists()) graft.io.ParquetIO.deleteRecursively(loc)
+        if (loc.exists()) org.apache.spark.sql.GraftPlanShim.deleteRecursively(loc)
       }
       graft.io.ParquetIO.writeBucketed(
         Tables.lineitem(spark, dir).select("l_orderkey", "l_quantity"),
@@ -102,33 +98,16 @@ object CoreQueries {
 
     // ----- S1: in-memory localized dimension source --------------------------
     // Reference: extract_stocks_job.py:64-74 (_create_stock_mapping).
-    GQ("s1_inline_dim",
-      Some("""SELECT * FROM (VALUES
-             |  ('Banks','ITUB4.SA','Itau Unibanco'),
-             |  ('Banks','BBDC4.SA','Bradesco'),
-             |  ('Banks','BBAS3.SA','Banco do Brasil'),
-             |  ('Banks','SANB11.SA','Santander Brasil'),
-             |  ('Energy','PETR4.SA','Petrobras'),
-             |  ('Energy','ELET3.SA','Eletrobras'),
-             |  ('Sanitation','SBSP3.SA','Sabesp'),
-             |  ('Insurance','BBSE3.SA','BB Seguridade'),
-             |  ('Telecommunications','VIVT3.SA','Vivo'),
-             |  ('Telecommunications','TIMS3.SA','TIM Brasil')
-             |) AS t(sector, ticker, company)""".stripMargin),
+    // The oracle VALUES are rendered from the same Model.stockDim rows.
+    GQ("s1_inline_dim", {
+      def q(s: String) = "'" + s.replace("'", "''") + "'"
+      val values = graft.pipeline.Model.stockDim
+        .map { case (s, t, c) => s"(${q(s)},${q(t)},${q(c)})" }.mkString(",\n")
+      Some(s"SELECT * FROM (VALUES\n$values\n) AS t(sector, ticker, company)")
+    },
       (spark, _) => {
         import spark.implicits._
-        Seq(
-          ("Banks", "ITUB4.SA", "Itau Unibanco"),
-          ("Banks", "BBDC4.SA", "Bradesco"),
-          ("Banks", "BBAS3.SA", "Banco do Brasil"),
-          ("Banks", "SANB11.SA", "Santander Brasil"),
-          ("Energy", "PETR4.SA", "Petrobras"),
-          ("Energy", "ELET3.SA", "Eletrobras"),
-          ("Sanitation", "SBSP3.SA", "Sabesp"),
-          ("Insurance", "BBSE3.SA", "BB Seguridade"),
-          ("Telecommunications", "VIVT3.SA", "Vivo"),
-          ("Telecommunications", "TIMS3.SA", "TIM Brasil"),
-        ).toDF("sector", "ticker", "company")
+        graft.pipeline.Model.stockDim.toDF("sector", "ticker", "company")
       }),
 
     // ----- S2 at the 100 TB shape: DataSourceV2 quote scan -------------------
@@ -512,11 +491,7 @@ object CoreQueries {
              |GROUP BY l_returnflag""".stripMargin),
       (spark, dir) => {
         import spark.implicits._
-        // per-process path + overwrite: bounded to one leaked copy per JVM
-        // (a fresh dir per invocation would accumulate every bench/verify
-        // run; a fixed shared path would race concurrent runs and break
-        // across users on a shared host)
-        val out = s"${graft.Scratch.root}/graft_k1_roundtrip_${ProcessHandle.current().pid()}"
+        val out = graft.Scratch.dir("k1_roundtrip", dir)
         // route each partition value to ONE task before the write: a naive
         // partitionBy from 32 upstream tasks commits 3×32 tiny files — the
         // small-files discipline writeSized codifies, applied inline here
@@ -542,7 +517,7 @@ object CoreQueries {
              |FROM orders GROUP BY setor""".stripMargin),
       (spark, dir) => {
         import spark.implicits._
-        val out = s"${graft.Scratch.root}/graft_k2_roundtrip_${ProcessHandle.current().pid()}"
+        val out = graft.Scratch.dir("k2_roundtrip", dir)
         graft.io.ParquetIO.writePartitioned(
           Tables.orders(spark, dir)
             .select(col("o_orderkey"),
@@ -558,8 +533,8 @@ object CoreQueries {
 
     // K3 — catalog-mediated write: external partitioned table registered in
     // the catalog, rows appended THROUGH the table (insertInto), scanned
-    // back via the catalog (S5). Fresh per-process location + drop/recreate
-    // so repeated runs in one JVM don't double-append.
+    // back via the catalog (S5). Fresh location + drop/recreate so repeated
+    // runs in one JVM don't double-append.
     GQ("k3_catalog_write",
       Some("""SELECT o_orderstatus, count(*) AS n,
              |       CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
@@ -568,21 +543,15 @@ object CoreQueries {
         import graft.io.Catalog
         val db = "graft_k3_db"
         val table = "orders_by_status"
-        // location is unique PER INVOCATION, not per process: the session
-        // FileStatusCache remembers the previous run's file listing for a
-        // reused path, and a delete+recreate at the same location makes the
-        // next insertInto plan against phantom files (FileNotFoundException
-        // when the same JVM runs this gate twice — warm-up + measured run).
-        // The previous invocation's files are removed below, so the leak
-        // stays one copy per JVM, same as before.
-        val loc = s"${graft.Scratch.root}/graft_k3_${ProcessHandle.current().pid()}_${System.nanoTime()}"
+        // location is unique PER INVOCATION: the session FileStatusCache
+        // remembers the previous run's file listing for a reused path, and
+        // a delete+recreate at the same location makes the next insertInto
+        // plan against phantom files (FileNotFoundException when the same
+        // JVM runs this gate twice — warm-up + measured run)
+        val loc = graft.Scratch.fresh("k3")
         Catalog.ensureDatabase(spark, db)
         Catalog.dropTable(spark, db, table)
         val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-        k3PrevLoc.getAndSet(loc) match {
-          case null => ()
-          case prev => fs.delete(new org.apache.hadoop.fs.Path(prev), true): Unit
-        }
         // pre-create the (empty) location: CreateDataSourceTableCommand
         // stats it (FileStreamSink.hasMetadata) and logs a full benign
         // FileNotFoundException stack for a passing gate otherwise —
@@ -1536,8 +1505,7 @@ object CoreQueries {
       Some("""SELECT n_regionkey, count(*) AS n, min(n_name) AS first_name
              |FROM nation GROUP BY n_regionkey""".stripMargin),
       (spark, dir) => {
-        // per-process path + overwrite (same leak/race trade as k1)
-        val out = s"${graft.Scratch.root}/graft_s7_csv_${ProcessHandle.current().pid()}"
+        val out = graft.Scratch.dir("s7_csv", dir)
         // 25-row dim: one output file, not one per upstream task
         graft.io.FormatIO.roundTrip(Tables.nation(spark, dir).coalesce(1), out, "csv")
           .groupBy(col("n_regionkey"))
@@ -1548,7 +1516,7 @@ object CoreQueries {
       Some("""SELECT c_mktsegment, count(*) AS n, round(sum(c_acctbal), 4) AS bal_sum
              |FROM customer GROUP BY c_mktsegment""".stripMargin),
       (spark, dir) => {
-        val out = s"${graft.Scratch.root}/graft_s8_json_${ProcessHandle.current().pid()}"
+        val out = graft.Scratch.dir("s8_json", dir)
         // doubles survive JSON text exactly (shortest-round-trip rendering);
         // only the re-associated SUM needs the usual rounding
         graft.io.FormatIO.roundTrip(Tables.customer(spark, dir).coalesce(4), out, "json")
@@ -1565,7 +1533,7 @@ object CoreQueries {
       Some("""SELECT p_brand, count(*) AS n, round(sum(p_retailprice), 4) AS price_sum
              |FROM part GROUP BY p_brand""".stripMargin),
       (spark, dir) => {
-        val out = s"${graft.Scratch.root}/graft_s10_orc_${ProcessHandle.current().pid()}"
+        val out = graft.Scratch.dir("s10_orc", dir)
         graft.io.FormatIO.roundTrip(Tables.part(spark, dir).coalesce(4), out, "orc")
           .groupBy(col("p_brand"))
           .agg(count(lit(1)).as("n"), round(sum(col("p_retailprice")), 4).as("price_sum"))
@@ -1578,7 +1546,7 @@ object CoreQueries {
       Some("""SELECT o_orderstatus, count(*) AS n, round(avg(o_totalprice), 4) AS price_avg
              |FROM orders GROUP BY o_orderstatus""".stripMargin),
       (spark, dir) => {
-        val base = s"${graft.Scratch.root}/graft_k4_${ProcessHandle.current().pid()}"
+        val base = graft.Scratch.dir("k4", dir)
         // orders, not lineitem: the operator under test is file-COUNT
         // reduction — small files are small by nature, and a bulk-volume
         // write would just bench the parquet encoder again (k1 does that)
@@ -1604,7 +1572,7 @@ object CoreQueries {
              |  round(avg(c_acctbal), 4) AS bal_avg
              |FROM customer""".stripMargin),
       (spark, dir) => {
-        val base = s"${graft.Scratch.root}/graft_s9_${ProcessHandle.current().pid()}"
+        val base = graft.Scratch.dir("s9", dir)
         val c = Tables.customer(spark, dir)
         c.filter(col("c_custkey") % 2 === 0)
           .select("c_custkey", "c_acctbal") // the pre-evolution schema

@@ -944,17 +944,16 @@ object ExtQueries {
         val emb = Tables.embeddings(spark, dir)
         val probes = emb.filter(col("vec_id") < 10)
         val idx = SimSearch.buildIvfIndex(emb, "vec_id", "embedding", nlist = 16)
-        val path = s"${graft.Scratch.root}/graft_ivf_index_${ProcessHandle.current().pid()}"
+        val path = graft.Scratch.fresh("ivf_index")
         // materialize the (probes×k)-row answer, then DELETE the on-disk
-        // index, also when the write, the read or the freeze throws —
-        // unlike the k1/k2 leak-one-copy artifacts this one holds a corpus
-        // copy, and Scratch.root may be RAM-backed (/dev/shm)
+        // index, also when the write, the read or the freeze throws: it
+        // holds a corpus copy, and scratch may be RAM-backed (/dev/shm)
         val approx =
           try {
             SimSearch.writeIvfIndex(idx, path)
             Freeze(SimSearch.ivfTopKIndexed(SimSearch.readIvfIndex(spark, path), probes,
               "vec_id", "embedding", k = 5, nprobe = 8)) // 16/8, floor 0.6: see ann_topk_ivf
-          } finally graft.io.ParquetIO.deleteRecursively(new java.io.File(path))
+          } finally graft.Scratch.delete(path)
         // safe re-query serves from the IN-MEMORY index (`idx`): the on-disk
         // copy is already deleted, and SimSearchSpec pins the persisted path
         // row-identical to the direct one, so the escape hatch answers the
@@ -1306,8 +1305,7 @@ object ExtQueries {
       (spark, dir) => {
         import graft.streaming.StreamOps
         val landing = StreamOps.ordersChangesLanding(spark, dir)
-        val base = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(graft.Scratch.root), "graft_cdc_").toString
+        val base = graft.Scratch.fresh("cdc_apply")
         val snap = s"$base/snapshot"
         Tables.orders(spark, dir)
           .select(col("o_orderkey"), col("o_totalprice").as("price"))
@@ -1338,8 +1336,7 @@ object ExtQueries {
       (spark, dir) => {
         import graft.streaming.StreamOps
         val landing = StreamOps.eventsLanding(spark, dir)
-        val base = s"${StreamOps.tmpRoot}/graft_sinkpq_" +
-          s"${ProcessHandle.current().pid()}_${graft.Scratch.pathTag(dir)}"
+        val base = graft.Scratch.dir("sink_parquet", dir)
         val stream = StreamOps.readEventStream(spark, landing,
             maxFilesPerTrigger = Some(1))
           .filter(col("user_id") % 2 === 0)

@@ -36,7 +36,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * this class.
   *
   * Used by `Bench`/`Verify` sessions (whose checkpoints all live under
-  * [[graft.Scratch.root]]); correctness under this manager is pinned by the
+  * [[graft.Scratch]]); correctness under this manager is pinned by the
   * same oracle gates as every other operator (the driver's Verify run
   * exercises it for all 14 stream gates), plus the restart/no-duplication
   * contract in StreamOpsSpec.

@@ -18,17 +18,6 @@ import org.apache.spark.sql.types._
   */
 object StreamOps {
 
-  /** Root for stream scratch space — landing drops, memory-sink checkpoints,
-    * snapshot swap dirs. Micro-batch progress is dozens of TINY files per
-    * trigger (offsets, commits, state-store deltas), each behind a
-    * write+rename barrier: on a spinning/virtual disk that metadata churn IS
-    * the micro-batch floor. Prefer the RAM-backed tmpfs when present (the
-    * local-mode analogue of putting state-store + checkpoint dirs on
-    * executor-local NVMe, which is how you'd deploy on a real cluster);
-    * see [[graft.Scratch.root]] for the override and the fallback.
-    */
-  def tmpRoot: String = graft.Scratch.root
-
   /** Shuffle-partition count every stream runs at (see [[streamPins]]). A
     * production stream sizes this to key-cardinality × executor count, not
     * to a constant.
@@ -146,21 +135,23 @@ object StreamOps {
       }
   }
 
-  /** Build (once per JVM per source dir) a multi-file parquet landing zone
-    * from the batch events table, for replaying it as a file-drop stream.
-    * Hash-split into `files` drops; per-process path + overwrite so repeated
-    * runs neither accumulate dirs nor double-append.
-    */
+  /** The landing `name` over source dir `dir`: built by `build` into its
+    * [[graft.Scratch.dir]] directory once per JVM, then reused. */
   private val landings = scala.collection.concurrent.TrieMap.empty[String, String]
+  private def landing(name: String, dir: String)(build: String => Unit): String = {
+    val path = graft.Scratch.dir(name, dir)
+    landings.getOrElseUpdate(path, { build(path); path })
+  }
+
+  /** A multi-file parquet landing zone built from the batch events table,
+    * for replaying it as a file-drop stream. Hash-split into `files` drops.
+    */
   def eventsLanding(spark: SparkSession, dir: String, files: Int = 2): String =
-    landings.getOrElseUpdate(s"$dir#$files", {
-      val path = s"$tmpRoot/graft_stream_" +
-        s"${ProcessHandle.current().pid()}_${(dir + files).hashCode.toHexString}"
+    landing(s"stream_landing$files", dir) { path =>
       graft.Tables.events(spark, dir) // ts normalized to TimestampType
         .repartition(files, org.apache.spark.sql.functions.col("event_id"))
         .write.mode("overwrite").parquet(path)
-      path
-    })
+    }
 
   /** Landing zone plus one SENTINEL drop: a single far-future event for the
     * reserved user [[SentinelUser]], written LAST (newest mtime, so the
@@ -172,13 +163,11 @@ object StreamOps {
     */
   val SentinelUser: Long = -1L
   def eventsLandingWithSentinel(spark: SparkSession, dir: String): String =
-    landings.getOrElseUpdate(s"$dir#sentinel", {
+    landing("stream_sentinel", dir) { base =>
       // reuse the plain landing's parquet via hard links (same inodes, same
       // mtimes — still older than the sentinel written below) instead of
       // re-writing the whole events table a second time per JVM
       val src = new java.io.File(eventsLanding(spark, dir))
-      val base = s"$tmpRoot/graft_stream_" +
-        s"${ProcessHandle.current().pid()}_sent_${dir.hashCode.toHexString}"
       val dst = new java.io.File(base)
       dst.mkdirs()
       src.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
@@ -193,8 +182,7 @@ object StreamOps {
           lit(SentinelUser).as("user_id"), lit("sentinel").as("event_type"),
           lit(0.0).as("value"), lit("{}").as("props"))
       sentinel.coalesce(1).write.mode("append").parquet(base)
-      base
-    })
+    }
 
   /** Landing zone where every base drop is REPLAYED a second time (byte-
     * identical `dup_*` copies with later mtimes, so the file source
@@ -204,10 +192,8 @@ object StreamOps {
     * `dropDuplicates` must absorb a 100% duplicate tail.
     */
   def eventsLandingWithDuplicates(spark: SparkSession, dir: String): String =
-    landings.getOrElseUpdate(s"$dir#dups", {
+    landing("stream_dups", dir) { base =>
       val src = new java.io.File(eventsLanding(spark, dir))
-      val base = s"$tmpRoot/graft_stream_" +
-        s"${ProcessHandle.current().pid()}_dup_${dir.hashCode.toHexString}"
       val dst = new java.io.File(base)
       dst.mkdirs()
       val files = src.listFiles().filter(_.getName.endsWith(".parquet"))
@@ -221,8 +207,7 @@ object StreamOps {
         java.nio.file.Files.setLastModifiedTime(copy,
           java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000))
       }
-      base
-    })
+    }
 
   /** Stream-stream INNER join: per-user pairs of events where the right
     * event lands strictly after the left and within `withinSeconds` — the
@@ -449,12 +434,11 @@ object StreamOps {
     * tests); production would swap `format("parquet").option("path", ...)`.
     */
   def runToMemory(df: Dataset[_], name: String, mode: OutputMode): Unit = {
-    // explicit checkpoint under the fast scratch root (the engine's default
-    // temp checkpoint lands under java.io.tmpdir — a real disk on most
-    // hosts; offsets/commits/state deltas are the per-trigger floor),
-    // removed after the run like the engine removes its temp checkpoints
-    val ckpt = java.nio.file.Paths.get(graft.Scratch.root,
-      s"graft_ckpt_${ProcessHandle.current().pid()}_${name}_${System.nanoTime()}")
+    // explicit checkpoint in fast scratch (the engine's default temp
+    // checkpoint lands under java.io.tmpdir — a real disk on most hosts;
+    // offsets/commits/state deltas are the per-trigger floor), removed
+    // after the run like the engine removes its temp checkpoints
+    val ckpt = graft.Scratch.fresh(s"ckpt_$name")
     // Trigger.AvailableNow: the finite-replay trigger — snapshots the
     // available input at start, runs exactly the micro-batches that drain
     // it (plus any watermark-advance no-data batch the session enables),
@@ -465,19 +449,13 @@ object StreamOps {
     val q = graft.Posture.withConfs(df.sparkSession, streamPins: _*) {
       df.writeStream.outputMode(mode).format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt.toString).start()
+        .option("checkpointLocation", ckpt).start()
     }
     try {
       q.awaitTermination()
       q.stop()
     }
-    finally deleteTree(ckpt.toFile)
-  }
-
-  private def deleteTree(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteTree)
-    f.delete(): Unit
+    finally graft.Scratch.delete(ckpt)
   }
 
   /** The production sink shape: parquet files + checkpointed offsets.
@@ -613,10 +591,8 @@ object StreamOps {
     * micro-batch and the apply stream exercises cross-trigger merging.
     */
   def ordersChangesLanding(spark: SparkSession, dir: String): String =
-    landings.getOrElseUpdate(s"$dir#cdc", {
+    landing("stream_cdc", dir) { path =>
       import org.apache.spark.sql.functions._
-      val path = s"$tmpRoot/graft_stream_" +
-        s"${ProcessHandle.current().pid()}_cdc_${dir.hashCode.toHexString}"
       val o = graft.Tables.orders(spark, dir)
       val u = o.filter(col("o_orderkey") % 10 === 0)
         .select(col("o_orderkey"), (col("o_totalprice") + 1000).as("price"),
@@ -628,6 +604,5 @@ object StreamOps {
         .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
           lit(1.0).as("price"), lit("I").as("op"))
       Seq(u, d, i).foreach(_.coalesce(1).write.mode("append").parquet(path))
-      path
-    })
+    }
 }

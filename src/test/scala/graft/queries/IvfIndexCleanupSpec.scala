@@ -1,20 +1,18 @@
 package graft.queries
 
-import java.io.File
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Posture, Scratch, SparkSpec}
 
-/** `ann_topk_ivf_persist` writes a full corpus copy under `Scratch.root`
-  * (possibly RAM-backed /dev/shm) and must delete it whether the gate
-  * succeeds or throws between the write and the frozen answer.
+/** `ann_topk_ivf_persist` writes a full corpus copy into a fresh scratch
+  * directory (possibly RAM-backed /dev/shm) and must delete it whether the
+  * gate succeeds or throws between the write and the frozen answer.
   */
 class IvfIndexCleanupSpec extends AnyFunSuite with SparkSpec {
 
-  // the gate names its index dir by this JVM's pid
+  // the gate takes its index dir from Scratch.fresh("ivf_index")
   private def leftover: Boolean =
-    new File(Scratch.root, s"graft_ivf_index_${ProcessHandle.current().pid()}").exists()
+    Option(Scratch.jvmDir.list()).exists(_.exists(_.startsWith("ivf_index_")))
 
   private def gate = graft.SparkEntry.queries("ann_topk_ivf_persist")
 

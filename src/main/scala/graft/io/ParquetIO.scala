@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, pmod, spark_partition_id, xxhash64}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Partitioned parquet sources/sinks (SURVEY.md §2a S4, K1–K2).
@@ -30,55 +30,25 @@ object ParquetIO {
     partitionFilters.foldLeft(base) { case (df, (k, v)) => df.filter(col(k) === v) }
   }
 
-  /** Shared writer chain so the sibling sinks can't silently diverge on
-    * mode/compression/writer options.
-    */
-  private def writer(df: DataFrame, disableDictionary: Boolean, overwrite: Boolean,
-                     maxRecordsPerFile: Option[Long]) = {
-    val w0 = df.write.mode(if (overwrite) "overwrite" else "append")
-      .option("compression", "snappy")
-    val w1 = if (disableDictionary)
-      w0.option("parquet.enable.dictionary", "false")
-        .option("parquet.bloom.filter.enabled", "false")
-    else w0
-    maxRecordsPerFile.fold(w1)(m => w1.option("maxRecordsPerFile", m.toString))
-  }
-
   /** K1/K2 — partitioned snappy-parquet write, mirroring the reference's
     * writer chain (`extract_stocks_job.py:386-393`) including its explicit
-    * dictionary/bloom-filter opt-out on raw stocks. Append by default (the
-    * reference's mode); `overwrite` for idempotent scratch outputs.
+    * dictionary/bloom-filter opt-out on raw stocks.
+    *
+    * Not the reference's append: mode `overwrite` with the writer option
+    * `partitionOverwriteMode=dynamic` replaces exactly the partition
+    * directories the rows produce and leaves every other one alone. A
+    * write with no rows replaces nothing.
     */
   def writePartitioned(df: DataFrame, path: String, partitions: Seq[String],
-                       disableDictionary: Boolean = false,
-                       overwrite: Boolean = false): Unit =
-    writer(df, disableDictionary, overwrite, None)
-      .partitionBy(partitions: _*).parquet(path)
-
-  /** Size-controlled partitioned write — the small-files guard.
-    *
-    * A naive `df.write.partitionBy(p)` emits one file per (task ×
-    * partition-value): with T tasks and P partition values that is up to
-    * T×P files — the classic metadata/NameNode killer at 100 TB.
-    * Repartitioning on (partition columns + a salt of
-    * `tasksPerPartition` buckets) routes each partition value to a bounded
-    * number of tasks, and `maxRecordsPerFile` splits oversized outputs.
-    * Result: ≤ tasksPerPartition × ceil(rows/maxRec) files per value,
-    * independent of upstream parallelism.
-    *
-    * `tasksPerPartition` trades file count for write parallelism: 1 gives
-    * exactly one writer per value (fewest files, but a 40%-hot value
-    * funnels through one core); size it to ≈ hot-value rows /
-    * maxRecordsPerFile so each output file gets its own task.
-    */
-  def writeSized(df: DataFrame, path: String, partitions: Seq[String],
-                 maxRecordsPerFile: Long, tasksPerPartition: Int = 1): Unit = {
-    val salted = df.withColumn("__wsalt",
-      pmod(xxhash64(spark_partition_id()), lit(tasksPerPartition.toLong)))
-    writer(salted.repartition((partitions :+ "__wsalt").map(col): _*).drop("__wsalt"),
-      disableDictionary = false, overwrite = false, Some(maxRecordsPerFile))
-      .partitionBy(partitions: _*)
-      .parquet(path)
+                       disableDictionary: Boolean = false): Unit = {
+    val w = df.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .option("compression", "snappy")
+    val opts = if (disableDictionary)
+      w.option("parquet.enable.dictionary", "false")
+        .option("parquet.bloom.filter.enabled", "false")
+    else w
+    opts.partitionBy(partitions: _*).parquet(path)
   }
 
   /** Small-file COMPACTION (the lakehouse OPTIMIZE): rewrite a parquet
@@ -122,11 +92,15 @@ object ParquetIO {
     * shuffle is paid once at write time instead of on every join, which is
     * the right trade for fact tables joined repeatedly on the same key.
     * Bucket pruning also serves point lookups on the bucket key.
+    *
+    * External: the files live at `location`, not under the warehouse dir,
+    * so the caller decides how long they last.
     */
-  def writeBucketed(df: DataFrame, db: String, table: String,
+  def writeBucketed(df: DataFrame, db: String, table: String, location: String,
                     bucketCols: Seq[String], buckets: Int): Unit =
     df.write.mode(SaveMode.Overwrite)
       .format("parquet")
+      .option("path", location)
       .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .saveAsTable(s"`$db`.`$table`")

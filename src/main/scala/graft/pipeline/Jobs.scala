@@ -21,6 +21,10 @@ import graft.ops._
   * (A5). Each transform job plans one exchange and runs with AQE on
   * ([[graft.Posture.pipelineConfs]]), so a date's small shuffle coalesces
   * to a task or two and each refined partition gets one file.
+  *
+  * A date is rerun by running it again: every job replaces only the
+  * partitions of its process date ([[publish]]), and `transformNews` reads
+  * no history newer than that date.
   */
 object Jobs {
 
@@ -47,29 +51,18 @@ object Jobs {
     val joined = JoinOps.enrichWithDim(typed, dim, Seq("Ticker"))
     val renamed = CleanOps.renameAll(joined,
       joined.columns.map(c => c -> c.toLowerCase).toMap)
-    val tagged = CleanOps.withProcessDate(renamed, cfg.processDate)
-
-    ParquetIO.writePartitioned(tagged, cfg.rawStocks, Seq("dataproc"),
-      disableDictionary = true)
-    Catalog.ensureDatabase(spark, cfg.stockDb)
-    Catalog.createExternalTable(spark, cfg.stockDb, "stock_prices_best_row",
-      Model.stockRawSchema, Seq("dataproc" -> "STRING"), cfg.rawStocks)
-    Catalog.repairTable(spark, cfg.stockDb, "stock_prices_best_row")
+    publish(spark, renamed, cfg, cfg.rawStocks, cfg.stockDb, "stock_prices_best_row",
+      Model.stockRawSchema, disableDictionary = true)
   }
 
   /** ExtractNewsJob (`extract_news_job.py`): fetch (sanitized at ingest,
-    * P13) → dataproc tag → partitioned raw write → fresh catalog table.
+    * P13) → dataproc tag → partitioned raw write → catalog. The reference
+    * drops and recreates `news_raw` on every run (`:326`); its schema is
+    * the constant [[Model.newsRawSchema]], so the repair alone refreshes it.
     */
-  def extractNews(spark: SparkSession, source: NewsSource, cfg: Config): Unit = {
-    val raw = source.fetchNews(spark, Model.stockDim.map(d => d._2 -> d._3))
-    val tagged = CleanOps.withProcessDate(raw, cfg.processDate)
-    ParquetIO.writePartitioned(tagged, cfg.rawNews, Seq("dataproc"))
-    Catalog.ensureDatabase(spark, cfg.newsDb)
-    Catalog.dropTable(spark, cfg.newsDb, "news_raw") // recreate-fresh (:326)
-    Catalog.createExternalTable(spark, cfg.newsDb, "news_raw",
-      Model.newsRawSchema, Seq("dataproc" -> "STRING"), cfg.rawNews)
-    Catalog.repairTable(spark, cfg.newsDb, "news_raw")
-  }
+  def extractNews(spark: SparkSession, source: NewsSource, cfg: Config): Unit =
+    publish(spark, source.fetchNews(spark, Model.stockDim.map(d => d._2 -> d._3)),
+      cfg, cfg.rawNews, cfg.newsDb, "news_raw", Model.newsRawSchema)
 
   /** TransformStocksJob (`transform_stocks_job.py`): read one raw partition
     * (S4, pruned, known schema) → date cast + validity filters (P4/P5) →
@@ -109,14 +102,8 @@ object Jobs {
       val withVar = WindowOps.lagDelta(withAggs, Seq("setor", "codigoAcao"),
         Seq($"data".asc), "precoFechamento", "variacaoFechamento")
 
-      ParquetIO.writePartitioned(
-        CleanOps.withProcessDate(withVar, cfg.processDate),
-        cfg.refinedStocks, Seq("dataproc", "setor"))
-      Catalog.ensureDatabase(spark, cfg.stockDb)
-      Catalog.createExternalTable(spark, cfg.stockDb, "stocks_clean",
-        Model.stocksCleanSchema,
-        Seq("dataproc" -> "STRING", "setor" -> "STRING"), cfg.refinedStocks)
-      Catalog.repairTable(spark, cfg.stockDb, "stocks_clean")
+      publish(spark, withVar, cfg, cfg.refinedStocks, cfg.stockDb, "stocks_clean",
+        Model.stocksCleanSchema, subPartitions = Seq("setor"))
     }
 
   /** TransformNewsJob (`transform_news_job.py`): catalog scan (S5) → dynamic
@@ -128,7 +115,10 @@ object Jobs {
   def transformNews(spark: SparkSession, cfg: Config): Unit =
     Posture.withConfs(spark, Posture.pipelineConfs: _*) {
       import spark.implicits._
+      // history up to the process date only: a rerun of an earlier date
+      // must not see articles of a date that ran after it
       val raw = Catalog.readTable(spark, cfg.newsDb, "news_raw")
+        .where($"dataproc" <= cfg.processDate)
 
       val normalized = SchemaOps.normalizeToStringSchema(
         raw, Model.newsColumns :+ "dataproc")
@@ -155,14 +145,33 @@ object Jobs {
         Seq("link"), Seq($"extracted_at".asc, $"title".asc))
       val complete = CleanOps.dropNullsIn(deduped, Seq("title", "link", "source"))
 
-      ParquetIO.writePartitioned(complete.drop("dataproc")
-          .transform(CleanOps.withProcessDate(_, cfg.processDate)),
-        cfg.refinedNews, Seq("dataproc"))
-      Catalog.ensureDatabase(spark, cfg.newsDb)
-      Catalog.createExternalTable(spark, cfg.newsDb, "news_clean",
-        Model.newsRawSchema, Seq("dataproc" -> "STRING"), cfg.refinedNews)
-      Catalog.repairTable(spark, cfg.newsDb, "news_clean")
+      publish(spark, complete, cfg, cfg.refinedNews, cfg.newsDb, "news_clean",
+        Model.newsRawSchema)
     }
+
+  /** Every job's tail: tag the rows with the process date (P3), write them
+    * partitioned by `dataproc +: subPartitions` (K1/K2; every partition
+    * column is a STRING), and register the external table over `root`
+    * (D1/D2/D6).
+    *
+    * Running a date again replaces that date's partitions and leaves every
+    * other date's alone. A write that produces no rows for the date
+    * replaces nothing, so the date's earlier output stays. MSCK REPAIR is
+    * the one registration step: a fresh JVM's in-memory catalog has only it
+    * to rediscover the history's partitions.
+    */
+  private def publish(spark: SparkSession, df: DataFrame, cfg: Config, root: String,
+                      db: String, table: String, dataSchema: StructType,
+                      subPartitions: Seq[String] = Nil,
+                      disableDictionary: Boolean = false): Unit = {
+    val partitions = "dataproc" +: subPartitions
+    ParquetIO.writePartitioned(CleanOps.withProcessDate(df, cfg.processDate),
+      root, partitions, disableDictionary)
+    Catalog.ensureDatabase(spark, db)
+    Catalog.createExternalTable(spark, db, table, dataSchema,
+      partitions.map(_ -> "STRING"), root)
+    Catalog.repairTable(spark, db, table)
+  }
 }
 
 object Pipeline {

@@ -50,24 +50,19 @@ object CoreQueries {
     val canonical = new java.io.File(dir).getCanonicalPath
     bucketedPair.getOrElseUpdate(canonical, {
       val tag = graft.Scratch.pathTag(canonical)
+      // the database and both tables are located in scratch, not under the
+      // warehouse dir, so nothing the pair writes outlives the JVM
+      val loc = graft.Scratch.dir("bkt_pair", canonical)
       val db = "bkt_gate"
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
       val li = s"li_$tag"; val o = s"o_$tag"
-      Seq(li, o).foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $db.$t")
-        // a crashed earlier run can leave the managed dir without the entry
-        val loc = new java.io.File(
-          spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-          s"$db.db/$t")
-        if (loc.exists()) org.apache.spark.sql.GraftPlanShim.deleteRecursively(loc)
-      }
       graft.io.ParquetIO.writeBucketed(
         Tables.lineitem(spark, dir).select("l_orderkey", "l_quantity"),
-        db, li, Seq("l_orderkey"), 8)
+        db, li, s"$loc/$li", Seq("l_orderkey"), 8)
       graft.io.ParquetIO.writeBucketed(
         Tables.orders(spark, dir).select("o_orderkey", "o_orderpriority")
           .withColumnRenamed("o_orderkey", "l_orderkey"),
-        db, o, Seq("l_orderkey"), 8)
+        db, o, s"$loc/$o", Seq("l_orderkey"), 8)
       (s"$db.$li", s"$db.$o")
     })
   }
@@ -493,13 +488,12 @@ object CoreQueries {
         import spark.implicits._
         val out = graft.Scratch.dir("k1_roundtrip", dir)
         // route each partition value to ONE task before the write: a naive
-        // partitionBy from 32 upstream tasks commits 3×32 tiny files — the
-        // small-files discipline writeSized codifies, applied inline here
-        // (one narrow-row shuffle buys a 32× smaller commit)
+        // partitionBy from 32 upstream tasks commits 3×32 tiny files (one
+        // narrow-row shuffle buys a 32× smaller commit)
         graft.io.ParquetIO.writePartitioned(
           Tables.lineitem(spark, dir).select("l_orderkey", "l_returnflag")
             .repartition(col("l_returnflag")),
-          out, Seq("l_returnflag"), overwrite = true)
+          out, Seq("l_returnflag"))
         graft.io.ParquetIO.readPartitioned(spark, out)
           .groupBy($"l_returnflag".cast("string").as("l_returnflag"))
           .agg(count(lit(1)).as("n"))
@@ -524,7 +518,7 @@ object CoreQueries {
               col("o_orderpriority").as("setor"))
             .withColumn("dataproc", lit("2024-01-15"))
             .repartition(col("dataproc"), col("setor")),
-          out, Seq("dataproc", "setor"), overwrite = true)
+          out, Seq("dataproc", "setor"))
         graft.io.ParquetIO.readPartitioned(spark, out)
           .groupBy($"dataproc".cast("string").as("dataproc"),
             $"setor".cast("string").as("setor"))

@@ -42,8 +42,10 @@ class ScratchSpec extends AnyFunSuite with SparkSpec {
   test("a Verify JVM over scratch-writing gates leaves the scratch root empty at exit") {
     val scratch = Files.createTempDirectory("graft-scratch-root").toFile
     val out = Files.createTempDirectory("graft-scratch-verify").toString
+    // the child's working directory, where its warehouse dir resolves
+    val work = Files.createTempDirectory("graft-scratch-work").toFile
     val gates = Seq("k1_write_roundtrip", "k3_catalog_write", "stream_sink_parquet",
-      "stream_cdc_apply", "stream_session_windows")
+      "stream_cdc_apply", "stream_session_windows", "j3_bucketed_join")
     // inherit the test JVM's --add-opens set (Spark 4 on JDK 17 needs it)
     // and classpath, as MetastorePersistenceSpec does
     val addOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
@@ -51,7 +53,7 @@ class ScratchSpec extends AnyFunSuite with SparkSpec {
     val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ addOpens ++ Seq(
       "-Xmx2g", "-Dspark.ui.enabled=false", "-cp", System.getProperty("java.class.path"),
       "graft.Verify", sfDir, out, gates.mkString(","))
-    val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+    val pb = new ProcessBuilder(cmd: _*).directory(work).redirectErrorStream(true)
     pb.environment().put("GRAFT_SCRATCH_DIR", scratch.getPath)
     pb.environment().put("SPARK_GRAFT_CPUS", "2")
     val p = pb.start()
@@ -60,5 +62,7 @@ class ScratchSpec extends AnyFunSuite with SparkSpec {
     assert(!log.contains("[verify]"), log.takeRight(4000))
     gates.foreach(g => assert(new File(out, g).isDirectory, s"$g wrote no result"))
     assert(scratch.list().toSeq === Seq.empty)
+    assert(!new File(work, "spark-warehouse/bkt_gate.db").exists(),
+      "the bucketed pair was written under the warehouse dir")
   }
 }

@@ -10,44 +10,15 @@ import graft.Posture.withConfs
   */
 class BucketingSpec extends AnyFunSuite with SparkSpec {
 
-  test("writeSized bounds files per partition value regardless of task count") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sized").toString
-    // 32 upstream partitions × 3 flag values would emit up to 96 files naive
-    val li = Tables.lineitem(spark, sfDir)
-      .select("l_orderkey", "l_returnflag").repartition(32)
-    ParquetIO.writeSized(li, dir, Seq("l_returnflag"), maxRecordsPerFile = 100000)
-    val filesPerValue = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("l_returnflag="))
-      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
-    assert(filesPerValue.nonEmpty)
-    filesPerValue.foreach { case (part, n) =>
-      assert(n === 1, s"$part has $n files; expected exactly 1 (fits maxRecordsPerFile)")
-    }
-    assert(spark.read.parquet(dir).count() === li.count(), "no rows lost")
-  }
-
   test("bucketed-bucketed equi-join has zero shuffles and matches plain join") {
     spark.sql("CREATE DATABASE IF NOT EXISTS bkt_db")
-    // clear any stale table AND its managed location (a crashed earlier run
-    // can leave the directory without the catalog entry)
-    Seq("li_b", "o_b").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS bkt_db.$t")
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-        s"bkt_db.db/$t")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(loc)
-      }
-    }
+    // external tables in a fresh temp dir: nothing lands in the warehouse dir
+    val loc = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
     val li = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_quantity")
     val o = Tables.orders(spark, sfDir).select("o_orderkey", "o_totalprice")
-    ParquetIO.writeBucketed(li, "bkt_db", "li_b", Seq("l_orderkey"), 8)
+    ParquetIO.writeBucketed(li, "bkt_db", "li_b", s"$loc/li_b", Seq("l_orderkey"), 8)
     ParquetIO.writeBucketed(
-      o.withColumnRenamed("o_orderkey", "l_orderkey"), "bkt_db", "o_b",
+      o.withColumnRenamed("o_orderkey", "l_orderkey"), "bkt_db", "o_b", s"$loc/o_b",
       Seq("l_orderkey"), 8)
 
     // force the non-broadcast path: at real fact-fact scale neither side

@@ -5,18 +5,14 @@ import org.apache.spark.sql.SparkSession
 /** The program's session posture in one place, and its only reader of the
   * environment.
   *
-  * Ten environment names are read, nothing else:
-  *   - deployment: `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`,
-  *     `GRAFT_SCRATCH_DIR`;
-  *   - settings PRODUCTION.md cites as workload-dependent:
-  *     `SPARK_GRAFT_AQE`, `SPARK_GRAFT_AQE_MIN_PART`,
-  *     `SPARK_GRAFT_SHUFFLE_PARTS`, `SPARK_GRAFT_ROCKSDB_CHANGELOG`,
-  *     `SPARK_GRAFT_LOCAL_FS`, `SPARK_GRAFT_CKPT_FM`,
-  *     `SPARK_GRAFT_COMMITTER_V`.
+  * Three environment names are read, all of them deployment settings:
+  * `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS` and `GRAFT_SCRATCH_DIR`.
   *
-  * Every other setting is a constant below, with the measurement that
-  * decided it. Per-layer timing (planning, codegen, stream trigger phases)
-  * comes from `python3 perfbench/run.py --trace 1`, not from switches here.
+  * Every session setting is a constant below, with the measurement that
+  * decided it; a deployment whose workload wants another value sets that
+  * Spark conf on its own session (PRODUCTION.md). Per-layer timing
+  * (planning, codegen, stream trigger phases) comes from
+  * `python3 perfbench/run.py --trace 1`, not from switches here.
   */
 object Posture {
 
@@ -36,9 +32,9 @@ object Posture {
   // manager instead of FileContext's ~42 ms-per-rename local fallback (see
   // LocalCheckpointFileManager's doc and COVERAGE "Rounds 10–13 change
   // notes", Round 12).
-  private def checkpointFileManager: (String, String) =
+  private val checkpointFileManager: (String, String) =
     "spark.sql.streaming.checkpointFileManagerClass" ->
-      env("SPARK_GRAFT_CKPT_FM").getOrElse(graft.streaming.LocalCheckpointFileManager.confValue)
+      graft.streaming.LocalCheckpointFileManager.confValue
 
   // file:// via the nio-permission RawLocalFileSystem subclass: the default
   // LocalFileSystem pays a fork/exec chmod per created file/dir (no native
@@ -46,12 +42,11 @@ object Posture {
   // every local write (438 -> 294 ms median for a 16-file write; the write
   // gates ran ~25 % faster, COVERAGE "Rounds 10–13 change notes", Round 12).
   // Local-scratch-only posture, like the checkpoint manager above.
-  private def localFs: (String, String) =
-    "spark.hadoop.fs.file.impl" -> env("SPARK_GRAFT_LOCAL_FS").getOrElse("graft.io.NioLocalFileSystem")
+  private val localFs: (String, String) = "spark.hadoop.fs.file.impl" -> "graft.io.NioLocalFileSystem"
 
   /** Session confs of the timed bench (`graft.Bench`), of `graft.Explain`
     * and of the scale tools, in the order they are applied. */
-  def benchConfs: Seq[(String, String)] = Seq(
+  val benchConfs: Seq[(String, String)] = Seq(
     // AQE OFF at bench scale: adaptive execution re-plans and re-codegens
     // per materialized stage — pure overhead on sf0.1 single-node shuffles
     // (measured: 10 cheap gates 6.9 s -> 5.0 s, 12 heavy gates 24.1 -> 20.6;
@@ -60,7 +55,7 @@ object Posture {
     // deployment keeps the default ON; operators never depend on it for
     // correctness (Verify runs AQE-on). The daily pipeline's two transform
     // jobs pin it back on under every posture ([[pipelineConfs]]).
-    "spark.sql.adaptive.enabled" -> env("SPARK_GRAFT_AQE").getOrElse("false"),
+    "spark.sql.adaptive.enabled" -> "false",
     // whole-stage codegen stays ON: a 12-query subset suggested compile time
     // dominates at one-shot sf0.1, but the full suite measured the opposite
     // (138.5 s vs 124.6 s same-weather) — the pair-join conditions (Myers
@@ -77,7 +72,7 @@ object Posture {
     // graph_pagerank gate sizes its own from the data (8 at sf0.1), the two
     // HLL gates and lm_bigram_score pin 8, and every stream runs at
     // `StreamOps.streamShuffleParts` (4), pinned by the stream run helpers.
-    "spark.sql.shuffle.partitions" -> env("SPARK_GRAFT_SHUFFLE_PARTS").getOrElse("16"),
+    "spark.sql.shuffle.partitions" -> "16",
     // state-store maintenance (snapshot/cleanup of loaded providers) defaults
     // to every 60s — with six stream gates spread across the suite it fires
     // DURING later queries' timed sections, working on stores of
@@ -104,12 +99,6 @@ object Posture {
     // the noise band but consistently signed). Production keeps the default
     // 100 for its restart window.
     "spark.sql.streaming.minBatchesToRetain" -> "1",
-    // RocksDB commit path (TWS gates): changelog checkpointing writes the
-    // per-commit delta instead of uploading a full snapshot per trigger —
-    // the production posture for large state, ~0.4 s slower per stream block
-    // at gate scale (PRODUCTION.md).
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-      env("SPARK_GRAFT_ROCKSDB_CHANGELOG").getOrElse("false"),
     // State-store backend for the NON-TWS stateful gates (the TWS gates pin
     // RocksDB themselves — the API requires it): the engine default
     // HDFS-backed in-memory map. RocksDB loses at gate-scale state, 5.89/5.81
@@ -147,25 +136,16 @@ object Posture {
     // NOTE: adaptive.coalescePartitions.parallelismFirst=false was measured
     // and REVERTED: it coalesces the CPU-bound pair-join probes to one
     // partition (serializing them) — the default's parallelism-preserving
-    // coalesce is the right trade.
-    //
-    // AQE-on coalesce floor (only read with AQE on): the coalescer's target
-    // is max(totalBytes/parallelism, minPartitionSize) — the pair-join
-    // family's shuffles carry FEW BYTES but heavy per-row compute (candidate
-    // intersects), so the default 1 MB floor coalesces them to a handful of
-    // tasks and serializes CPU-bound work. A smaller floor restores
-    // task-wave parallelism for exactly those stages; measured A/B in
-    // COVERAGE.md round 14.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
-      env("SPARK_GRAFT_AQE_MIN_PART").getOrElse("1m"),
+    // coalesce is the right trade. The RocksDB changelog checkpointing and
+    // the AQE coalesce floor (`minPartitionSize`) keep the engine defaults
+    // (off, 1 MB); PRODUCTION.md has when a deployment changes them.
     "spark.ui.enabled" -> "false",
     // committer v2: task commit renames straight to the destination, job
     // commit is O(1) — on the forked-chmod local FS the v1 double-rename
     // costs ~4 ms/file extra across the write gates. Standard tradeoff
     // (partial output visible on job failure) — these writes are all
     // scratch.
-    "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" ->
-      env("SPARK_GRAFT_COMMITTER_V").getOrElse("2"),
+    "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2",
     localFs)
 
   /** Scoped confs of the daily pipeline's two transform jobs

@@ -682,6 +682,16 @@ object Dedup {
       .select(col("id").as(idCol))
   }
 
+  /** Shared blocking projection for the fuzzy-join family: (id, prefix,
+    * first token) per document. */
+  private def fuzzyBlockSide(df: DataFrame, idCol: String, textCol: String,
+                             prefixLen: Int): DataFrame = {
+    val t = trim(col(textCol))
+    df.select(col(idCol).as("id"),
+      substring(t, 1, prefixLen).as("pfx"),
+      split_part(t, lit(" "), lit(1)).as("b1"))
+  }
+
   /** Blocked fuzzy-match join: pairs of documents whose normalized prefixes
     * are within `maxDist` edit distance, candidate-limited to shared BLOCK
     * keys — the record-linkage pattern that keeps an edit-distance join
@@ -689,14 +699,14 @@ object Dedup {
     * joins are plain hash equi-joins.
     *
     * Single-key first-token blocking misses exactly the pairs whose typo
-    * sits IN the first token — the most common edit in real data.
-    * `dualBlock` (default) adds a deletion-neighborhood (FastSS-style)
-    * secondary block: each doc also keys on its first token and every
-    * single-character deletion of it (positions 1..`prefixLen` — the
-    * distance is computed on `prefixLen`-truncated text, so later edits
-    * cannot change any pair's distance), and two docs
-    * with DIFFERENT first tokens become candidates iff they share a
-    * variant — which happens precisely when the tokens are within ~1 edit.
+    * sits IN the first token — the most common edit in real data. So a
+    * deletion-neighborhood (FastSS-style) secondary block rides along:
+    * each doc also keys on its first token and every single-character
+    * deletion of it (positions 1..`prefixLen` — the distance is computed on
+    * `prefixLen`-truncated text, so later edits cannot change any pair's
+    * distance), and two docs with DIFFERENT first tokens become candidates
+    * iff they share a variant — which happens precisely when the tokens are
+    * within ~1 edit.
     * Unlike a second-token block (measured: it doubles the candidate set),
     * this admits only the genuinely near first-token pairs, so its cost is
     * the variant explode plus a near-empty join. Pairs whose first tokens
@@ -709,19 +719,8 @@ object Dedup {
     * equal vs unequal first tokens). Prefix truncation bounds the per-pair
     * cost.
     */
-  /** Shared blocking projection for the fuzzy-join family: (id, prefix,
-    * first token) per document. */
-  private def fuzzyBlockSide(df: DataFrame, idCol: String, textCol: String,
-                             prefixLen: Int): DataFrame = {
-    val t = trim(col(textCol))
-    df.select(col(idCol).as("id"),
-      substring(t, 1, prefixLen).as("pfx"),
-      split_part(t, lit(" "), lit(1)).as("b1"))
-  }
-
   def fuzzyPairsBlocked(df: DataFrame, idCol: String, textCol: String,
-                        maxDist: Int, prefixLen: Int = 40,
-                        dualBlock: Boolean = true): DataFrame = {
+                        maxDist: Int, prefixLen: Int = 40): DataFrame = {
     require(maxDist >= 0 && prefixLen > 0, "need maxDist >= 0, prefixLen > 0")
     val d = fuzzyBlockSide(df, idCol, textCol, prefixLen)
     def renamed(side: String) = d.withColumnsRenamed(Map(
@@ -747,18 +746,14 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
     val exact = emit(renamed("a").join(renamed("b"),
       col("b1_a") === col("b1_b") && col("id_a") < col("id_b") && bagOk && dist >= 0))
-    if (!dualBlock) exact
-    else {
-      val nearToks = nearTokenPairs(d, prefixLen)
-      // docs of token t_a × docs of token t_b; each unordered doc pair
-      // surfaces in exactly one token direction thanks to id_a < id_b
-      val near = emit(renamed("a")
-        .join(nearToks, col("b1_a") === col("t_a"))
-        .join(renamed("b"),
-          col("b1_b") === col("t_b") && col("id_a") < col("id_b") && bagOk && dist >= 0))
-      // disjoint by construction (equal vs unequal first tokens)
-      exact.unionByName(near)
-    }
+    // docs of token t_a × docs of token t_b; each unordered doc pair
+    // surfaces in exactly one token direction thanks to id_a < id_b
+    val near = emit(renamed("a")
+      .join(nearTokenPairs(d, prefixLen), col("b1_a") === col("t_a"))
+      .join(renamed("b"),
+        col("b1_b") === col("t_b") && col("id_a") < col("id_b") && bagOk && dist >= 0))
+    // disjoint by construction (equal vs unequal first tokens)
+    exact.unionByName(near)
   }
 
   /** Deletion-neighborhood blocking at VOCABULARY granularity: the

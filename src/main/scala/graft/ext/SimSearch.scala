@@ -109,10 +109,9 @@ object SimSearch {
     * hyperplanes — the better scale path when embeddings cluster.
     */
   def ivfTopK(corpus: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
-              k: Int, nlist: Int, nprobe: Int, seed: Long = 42L,
-              broadcastProbes: Boolean = true): DataFrame =
+              k: Int, nlist: Int, nprobe: Int, seed: Long = 42L): DataFrame =
     ivfTopKIndexed(buildIvfIndex(corpus, idCol, vecCol, nlist, seed),
-      probes, idCol, vecCol, k, nprobe, broadcastProbes)
+      probes, idCol, vecCol, k, nprobe)
 
   /** A trained IVF index: the centroid matrix (row i = cell i) plus the
     * cell-assigned corpus relation `(nbr_id, nbr_vec, nbr_norm, cell)`.
@@ -187,8 +186,7 @@ object SimSearch {
     * scales every cell's score equally so it drops out of the argmax.
     */
   def ivfTopKIndexed(index: IvfIndex, probes: DataFrame, idCol: String,
-                     vecCol: String, k: Int, nprobe: Int,
-                     broadcastProbes: Boolean = true): DataFrame = {
+                     vecCol: String, k: Int, nprobe: Int): DataFrame = {
     import graft.functions.VectorFunctions.{dotF, normF}
     require(nprobe >= 1, "nprobe must be >= 1")
     // a corpus smaller than nlist yields fewer centroids than nprobe —
@@ -204,13 +202,12 @@ object SimSearch {
     // caps parallelism at nlist reducers no matter the cluster size — the
     // correct shape is the corpus staying put and the (tiny, nprobe-exploded)
     // probe side broadcasting onto it; partial top-k states then make the
-    // rank exchange carry probes×k rows per partition, not candidates.
-    // `broadcastProbes = false` is the backfill escape hatch (probe set too
-    // large to broadcast — at that point a salted/bucketed strategy is the
-    // real answer, see scaladoc). No pair dedup: each corpus vector lives in
+    // rank exchange carry probes×k rows per partition, not candidates. A
+    // probe set too large to broadcast (a backfill) wants a salted/bucketed
+    // strategy, not this join. No pair dedup: each corpus vector lives in
     // exactly one cell and a probe's nprobe cells are distinct ranks, so a
     // (probe, nbr) pair can only arise once.
-    val scored = (if (broadcastProbes) broadcast(p) else p).join(c, "cell")
+    val scored = broadcast(p).join(c, "cell")
       .filter(col("probe_id") =!= col("nbr_id"))
       .withColumn("cosine", safeCosine(
         dotF(col("probe_vec"), col("nbr_vec")), col("probe_norm"), col("nbr_norm")))
@@ -253,8 +250,7 @@ object SimSearch {
     * more probe flips. Specs measure recall against [[bruteForceTopK]].
     */
   def lshTopK(corpus: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
-              k: Int, numPlanes: Int, dim: Int, seed: Long = 42L,
-              broadcastProbes: Boolean = true): DataFrame = {
+              k: Int, numPlanes: Int, dim: Int, seed: Long = 42L): DataFrame = {
     import graft.functions.VectorFunctions.{dotF, normF}
     val c = corpus.select(col(idCol).as("nbr_id"), col(vecCol).as("nbr_vec"),
       normF(col(vecCol)).as("nbr_norm"),
@@ -272,7 +268,7 @@ object SimSearch {
     // dedup: a corpus vector has ONE bucket and the multiprobe set
     // {b, b^1, b^2, …} is distinct by construction (each XOR flips a
     // different bit), so (probe, nbr) pairs are already unique.
-    val scored = (if (broadcastProbes) broadcast(p) else p).join(c, "bucket")
+    val scored = broadcast(p).join(c, "bucket")
       .filter(col("probe_id") =!= col("nbr_id"))
       .withColumn("cosine", safeCosine(
         dotF(col("probe_vec"), col("nbr_vec")), col("probe_norm"), col("nbr_norm")))

@@ -21,19 +21,16 @@ import org.apache.spark.sql.functions._
   * the term string) with no data-shaped single-partition stage.
   *
   * [[encode]] joins each token position against the vocab on the term and
-  * reassembles ids in document order. The join defaults to a plain shuffle
-  * equi-join on the term — the safe shape for an unbounded term universe —
-  * but `broadcastVocab = true` is the cluster-scale production form: a
-  * trained tokenizer vocabulary is bounded by construction (32k–256k
-  * entries), and broadcasting it spares the full token stream its
-  * term-keyed exchange (the stream then moves only once, into the per-doc
-  * reassembly). At single-node verification scale the trade INVERTS —
-  * measured 1.48 vs 1.07 s at sf0.1, the driver-side vocab collect +
-  * broadcast build costing more than the small shuffle it saves — which is
-  * why it is an opt-in, not the default. Out-of-vocabulary tokens
-  * take `unkId`, the id-sequence is emitted as a comma-joined STRING
-  * (`ids_csv`) because the gate's comparison layer cannot sort array
-  * columns — and a training exporter wants a flat packed column anyway.
+  * reassembles ids in document order. The join is a plain shuffle
+  * equi-join on the term — the safe shape for an unbounded term universe.
+  * A broadcast vocab (a trained tokenizer's is bounded, 32k–256k entries)
+  * would spare the token stream its term-keyed exchange at cluster scale,
+  * but at single-node scale it lost, 1.48 vs 1.07 s at sf0.1: the
+  * driver-side vocab collect + broadcast build cost more than the small
+  * shuffle it saved. Out-of-vocabulary tokens take `unkId`, the
+  * id-sequence is emitted as a comma-joined STRING (`ids_csv`) because the
+  * gate's comparison layer cannot sort array columns — and a training
+  * exporter wants a flat packed column anyway.
   */
 object Vocab {
 
@@ -48,11 +45,10 @@ object Vocab {
     * vocab id (or `unkId`), positions reassembled in order.
     */
   def encode(df: DataFrame, idCol: String, textCol: String, vocab: DataFrame,
-             unkId: Long = -1L, broadcastVocab: Boolean = false): DataFrame = {
+             unkId: Long = -1L): DataFrame = {
     val pos = df.select(col(idCol).as("__doc"),
         posexplode(TextOps.tokens(col(textCol))).as(Seq("__pos", "term")))
-    val v = vocab.select(col("term"), col("id"))
-    pos.join(if (broadcastVocab) broadcast(v) else v, Seq("term"), "left")
+    pos.join(vocab.select(col("term"), col("id")), Seq("term"), "left")
       .select(col("__doc"), col("__pos"),
         coalesce(col("id"), lit(unkId)).as("__id"))
       .groupBy(col("__doc"))

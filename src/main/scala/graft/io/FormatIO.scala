@@ -17,15 +17,14 @@ import org.apache.spark.sql.types.StructType
   */
 object FormatIO {
 
-  def writeCsv(df: DataFrame, path: String, overwrite: Boolean = true): Unit =
-    df.write.mode(if (overwrite) "overwrite" else "error")
-      .option("header", "true").csv(path)
+  def writeCsv(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").option("header", "true").csv(path)
 
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
-  def writeJsonl(df: DataFrame, path: String, overwrite: Boolean = true): Unit =
-    df.write.mode(if (overwrite) "overwrite" else "error").json(path)
+  def writeJsonl(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").json(path)
 
   def readJsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
@@ -35,8 +34,8 @@ object FormatIO {
     * distribution model as parquet). Declared schema on read for the same
     * one-pass discipline as the text formats.
     */
-  def writeOrc(df: DataFrame, path: String, overwrite: Boolean = true): Unit =
-    df.write.mode(if (overwrite) "overwrite" else "error").orc(path)
+  def writeOrc(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").orc(path)
 
   def readOrc(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).orc(path)

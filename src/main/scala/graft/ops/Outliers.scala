@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Freeze}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -53,27 +53,22 @@ object Outliers {
     * at ~50 B/entry — on near-unique doubles (the common case) the buffer
     * wins severalfold, but a LOW-CARDINALITY whale group (say 10⁹ rows of
     * integer-valued prices) fits the built-in's map and NOT the buffer,
-    * which raises a loud capacity error at ~2.6×10⁸ rows/group. For such
-    * groups set `boundedState = true` to route through
-    * [[QuantileSelect.groupPercentile]] — two-round distributed selection,
-    * O(n_g/accuracy) state at ANY row count or cardinality, same bits,
-    * roughly twice the scan work.
+    * which raises a loud capacity error at ~2.6×10⁸ rows/group. Such
+    * whale-scale groups take their fences from
+    * [[QuantileSelect.groupPercentile]] instead — two-round distributed
+    * selection, O(n_g/accuracy) state at ANY row count or cardinality, same
+    * bits, roughly twice the scan work.
     */
   def madOutliers(df: DataFrame, groupCols: Seq[String], valueCol: String,
-                  k: Double, roundTo: Int = 4,
-                  boundedState: Boolean = false): DataFrame = {
+                  k: Double, roundTo: Int = 4): DataFrame = {
     val v = col(valueCol)
     // NOTE: no Freeze of DF here even though three consumers re-run
     // the upstream plan — measured at sf0.1 the eager materialization costs
     // MORE than re-scanning a pruned parquet branch (checkpoint breaks
     // whole-stage fusion and blocks). Callers with an expensive upstream
-    // should checkpoint BEFORE calling, as CorpusClean.run does. The FENCE
-    // relations on the bounded path ARE checkpointed: one row per group, and
-    // without it the med machinery re-executes inside every mad subtree.
+    // should checkpoint BEFORE calling, as CorpusClean.run does.
     def fences(in: DataFrame, value: Column, out: String): DataFrame =
-      if (boundedState)
-        Freeze(QuantileSelect.groupPercentile(in, groupCols, value, 0.5, out))
-      else in.groupBy(groupCols.map(col): _*)
+      in.groupBy(groupCols.map(col): _*)
         .agg(graft.functions.PercentileCompact
           .percentileCompact(value, 0.5).as(out))
     val med = fences(df, v, "med")
@@ -95,27 +90,19 @@ object Outliers {
     * itself is a scan expression. Both fences ride one
     * [[graft.functions.PercentileCompact]] buffer (flat primitive state,
     * bit-identical to the built-in); the buffer is O(group rows) with a
-    * loud capacity error at ~2.6×10⁸ rows/group — same state trade and
-    * same [[QuantileSelect.groupPercentile]] escape hatch as
-    * [[madOutliers]] for whale-scale groups of any cardinality.
+    * loud capacity error at ~2.6×10⁸ rows/group — same state trade as
+    * [[madOutliers]]: whale-scale groups of any cardinality take their
+    * fences from [[QuantileSelect.groupPercentile]] instead.
     */
   def winsorize(df: DataFrame, groupCols: Seq[String], valueCol: String,
-                pLo: Double, pHi: Double,
-                boundedState: Boolean = false): DataFrame = {
+                pLo: Double, pHi: Double): DataFrame = {
     require(0 <= pLo && pLo < pHi && pHi <= 1, "need 0 <= pLo < pHi <= 1")
-    val fences =
-      if (boundedState)
-        // one row per group; freeze so the med machinery doesn't
-        // re-execute inside every consumer subtree
-        Freeze(QuantileSelect.groupPercentile(df, groupCols, col(valueCol), pLo, "lo")
-          .join(QuantileSelect.groupPercentile(df, groupCols, col(valueCol),
-            pHi, "hi"), groupCols))
-      else df.groupBy(groupCols.map(col): _*)
-        .agg(graft.functions.PercentileCompact
-          .percentileCompact(col(valueCol), Seq(pLo, pHi)).as("__f"))
-        .select(col("*"), col("__f").getItem(0).as("lo"),
-          col("__f").getItem(1).as("hi"))
-        .drop("__f")
+    val fences = df.groupBy(groupCols.map(col): _*)
+      .agg(graft.functions.PercentileCompact
+        .percentileCompact(col(valueCol), Seq(pLo, pHi)).as("__f"))
+      .select(col("*"), col("__f").getItem(0).as("lo"),
+        col("__f").getItem(1).as("hi"))
+      .drop("__f")
     df.join(fences, groupCols)
       .withColumn(s"${valueCol}_w",
         least(greatest(col(valueCol), col("lo")), col("hi")))

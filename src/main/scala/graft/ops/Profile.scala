@@ -21,36 +21,14 @@ import org.apache.spark.sql.functions._
   * sf0.1: 3.3 s for the Expand plan vs sub-second for this one, on the
   * same 4-column profile.)
   *
-  * `n_distinct` is exact by default (it's what an oracle can gate);
-  * `approxDistinct = true` swaps HLL++ for the exact grouped count when a
-  * column's full-scale cardinality makes exactness a shuffle you don't
-  * want to pay — that variant IS single-scan (HLL sketches merge, no
-  * Expand is involved).
+  * `n_distinct` is exact (it's what an oracle can gate); a column whose
+  * full-scale cardinality makes exactness a shuffle not worth paying takes
+  * its HLL++ estimate from `AggOps.approxDistinct` instead.
   */
 object Profile {
 
-  def summarize(df: DataFrame, cols: Seq[String],
-                approxDistinct: Boolean = false): DataFrame = {
+  def summarize(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile at least one column")
-    if (approxDistinct) {
-      // sketches merge: ONE wide aggregation over ONE scan (HLL++ involves
-      // no Expand), then an explode to the long format — k columns cost one
-      // pass, not k
-      val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
-        val v = col(c)
-        Seq(count(v).as(s"__nn_$i"),
-          approx_count_distinct(v).as(s"__nd_$i"),
-          min(v).cast("string").as(s"__mn_$i"),
-          max(v).cast("string").as(s"__mx_$i"))
-      }
-      val wide = df.agg(count(lit(1)).as("__n"), aggs: _*)
-      return wide.select(explode(array(cols.zipWithIndex.map { case (c, i) =>
-        struct(lit(c).as("column"), col("__n").as("n_rows"),
-          (col("__n") - col(s"__nn_$i")).as("n_null"),
-          col(s"__nd_$i").as("n_distinct"),
-          col(s"__mn_$i").as("min_value"), col(s"__mx_$i").as("max_value"))
-      }: _*)).as("__s")).select(col("__s.*"))
-    }
     val perCol = cols.map { c =>
       // two-level exact distinct: groupBy(v) combines map-side (shuffle =
       // distinct values per partition), the one-row rollup then derives

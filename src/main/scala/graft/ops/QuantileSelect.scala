@@ -174,14 +174,15 @@ object QuantileSelect {
   }
 
   /** Exact per-group `percentile(valueExpr, prob)` as a fence RELATION
-    * (groupCols + `outCol`) — the join-back shape [[Outliers.madOutliers]]
-    * uses. Fully relational: no driver state at any group cardinality; the
-    * per-group aggregate state is the O(n_g/accuracy) band — collected
-    * through a CAPPED aggregate (`bandCap`, 8·bandCap bytes worst case),
-    * so heavy ties at the fence can never silently re-inflate the state to
-    * O(n_g). A bracket miss or a band overflow raises a loud error (never
-    * a silently wrong fence) — rerun with higher accuracy or a larger cap;
-    * all-null groups yield NULL like the built-in.
+    * (groupCols + `outCol`) — the join-back shape of [[Outliers.madOutliers]]'
+    * fences, for groups too large for its compact buffer. Fully relational:
+    * no driver state at any group cardinality; the per-group aggregate state
+    * is the O(n_g/accuracy) band — collected through a CAPPED aggregate
+    * (`bandCap`, 8·bandCap bytes worst case), so heavy ties at the fence can
+    * never silently re-inflate the state to O(n_g). A bracket miss or a band
+    * overflow raises a loud error (never a silently wrong fence) — rerun
+    * with higher accuracy or a larger cap; all-null groups yield NULL like
+    * the built-in.
     */
   def groupPercentile(df: DataFrame, groupCols: Seq[String], valueExpr: Column,
                       prob: Double, outCol: String,

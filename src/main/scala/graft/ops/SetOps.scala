@@ -10,11 +10,8 @@ import org.apache.spark.sql.DataFrame
   */
 object SetOps {
 
-  /** Column-name-aware union; `allowMissingColumns` fills absent columns
-    * with NULL (schema drift across incremental batches).
-    */
-  def unionAll(frames: Seq[DataFrame], allowMissingColumns: Boolean = false): DataFrame =
-    frames.reduce(_.unionByName(_, allowMissingColumns))
+  /** Column-name-aware union; every frame carries the same column names. */
+  def unionAll(frames: Seq[DataFrame]): DataFrame = frames.reduce(_ unionByName _)
 
   /** Rows of `left` not present in `right` (set difference, dedups). */
   def minus(left: DataFrame, right: DataFrame): DataFrame = left.except(right)

@@ -61,13 +61,12 @@ object Http {
   * (`sleep(2)`).
   */
 final class HttpNewsSource(fetch: String => String,
-                           stockDim: Seq[(String, String, String)] = Model.stockDim,
                            pauseMs: Long = 2000,
                            now: () => String = () => DateTimeFormatter.ISO_LOCAL_DATE_TIME
                              .format(Instant.now().atOffset(ZoneOffset.UTC).toLocalDateTime))
     extends NewsSource {
 
-  private val sectorOf: Map[String, String] = stockDim.map(d => d._2 -> d._1).toMap
+  private val sectorOf: Map[String, String] = Model.stockDim.map(d => d._2 -> d._1).toMap
 
   def fetchNews(spark: SparkSession, searchTerms: Seq[(String, String)]): DataFrame = {
     val rows = for {

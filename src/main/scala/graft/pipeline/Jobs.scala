@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -106,11 +105,13 @@ object Jobs {
         Model.stocksCleanSchema, subPartitions = Seq("setor"))
     }
 
-  /** TransformNewsJob (`transform_news_job.py`): catalog scan (S5) → dynamic
-    * schema normalization (P11) → ISO truncate + parse (P8/P9) → same-day
-    * filter (P6) → drop helpers (P7) → keyed dedup (A5, which subsumes the
-    * reference's full-row dedup A4: one exchange, on `link`) → na.drop
-    * (P10) → partitioned refined write + catalog (K1/K3-equivalent).
+  /** TransformNewsJob (`transform_news_job.py`): catalog scan (S5) → ISO
+    * truncate + parse (P8/P9) → same-day filter (P6) → drop helpers (P7) →
+    * keyed dedup (A5, which subsumes the reference's full-row dedup A4: one
+    * exchange, on `link`) → na.drop (P10) → partitioned refined write +
+    * catalog (K1/K3-equivalent). No schema normalization (the reference's
+    * P11): `news_raw` always carries the constant [[Model.newsRawSchema]],
+    * so every column it would select is already there, STRING, in order.
     */
   def transformNews(spark: SparkSession, cfg: Config): Unit =
     Posture.withConfs(spark, Posture.pipelineConfs: _*) {
@@ -120,16 +121,10 @@ object Jobs {
       val raw = Catalog.readTable(spark, cfg.newsDb, "news_raw")
         .where($"dataproc" <= cfg.processDate)
 
-      val normalized = SchemaOps.normalizeToStringSchema(
-        raw, Model.newsColumns :+ "dataproc")
-      val required = Seq("title", "link", "published_time", "extracted_at")
-      require(required.forall(normalized.columns.contains),
-        s"missing required columns") // :100-102 guard
-
       val dated = CleanOps.parseDate(
         CleanOps.parseDate(
           CleanOps.truncateIsoToDate(
-            CleanOps.truncateIsoToDate(normalized, "published_time", "published_date_str"),
+            CleanOps.truncateIsoToDate(raw, "published_time", "published_date_str"),
             "extracted_at", "extracted_date_str"),
           "published_date_str", "published_date"),
         "extracted_date_str", "extracted_date")

@@ -2610,10 +2610,8 @@ object ExtQueries {
               |GROUP BY doc_id""".stripMargin),
       (spark, dir) => {
         val docs = Tables.documents(spark, dir)
-        // default (shuffle) join: broadcastVocab was A/B'd here and LOST at
-        // bench scale (1.48 vs 1.07 s — the driver-side vocab collect +
-        // broadcast build outweighs the toy-scale token shuffle it saves);
-        // at cluster scale the trade inverts, see Vocab scaladoc
+        // shuffle join on the term: a broadcast vocab was A/B'd here and
+        // LOST at bench scale (1.48 vs 1.07 s), see Vocab scaladoc
         Vocab.encode(docs, "doc_id", "text", Vocab.build(docs, "text"))
           .select(col("doc_id"), col("n_tokens"), col("ids_csv"))
       }),

@@ -163,8 +163,7 @@ class EmptyInputSpec extends AnyFunSuite with SparkSpec {
       emptyKV, "v", Seq(0.5)) === Seq.empty)
     assert(graft.ops.QuantileSelect.groupPercentile(
       emptyKV, Seq("g"), col("v"), 0.5, "med").count() === 0)
-    assert(Outliers.madOutliers(emptyKV, Seq("g"), "v", 3.0,
-      boundedState = true).count() === 0)
+    assert(Outliers.madOutliers(emptyKV, Seq("g"), "v", 3.0).count() === 0)
     assert(ext.Multimodal.syntheticImageTable(spark,
       emptyDocs, "doc_id").count() === 0)
     assert(ext.Multimodal.decodeMeta(spark,
@@ -172,8 +171,7 @@ class EmptyInputSpec extends AnyFunSuite with SparkSpec {
       ext.Multimodal.ImageIoCodec).count() === 0)
     // dual-block fuzzy join: empty input reaches both the exact and the
     // deletion-variant branches
-    assert(Dedup.fuzzyPairsBlocked(emptyDocs, "doc_id", "text", 3,
-      dualBlock = true).count() === 0)
+    assert(Dedup.fuzzyPairsBlocked(emptyDocs, "doc_id", "text", 3).count() === 0)
   }
 
   test("round-9 curation operators survive empty inputs") {

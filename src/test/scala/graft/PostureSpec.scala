@@ -7,8 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one-reader rule: the environment is read in `graft/Posture.scala`
-  * only, and only for the deployment settings and the settings
-  * PRODUCTION.md cites as workload-dependent. Every other session setting
+  * only, and only for the three deployment settings. Every session setting
   * is a constant there, and a conf changed after start-up goes through its
   * one scoped primitive, `Posture.withConfs`.
   */
@@ -37,14 +36,10 @@ class PostureSpec extends AnyFunSuite {
     assert(sites.isEmpty, sites.mkString("\n", "\n", ""))
   }
 
-  test("Posture reads exactly the ten deployment and workload-dependent names") {
+  test("Posture reads exactly the three deployment names") {
     val names = "\"((?:SPARK_)?GRAFT_[A-Z_]+)\"".r
       .findAllMatchIn(Files.readString(posture)).map(_.group(1)).toSet
-    assert(names === Set(
-      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "GRAFT_SCRATCH_DIR",
-      "SPARK_GRAFT_AQE", "SPARK_GRAFT_AQE_MIN_PART", "SPARK_GRAFT_SHUFFLE_PARTS",
-      "SPARK_GRAFT_ROCKSDB_CHANGELOG", "SPARK_GRAFT_LOCAL_FS",
-      "SPARK_GRAFT_CKPT_FM", "SPARK_GRAFT_COMMITTER_V"))
+    assert(names === Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "GRAFT_SCRATCH_DIR"))
   }
 }
 

@@ -42,13 +42,4 @@ class VocabSpec extends AnyFunSuite with SparkSpec {
     assert(enc.split(",").last === "-1", "unseen term must map to unkId")
     assert(!enc.split(",").init.contains("-1"), "seen terms resolve normally")
   }
-
-  test("encode broadcastVocab: identical output to the shuffle-join path") {
-    val vocab = Vocab.build(docs, "text")
-    def rows(bc: Boolean) =
-      Vocab.encode(docs, "doc_id", "text", vocab, broadcastVocab = bc)
-        .select("doc_id", "n_tokens", "ids_csv").as[(Long, Long, String)]
-        .collect().sortBy(_._1).toSeq
-    assert(rows(bc = true) === rows(bc = false))
-  }
 }

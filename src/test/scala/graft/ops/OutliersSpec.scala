@@ -45,22 +45,6 @@ class OutliersSpec extends AnyFunSuite with SparkSpec {
     assert(Outliers.madOutliers(df, Seq("g"), "v", k = 3.0).count() === 0L)
   }
 
-  test("MAD bounded-state path (two-round selection) is bit-identical to " +
-    "the compact default") {
-    val rng = new scala.util.Random(21)
-    val rows = (1 to 20000).map { i =>
-      (s"g${i % 4}", i.toLong, rng.nextDouble() * 1000)
-    } ++ Seq(("g0", -1L, 9e6), ("g3", -2L, 8e6)) // spikes that must flag
-    val df = rows.toDF("g", "id", "v")
-    def run(bounded: Boolean) =
-      Outliers.madOutliers(df, Seq("g"), "v", k = 3.0, boundedState = bounded)
-        .select("g", "id", "rz").as[(String, Long, Double)].collect().toSet
-    val compact = run(false)
-    assert(compact === run(true))
-    assert(compact.map(_._2).intersect(Set(-1L, -2L)) === Set(-1L, -2L),
-      "sanity: the synthesized spikes actually flag")
-  }
-
   test("winsorize: tails pin to the exact-percentile fences, interior untouched") {
     // v = 1..5 in group a: p25 = 2.0, p75 = 4.0 (linear interpolation on
     // exact quarter points) → 1 pins to 2, 5 pins to 4, 2..4 unchanged.

@@ -22,33 +22,6 @@ class ProfileSpec extends AnyFunSuite with SparkSpec {
     assert(out("v") === ((4L, 1L, 3L, "1.0", "9.75")))
   }
 
-  test("approxDistinct path stays within HLL tolerance") {
-    val df = (1 to 2000).map(i => i % 700).toDF("k")
-    val nd = Profile.summarize(df, Seq("k"), approxDistinct = true)
-      .head().getLong(3)
-    assert(math.abs(nd - 700) <= 700 * 0.1, s"approx distinct $nd vs 700")
-  }
-
-  test("approx path: ONE wide scan, no per-column union, stats correct") {
-    val df = Seq((1L, Some("a")), (2L, None), (3L, Some("c")), (4L, Some("a"))).toDF("id", "s")
-    val prof = Profile.summarize(df, Seq("id", "s"), approxDistinct = true)
-    val out = prof.collect().map(r => r.getString(0) ->
-      (r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4), r.getString(5))).toMap
-    // HLL++ is exact at these cardinalities
-    assert(out("id") === ((4L, 0L, 4L, "1", "4")))
-    assert(out("s") === ((4L, 1L, 2L, "a", "c")))
-    // AQE's toString repeats the plan under "== Initial Plan ==" — count
-    // scans in the final section only
-    val plan = prof.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    // the point of the approx variant: sketches merge in ordinary partial
-    // aggregation, so k columns must share ONE scan — k separate df.agg
-    // scans (the round-4 regression) would defeat it
-    assert(!plan.contains("Union"), s"approx path split into per-column scans:\n$plan")
-    val nScans = plan.sliding("LocalTableScan".length).count(_ == "LocalTableScan")
-    assert(nScans == 1, s"expected exactly one scan, saw $nScans:\n$plan")
-    assert(!plan.contains("Expand"), s"Expand in approx plan:\n$plan")
-  }
-
   test("no Expand in the plan — distincts go through grouped partial aggs") {
     val df = Seq((1L, "x")).toDF("a", "b")
     val prof = Profile.summarize(df, Seq("a", "b"))

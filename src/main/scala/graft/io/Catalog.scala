@@ -71,12 +71,22 @@ object Catalog {
     * boto3 get/create-partition fallback (`extract_stocks_job.py:274-316`).
     */
   def addPartition(spark: SparkSession, db: String, table: String,
-                   spec: Map[String, String], location: String): Unit = {
-    val specSql = spec.map { case (k, v) => s"${qi(k)}=${qs(v)}" }.mkString(", ")
-    spark.sql(
-      s"""ALTER TABLE ${qi(db)}.${qi(table)}
-         |ADD IF NOT EXISTS PARTITION ($specSql) LOCATION ${qs(location)}""".stripMargin)
-  }
+                   spec: Map[String, String], location: String): Unit =
+    addPartitions(spark, db, table, Seq(spec -> location))
+
+  /** D8 for several partitions in one statement; already registered specs
+    * are left as they are. No partitions, no statement.
+    */
+  def addPartitions(spark: SparkSession, db: String, table: String,
+                    partitions: Seq[(Map[String, String], String)]): Unit =
+    if (partitions.nonEmpty) {
+      val specs = partitions.map { case (spec, location) =>
+        val specSql = spec.map { case (k, v) => s"${qi(k)}=${qs(v)}" }.mkString(", ")
+        s"PARTITION ($specSql) LOCATION ${qs(location)}"
+      }
+      spark.sql(s"ALTER TABLE ${qi(db)}.${qi(table)} ADD IF NOT EXISTS\n" +
+        specs.mkString("\n"))
+    }
 
   /** K3 — catalog-mediated partitioned write (`transform_news_job.py:158-164`
     * wrote through the Glue catalog): append into a registered table.

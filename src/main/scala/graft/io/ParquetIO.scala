@@ -1,33 +1,44 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types.StructType
 
 /** Partitioned parquet sources/sinks (SURVEY.md §2a S4, K1–K2).
   *
-  * Reads go through the table ROOT plus partition-column predicates —
-  * Catalyst's file-index pruning then skips non-matching `dataproc=`/`setor=`
-  * directories, which is the scalable form of the reference's manual path
-  * construction (`transform_stocks_job.py:32`): same IO, but the pruning is
-  * visible to the optimizer and composes with further pushed filters.
+  * A partition read goes to the partition's directory, as the reference's
+  * manual path construction does (`transform_stocks_job.py:32`), with the
+  * table root as `basePath` so the partition columns stay in the rows: its
+  * listing does not grow with the number of partitions beside it.
   */
 object ParquetIO {
 
-  /** S4 — read one (or any) Hive partition by predicate, pruning at the
-    * file index. `partitionFilters` e.g. Map("dataproc" -> "20240501").
+  /** S4 — read one Hive partition, listing only its directory.
+    * `partitionFilters` name the table's leading partition columns,
+    * outermost first, e.g. Map("dataproc" -> "20240501"); the read lists
+    * `root/dataproc=20240501` alone, where a read of `root` plus a filter
+    * lists every partition before it prunes. No filters read the table.
     *
     * A caller that knows the table's schema passes it, data and partition
     * columns both: the read then types the partition columns as given (no
-    * inference: `dataproc` stays a STRING) and runs no footer-inference job.
-    * None keeps the generic infer-from-footers path.
+    * inference: `dataproc` stays a STRING), runs no footer-inference job,
+    * and reads an absent partition directory as no rows. None keeps the
+    * generic infer-from-footers path, which needs the directory to exist.
     */
   def readPartitioned(spark: SparkSession, root: String,
                       partitionFilters: Map[String, String] = Map.empty,
                       schema: Option[StructType] = None): DataFrame = {
-    val reader = schema.fold(spark.read)(s => spark.read.schema(s))
-    val base = reader.option("basePath", root).parquet(root)
-    partitionFilters.foldLeft(base) { case (df, (k, v)) => df.filter(col(k) === v) }
+    val dir = partitionFilters.foldLeft(new Path(root)) { case (p, (k, v)) =>
+      new Path(p, ExternalCatalogUtils.getPartitionPathString(k, v))
+    }
+    schema match {
+      case Some(s) if !dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir) =>
+        spark.createDataFrame(java.util.List.of[Row](), s)
+      case _ =>
+        schema.fold(spark.read)(s => spark.read.schema(s))
+          .option("basePath", root).parquet(dir.toString)
+    }
   }
 
   /** K1/K2 — partitioned snappy-parquet write, mirroring the reference's

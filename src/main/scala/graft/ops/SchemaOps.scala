@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.DataType
 
 /** P11 — dynamic schema normalization (SURVEY.md §2a), re-expressing the
   * reference's `normalize_column_names` (`transform_news_job.py:42-84`):
@@ -56,12 +56,6 @@ object SchemaOps {
     }
     renamed.select(columns: _*)
   }
-
-  /** Convenience overload for the reference's all-string news schema
-    * (`extract_news_job.py:275-290`).
-    */
-  def normalizeToStringSchema(df: DataFrame, expected: Seq[String]): DataFrame =
-    normalizeColumns(df, expected.map(_ -> StringType))
 
   /** Physical-type drift guard: cast ONLY the columns whose actual type
     * differs from the expected logical type, leaving conforming columns

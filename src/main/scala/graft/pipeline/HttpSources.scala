@@ -79,7 +79,7 @@ final class HttpNewsSource(fetch: String => String,
         s(article.title), s(article.source), s(article.link),
         s(article.publishedTime), s(term), s(now()))
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq), Model.newsRawSchema)
+    spark.createDataFrame(rows.asJava, Model.newsRawSchema)
   }
 
   private def fetchTerm(term: String): Seq[NewsCrawl.ParsedArticle] = {
@@ -164,6 +164,6 @@ final class HttpQuoteSource(fetch: String => String) extends QuoteSource {
       try ChartJson.parse(fetch(ChartJson.chartUrl(t)))
       catch { case scala.util.control.NonFatal(_) => Seq.empty }
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), ChartJson.schema)
+    spark.createDataFrame(rows.asJava, ChartJson.schema)
   }
 }

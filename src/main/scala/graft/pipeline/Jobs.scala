@@ -1,6 +1,8 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,6 +26,12 @@ import graft.ops._
   * A date is rerun by running it again: every job replaces only the
   * partitions of its process date ([[publish]]), and `transformNews` reads
   * no history newer than that date.
+  *
+  * Every per-date step touches that date only, so a date's cost does not
+  * grow with history: the emptiness guard is answered from the source's
+  * local rows, `transformStocks` lists the date's raw directory alone, and
+  * [[publish]] registers the partitions it wrote, not the whole table.
+  * `transformNews` is the one history scan, as in the reference.
   */
 object Jobs {
 
@@ -35,12 +43,16 @@ object Jobs {
   /** ExtractStocksJob (`extract_stocks_job.py`): fetch quotes → NaN-safe
     * cast (P1) → lowercase rename (P2) → broadcast dim join (J1) → dataproc
     * tag (P3) → partitioned raw write (K1, dictionary/bloom off) → catalog.
+    *
+    * A fetch of zero rows fails the job before any write or catalog
+    * statement (`:363-365`). `isEmpty` on the sources' local relations is
+    * answered on the driver, without a job.
     */
   def extractStocks(spark: SparkSession, source: QuoteSource, cfg: Config): Unit = {
     import spark.implicits._
     val dim = Model.stockDim.toDF("Sector", "Ticker", "Company")
     val raw = source.fetchQuotes(spark, Model.stockDim.map(_._2))
-    require(raw.limit(1).count() > 0, "extraction yielded 0 rows") // :363-365 guard
+    require(!raw.isEmpty, "extraction yielded 0 rows")
 
     val typed = CleanOps.nanSafeCast(raw.select(
         "Date", "Ticker", "Close", "High", "Low", "Open", "Volume"),
@@ -50,21 +62,30 @@ object Jobs {
     val joined = JoinOps.enrichWithDim(typed, dim, Seq("Ticker"))
     val renamed = CleanOps.renameAll(joined,
       joined.columns.map(c => c -> c.toLowerCase).toMap)
-    publish(spark, renamed, cfg, cfg.rawStocks, cfg.stockDb, "stock_prices_best_row",
-      Model.stockRawSchema, disableDictionary = true)
+    // one raw file per date: ingestion is driver-side and at most ~10k rows
+    // a date, so the local relation's slices would only multiply small files
+    // (and every later scan's footer reads)
+    publish(spark, renamed.coalesce(1), cfg, cfg.rawStocks, cfg.stockDb,
+      "stock_prices_best_row", Model.stockRawSchema, disableDictionary = true)
   }
 
   /** ExtractNewsJob (`extract_news_job.py`): fetch (sanitized at ingest,
     * P13) → dataproc tag → partitioned raw write → catalog. The reference
     * drops and recreates `news_raw` on every run (`:326`); its schema is
-    * the constant [[Model.newsRawSchema]], so the repair alone refreshes it.
+    * the constant [[Model.newsRawSchema]], so registering the date's
+    * partition alone refreshes it.
     */
-  def extractNews(spark: SparkSession, source: NewsSource, cfg: Config): Unit =
-    publish(spark, source.fetchNews(spark, Model.stockDim.map(d => d._2 -> d._3)),
-      cfg, cfg.rawNews, cfg.newsDb, "news_raw", Model.newsRawSchema)
+  def extractNews(spark: SparkSession, source: NewsSource, cfg: Config): Unit = {
+    val raw = source.fetchNews(spark, Model.stockDim.map(d => d._2 -> d._3))
+    // one raw file per date, as in extractStocks: transformNews's history
+    // scan then reads one file per date
+    publish(spark, raw.coalesce(1), cfg, cfg.rawNews, cfg.newsDb, "news_raw",
+      Model.newsRawSchema)
+  }
 
   /** TransformStocksJob (`transform_stocks_job.py`): read one raw partition
-    * (S4, pruned, known schema) → date cast + validity filters (P4/P5) →
+    * (S4: the date's directory only, known schema; no directory, no rows) →
+    * date cast + validity filters (P4/P5) →
     * Portuguese rename (P2) → per-sector aggregates attached (A1+J2) →
     * lag-window variation (W1, P12, P7) → two-level partitioned refined
     * write (K2). Both windows share the one exchange on `setor`.
@@ -147,13 +168,19 @@ object Jobs {
   /** Every job's tail: tag the rows with the process date (P3), write them
     * partitioned by `dataproc +: subPartitions` (K1/K2; every partition
     * column is a STRING), and register the external table over `root`
-    * (D1/D2/D6).
+    * (D1/D2, D6/D8).
     *
     * Running a date again replaces that date's partitions and leaves every
     * other date's alone. A write that produces no rows for the date
-    * replaces nothing, so the date's earlier output stays. MSCK REPAIR is
-    * the one registration step: a fresh JVM's in-memory catalog has only it
-    * to rediscover the history's partitions.
+    * replaces nothing, so the date's earlier output stays.
+    *
+    * Registration does the date's work only. A table this session's
+    * catalog does not know yet is created and repaired once (MSCK), which
+    * is how a fresh JVM's in-memory catalog rediscovers the history. After
+    * that, one ADD PARTITION statement registers the directories under
+    * `root/dataproc=D`, the reference's boto3 fallback; nothing else is
+    * listed. A partition written by anything but this method stays
+    * invisible to the session until MSCK runs or a fresh JVM starts.
     */
   private def publish(spark: SparkSession, df: DataFrame, cfg: Config, root: String,
                       db: String, table: String, dataSchema: StructType,
@@ -162,10 +189,35 @@ object Jobs {
     val partitions = "dataproc" +: subPartitions
     ParquetIO.writePartitioned(CleanOps.withProcessDate(df, cfg.processDate),
       root, partitions, disableDictionary)
-    Catalog.ensureDatabase(spark, db)
-    Catalog.createExternalTable(spark, db, table, dataSchema,
-      partitions.map(_ -> "STRING"), root)
-    Catalog.repairTable(spark, db, table)
+    if (Catalog.tableExists(spark, db, table))
+      Catalog.addPartitions(spark, db, table,
+        partitionDirs(spark, root, partitions, cfg.processDate))
+    else {
+      Catalog.ensureDatabase(spark, db)
+      Catalog.createExternalTable(spark, db, table, dataSchema,
+        partitions.map(_ -> "STRING"), root)
+      Catalog.repairTable(spark, db, table)
+    }
+  }
+
+  /** The partition directories under `root/dataproc=date`, one level per
+    * partition column, as (spec, location). Lists nothing outside the date.
+    */
+  private def partitionDirs(spark: SparkSession, root: String, partitions: Seq[String],
+                            date: String): Seq[(Map[String, String], String)] = {
+    val top = new Path(root, ExternalCatalogUtils.getPartitionPathString(partitions.head, date))
+    val fs = top.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dateDir = if (fs.exists(top)) Seq(Map(partitions.head -> date) -> top) else Nil
+    partitions.tail.foldLeft(dateDir) { case (dirs, column) =>
+      val prefix = ExternalCatalogUtils.escapePathName(column) + "="
+      for {
+        (spec, dir) <- dirs
+        sub <- fs.listStatus(dir).toSeq
+        name = sub.getPath.getName
+        if sub.isDirectory && name.startsWith(prefix)
+      } yield (spec + (column -> ExternalCatalogUtils.unescapePathName(name.drop(prefix.length)))) ->
+        sub.getPath
+    }.map { case (spec, dir) => spec -> dir.toString }
   }
 }
 

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import graft.ops.CleanOps
@@ -11,7 +13,9 @@ import graft.ops.CleanOps
   * the hermetic container use fixture sources; [[HttpNewsSource]] (selector
   * port in [[NewsCrawl]]/[[HtmlDoc]]) and [[HttpQuoteSource]] (v8 chart
   * JSON) are the HTTP implementations, with the transport itself injected
-  * so the parse paths stay offline-testable.
+  * so the parse paths stay offline-testable. Each builds its frame with
+  * `createDataFrame` over the driver's rows, a local relation, so
+  * [[Jobs.extractStocks]]'s emptiness guard is answered without a job.
   *
   * 100 TB posture: driver-side ingestion is only acceptable for the
   * reference's ≤10k rows/day. At scale the implementation should become a
@@ -46,7 +50,6 @@ final class FixtureNewsSource(rows: Seq[Seq[String]]) extends NewsSource {
       case s: String => CleanOps.sanitizeString(s)
       case other => other
     }))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(sanitized), Model.newsRawSchema)
+    spark.createDataFrame(sanitized.asJava, Model.newsRawSchema)
   }
 }

@@ -28,8 +28,8 @@ class EmptyInputSpec extends AnyFunSuite with SparkSpec {
     assert(WindowOps.lagDelta(e, Seq("ticker"), Seq($"close".asc), "close", "d").count() === 0)
     assert(JoinOps.withGroupAggregates(e, Seq("ticker"),
       Seq("m" -> avg($"close"))).count() === 0)
-    assert(SchemaOps.normalizeToStringSchema(e.select("ticker"),
-      Seq("ticker", "missing")).columns.toSeq === Seq("ticker", "missing"))
+    assert(SchemaOps.normalizeColumns(e.select("ticker"),
+      Seq("ticker", "missing").map(_ -> StringType)).columns.toSeq === Seq("ticker", "missing"))
   }
 
   test("dedup family survives empty corpora") {

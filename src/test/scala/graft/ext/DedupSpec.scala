@@ -353,8 +353,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(out((1L, 2L)) === 1L)
   }
 
-  test("fuzzyPairsBlocked deletion-neighborhood blocking: a first-token " +
-    "typo is recovered; single-key blocking provably misses it") {
+  test("fuzzyPairsBlocked deletion-neighborhood blocking recovers a first-token typo") {
     val docs = Seq(
       (1L, "the quick brown fox jumps"),
       (2L, "thw quick brown fox jumps"), // the typo IS the first token

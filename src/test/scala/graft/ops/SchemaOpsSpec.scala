@@ -14,8 +14,8 @@ class SchemaOpsSpec extends AnyFunSuite with SparkSpec {
   test("fuzzy-matches case/underscore variants, adds missing as typed null") {
     val messy = Seq(("t1", "2024-05-01T00:00:00", "term1"))
       .toDF("Title ", "Published_Time", "SEARCHTERM")
-    val out = SchemaOps.normalizeToStringSchema(messy,
-      Seq("title", "published_time", "search_term", "source"))
+    val out = SchemaOps.normalizeColumns(messy,
+      Seq("title", "published_time", "search_term", "source").map(_ -> StringType))
     assert(out.columns.toSeq === Seq("title", "published_time", "search_term", "source"))
     val r = out.head()
     assert(r.getString(0) === "t1")
@@ -30,8 +30,8 @@ class SchemaOpsSpec extends AnyFunSuite with SparkSpec {
     // expected name CONTAINED in the de-underscored incoming name
     val messy = Seq(("2024-05-01T00:00:00Z", "t1"))
       .toDF("Published_Time_UTC", "title_text")
-    val out = SchemaOps.normalizeToStringSchema(messy,
-      Seq("title", "published_time"))
+    val out = SchemaOps.normalizeColumns(messy,
+      Seq("title", "published_time").map(_ -> StringType))
     assert(out.columns.toSeq === Seq("title", "published_time"))
     val r = out.head()
     assert(r.getString(0) === "t1", "title matched by containment in title_text")
@@ -43,20 +43,20 @@ class SchemaOpsSpec extends AnyFunSuite with SparkSpec {
     // exact hit: 'title' could contain-match 'subtitle', but 'subtitle' is
     // someone's exact match
     val messy = Seq(("sub", "t1")).toDF("subtitle", "title")
-    val out = SchemaOps.normalizeToStringSchema(messy, Seq("title", "subtitle"))
+    val out = SchemaOps.normalizeColumns(messy, Seq("title", "subtitle").map(_ -> StringType))
     val r = out.head()
     assert(r.getString(0) === "t1" && r.getString(1) === "sub")
   }
 
   test("each incoming column claimed once; first expected wins") {
     val messy = Seq(("a", "b")).toDF("search_term", "searchterm")
-    val out = SchemaOps.normalizeToStringSchema(messy, Seq("search_term", "extra"))
+    val out = SchemaOps.normalizeColumns(messy, Seq("search_term", "extra").map(_ -> StringType))
     assert(out.head().getString(0) === "a")
   }
 
   test("idempotent on already-canonical schema") {
     val clean = Seq(("x", "y")).toDF("title", "link")
-    val out = SchemaOps.normalizeToStringSchema(clean, Seq("title", "link"))
+    val out = SchemaOps.normalizeColumns(clean, Seq("title", "link").map(_ -> StringType))
     assert(out.collect().map(_.toSeq).toSeq === Seq(Seq("x", "y")))
   }
 

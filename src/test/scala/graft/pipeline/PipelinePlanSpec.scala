@@ -91,8 +91,8 @@ class PipelinePlanSpec extends AnyFunSuite with SparkSpec {
 
   /** TransformNewsJob's rows as the two-exchange plan computed them. */
   private def parentNews(c: Jobs.Config): DataFrame = {
-    val normalized = SchemaOps.normalizeToStringSchema(
-      Catalog.readTable(spark, c.newsDb, "news_raw"), Model.newsColumns :+ "dataproc")
+    val normalized = SchemaOps.normalizeColumns(
+      Catalog.readTable(spark, c.newsDb, "news_raw"), (Model.newsColumns :+ "dataproc").map(_ -> StringType))
     val dated = CleanOps.parseDate(
       CleanOps.parseDate(
         CleanOps.truncateIsoToDate(
@@ -182,8 +182,10 @@ class PipelinePlanSpec extends AnyFunSuite with SparkSpec {
     def dirs(root: String, depth: Int): Seq[java.io.File] =
       if (depth == 0) Seq(new java.io.File(root))
       else dirs(root, depth - 1).flatMap(_.listFiles().filter(_.isDirectory).toSeq)
-    val parts = dirs(cfg.refinedStocks, 2) ++ dirs(cfg.refinedNews, 1)
-    assert(parts.size === 2 * 2 + 2, parts.mkString(", "))
+    // the raw zones too: each extract job writes one file per date
+    val parts = dirs(cfg.refinedStocks, 2) ++ dirs(cfg.refinedNews, 1) ++
+      dirs(cfg.rawStocks, 1) ++ dirs(cfg.rawNews, 1)
+    assert(parts.size === 2 * 2 + 2 + 2 + 2, parts.mkString(", "))
     parts.foreach { d =>
       assert(d.listFiles().count(_.getName.endsWith(".parquet")) === 1, d.toString)
     }

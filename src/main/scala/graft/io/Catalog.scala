@@ -1,6 +1,7 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Catalog / DDL operators (SURVEY.md §2a D1–D8, K3), against Spark's
@@ -24,25 +25,37 @@ object Catalog {
 
   /** D2 — partitioned external parquet table at an explicit location
     * (`transform_stocks_job.py:66-84`). `schema` covers DATA columns only;
-    * `partitions` are (name, sqlType) appended as PARTITIONED BY.
+    * `partitions` are (name, sqlType) appended as PARTITIONED BY. The
+    * location is created first (empty), so a table made before its first
+    * write reads as no rows.
     *
     * Datasource syntax (`USING parquet`), not Hive's `STORED AS`: identical
     * externally-located Hive-layout table, but it works on the built-in
     * in-memory catalog (no Hive metastore in this environment) and reads
     * through Spark's native vectorized parquet source.
+    *
+    * The table stores its writer settings as table options: snappy,
+    * dynamic partition overwrite (an overwriting insert into a partitioned
+    * table replaces only the partitions its rows produce, and replaces
+    * nothing when it has no rows), plus the caller's `options`.
     */
   def createExternalTable(spark: SparkSession, db: String, table: String,
                           schema: StructType, partitions: Seq[(String, String)],
-                          location: String): Unit = {
+                          location: String, options: Map[String, String] = Map.empty): Unit = {
+    val path = new Path(location)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(path): Unit
     val cols = (schema.fields.map(f => s"${qi(f.name)} ${f.dataType.sql}") ++
       partitions.map { case (n, t) => s"${qi(n)} $t" }).mkString(", ")
     // PARTITIONED BY () is a parse error — omit the clause for unpartitioned tables
     val parts =
       if (partitions.isEmpty) ""
       else partitions.map { case (n, _) => qi(n) }.mkString("\nPARTITIONED BY (", ", ", ")")
+    // table options, not writer options: `insertInto` silently drops the latter
+    val opts = (Map("compression" -> "snappy", "partitionOverwriteMode" -> "dynamic") ++ options)
+      .map { case (k, v) => s"${qs(k)} ${qs(v)}" }.mkString("\nOPTIONS (", ", ", ")")
     spark.sql(
       s"""CREATE TABLE IF NOT EXISTS ${qi(db)}.${qi(table)} ($cols)
-         |USING parquet$parts
+         |USING parquet$opts$parts
          |LOCATION ${qs(location)}""".stripMargin)
   }
 
@@ -71,28 +84,22 @@ object Catalog {
     * boto3 get/create-partition fallback (`extract_stocks_job.py:274-316`).
     */
   def addPartition(spark: SparkSession, db: String, table: String,
-                   spec: Map[String, String], location: String): Unit =
-    addPartitions(spark, db, table, Seq(spec -> location))
-
-  /** D8 for several partitions in one statement; already registered specs
-    * are left as they are. No partitions, no statement.
-    */
-  def addPartitions(spark: SparkSession, db: String, table: String,
-                    partitions: Seq[(Map[String, String], String)]): Unit =
-    if (partitions.nonEmpty) {
-      val specs = partitions.map { case (spec, location) =>
-        val specSql = spec.map { case (k, v) => s"${qi(k)}=${qs(v)}" }.mkString(", ")
-        s"PARTITION ($specSql) LOCATION ${qs(location)}"
-      }
-      spark.sql(s"ALTER TABLE ${qi(db)}.${qi(table)} ADD IF NOT EXISTS\n" +
-        specs.mkString("\n"))
-    }
+                   spec: Map[String, String], location: String): Unit = {
+    val specSql = spec.map { case (k, v) => s"${qi(k)}=${qs(v)}" }.mkString(", ")
+    spark.sql(s"ALTER TABLE ${qi(db)}.${qi(table)} ADD IF NOT EXISTS " +
+      s"PARTITION ($specSql) LOCATION ${qs(location)}")
+  }
 
   /** K3 — catalog-mediated partitioned write (`transform_news_job.py:158-164`
-    * wrote through the Glue catalog): append into a registered table.
+    * wrote through the Glue catalog): insert into a registered table,
+    * matching columns BY POSITION. The insert registers the partitions it
+    * creates. Mode overwrite: on a table from [[createExternalTable]]
+    * (dynamic partition overwrite) the rows' partitions are appended, or
+    * replaced where the table already has them, and every other partition
+    * is left as it is. A table without that option is replaced whole.
     */
   def appendToTable(df: DataFrame, db: String, table: String): Unit =
-    df.write.mode("append").format("parquet").insertInto(s"${qi(db)}.${qi(table)}")
+    df.write.mode(SaveMode.Overwrite).insertInto(s"${qi(db)}.${qi(table)}")
 
   /** S5 — catalog table scan (`transform_news_job.py:320-323`). */
   def readTable(spark: SparkSession, db: String, table: String): DataFrame =

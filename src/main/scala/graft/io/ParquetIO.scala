@@ -1,66 +1,28 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Partitioned parquet sources/sinks (SURVEY.md §2a S4, K1–K2).
-  *
-  * A partition read goes to the partition's directory, as the reference's
-  * manual path construction does (`transform_stocks_job.py:32`), with the
-  * table root as `basePath` so the partition columns stay in the rows: its
-  * listing does not grow with the number of partitions beside it.
+/** Partitioned parquet writes by path (SURVEY.md §2a K1–K2). The daily
+  * pipeline reads and writes its tables through the catalog instead
+  * ([[Catalog]]), where a partition-filtered read lists only the matching
+  * partitions.
   */
 object ParquetIO {
 
-  /** S4 — read one Hive partition, listing only its directory.
-    * `partitionFilters` name the table's leading partition columns,
-    * outermost first, e.g. Map("dataproc" -> "20240501"); the read lists
-    * `root/dataproc=20240501` alone, where a read of `root` plus a filter
-    * lists every partition before it prunes. No filters read the table.
-    *
-    * A caller that knows the table's schema passes it, data and partition
-    * columns both: the read then types the partition columns as given (no
-    * inference: `dataproc` stays a STRING), runs no footer-inference job,
-    * and reads an absent partition directory as no rows. None keeps the
-    * generic infer-from-footers path, which needs the directory to exist.
-    */
-  def readPartitioned(spark: SparkSession, root: String,
-                      partitionFilters: Map[String, String] = Map.empty,
-                      schema: Option[StructType] = None): DataFrame = {
-    val dir = partitionFilters.foldLeft(new Path(root)) { case (p, (k, v)) =>
-      new Path(p, ExternalCatalogUtils.getPartitionPathString(k, v))
-    }
-    schema match {
-      case Some(s) if !dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir) =>
-        spark.createDataFrame(java.util.List.of[Row](), s)
-      case _ =>
-        schema.fold(spark.read)(s => spark.read.schema(s))
-          .option("basePath", root).parquet(dir.toString)
-    }
-  }
-
-  /** K1/K2 — partitioned snappy-parquet write, mirroring the reference's
-    * writer chain (`extract_stocks_job.py:386-393`) including its explicit
-    * dictionary/bloom-filter opt-out on raw stocks.
+  /** K1/K2 — partitioned snappy-parquet write by path, mirroring the
+    * reference's writer chain (`extract_stocks_job.py:386-393`).
     *
     * Not the reference's append: mode `overwrite` with the writer option
     * `partitionOverwriteMode=dynamic` replaces exactly the partition
     * directories the rows produce and leaves every other one alone. A
     * write with no rows replaces nothing.
     */
-  def writePartitioned(df: DataFrame, path: String, partitions: Seq[String],
-                       disableDictionary: Boolean = false): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
+  def writePartitioned(df: DataFrame, path: String, partitions: Seq[String]): Unit =
+    df.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .option("compression", "snappy")
-    val opts = if (disableDictionary)
-      w.option("parquet.enable.dictionary", "false")
-        .option("parquet.bloom.filter.enabled", "false")
-    else w
-    opts.partitionBy(partitions: _*).parquet(path)
-  }
+      .partitionBy(partitions: _*).parquet(path)
 
   /** Small-file COMPACTION (the lakehouse OPTIMIZE): rewrite a parquet
     * directory into ~`targetBytes` files, sized from the directory's actual

@@ -1,13 +1,11 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Posture
-import graft.io.{Catalog, ParquetIO}
+import graft.io.Catalog
 import graft.ops._
 
 /** The four reference jobs as composable `SparkSession => Unit` stages
@@ -23,15 +21,16 @@ import graft.ops._
   * ([[graft.Posture.pipelineConfs]]), so a date's small shuffle coalesces
   * to a task or two and each refined partition gets one file.
   *
-  * A date is rerun by running it again: every job replaces only the
-  * partitions of its process date ([[publish]]), and `transformNews` reads
-  * no history newer than that date.
+  * Every job reads and writes its tables through the catalog, as the
+  * reference's catalog-built pipeline does: a read is the table filtered
+  * on `dataproc`, which lists only the matching partitions, and a write is
+  * one insert into the table ([[publish]]), which registers exactly the
+  * partitions it creates. So a date's cost does not grow with history,
+  * apart from `transformNews`'s history scan, as in the reference.
   *
-  * Every per-date step touches that date only, so a date's cost does not
-  * grow with history: the emptiness guard is answered from the source's
-  * local rows, `transformStocks` lists the date's raw directory alone, and
-  * [[publish]] registers the partitions it wrote, not the whole table.
-  * `transformNews` is the one history scan, as in the reference.
+  * A date is rerun by running it again: every job replaces only the
+  * partitions of its process date, and `transformNews` reads no history
+  * newer than that date.
   */
 object Jobs {
 
@@ -40,9 +39,25 @@ object Jobs {
                           stockDb: String = "stock_db", newsDb: String = "news_db",
                           processDate: String)
 
+  /** One pipeline table: its catalog name, the root of its files, its data
+    * columns, its partition columns (`dataproc` first, every one a STRING)
+    * and the writer options stored with it.
+    */
+  private final case class Table(db: String, name: String, root: String, dataSchema: StructType,
+                                 partitions: Seq[String] = Seq("dataproc"),
+                                 options: Map[String, String] = Map.empty)
+
+  // the reference's explicit dictionary/bloom opt-out on raw stocks
+  // (`extract_stocks_job.py:386-393`)
+  private def rawStocks(cfg: Config) = Table(cfg.stockDb, "stock_prices_best_row",
+    cfg.rawStocks, Model.stockRawSchema, options = Map(
+      "parquet.enable.dictionary" -> "false", "parquet.bloom.filter.enabled" -> "false"))
+  private def rawNews(cfg: Config) = Table(cfg.newsDb, "news_raw", cfg.rawNews, Model.newsRawSchema)
+
   /** ExtractStocksJob (`extract_stocks_job.py`): fetch quotes → NaN-safe
     * cast (P1) → lowercase rename (P2) → broadcast dim join (J1) → dataproc
-    * tag (P3) → partitioned raw write (K1, dictionary/bloom off) → catalog.
+    * tag (P3) → partitioned raw insert through the catalog (K1 by K3,
+    * dictionary/bloom off).
     *
     * A fetch of zero rows fails the job before any write or catalog
     * statement (`:363-365`). `isEmpty` on the sources' local relations is
@@ -65,37 +80,33 @@ object Jobs {
     // one raw file per date: ingestion is driver-side and at most ~10k rows
     // a date, so the local relation's slices would only multiply small files
     // (and every later scan's footer reads)
-    publish(spark, renamed.coalesce(1), cfg, cfg.rawStocks, cfg.stockDb,
-      "stock_prices_best_row", Model.stockRawSchema, disableDictionary = true)
+    publish(spark, renamed.coalesce(1), cfg, rawStocks(cfg))
   }
 
   /** ExtractNewsJob (`extract_news_job.py`): fetch (sanitized at ingest,
-    * P13) → dataproc tag → partitioned raw write → catalog. The reference
-    * drops and recreates `news_raw` on every run (`:326`); its schema is
-    * the constant [[Model.newsRawSchema]], so registering the date's
+    * P13) → dataproc tag → partitioned raw insert through the catalog. The
+    * reference drops and recreates `news_raw` on every run (`:326`); its
+    * schema is the constant [[Model.newsRawSchema]], so inserting the date's
     * partition alone refreshes it.
     */
   def extractNews(spark: SparkSession, source: NewsSource, cfg: Config): Unit = {
     val raw = source.fetchNews(spark, Model.stockDim.map(d => d._2 -> d._3))
     // one raw file per date, as in extractStocks: transformNews's history
     // scan then reads one file per date
-    publish(spark, raw.coalesce(1), cfg, cfg.rawNews, cfg.newsDb, "news_raw",
-      Model.newsRawSchema)
+    publish(spark, raw.coalesce(1), cfg, rawNews(cfg))
   }
 
   /** TransformStocksJob (`transform_stocks_job.py`): read one raw partition
-    * (S4: the date's directory only, known schema; no directory, no rows) →
+    * (S4, through the catalog: the date's directory only; none, no rows) →
     * date cast + validity filters (P4/P5) →
     * Portuguese rename (P2) → per-sector aggregates attached (A1+J2) →
     * lag-window variation (W1, P12, P7) → two-level partitioned refined
-    * write (K2). Both windows share the one exchange on `setor`.
+    * insert (K2 by K3). Both windows share the one exchange on `setor`.
     */
   def transformStocks(spark: SparkSession, cfg: Config): Unit =
     Posture.withConfs(spark, Posture.pipelineConfs: _*) {
       import spark.implicits._
-      val raw = ParquetIO.readPartitioned(spark, cfg.rawStocks,
-        Map("dataproc" -> cfg.processDate),
-        Some(Model.stockRawSchema.add("dataproc", StringType)))
+      val raw = read(spark, rawStocks(cfg)).where($"dataproc" === cfg.processDate)
 
       val cleaned = CleanOps.filterValid(
         CleanOps.castColumns(raw, Map("date" -> DateType, "close" -> DoubleType,
@@ -122,15 +133,15 @@ object Jobs {
       val withVar = WindowOps.lagDelta(withAggs, Seq("setor", "codigoAcao"),
         Seq($"data".asc), "precoFechamento", "variacaoFechamento")
 
-      publish(spark, withVar, cfg, cfg.refinedStocks, cfg.stockDb, "stocks_clean",
-        Model.stocksCleanSchema, subPartitions = Seq("setor"))
+      publish(spark, withVar, cfg, Table(cfg.stockDb, "stocks_clean", cfg.refinedStocks,
+        Model.stocksCleanSchema, Seq("dataproc", "setor")))
     }
 
   /** TransformNewsJob (`transform_news_job.py`): catalog scan (S5) → ISO
     * truncate + parse (P8/P9) → same-day filter (P6) → drop helpers (P7) →
     * keyed dedup (A5, which subsumes the reference's full-row dedup A4: one
-    * exchange, on `link`) → na.drop (P10) → partitioned refined write +
-    * catalog (K1/K3-equivalent). No schema normalization (the reference's
+    * exchange, on `link`) → na.drop (P10) → partitioned refined insert
+    * through the catalog (K1 by K3). No schema normalization (the reference's
     * P11): `news_raw` always carries the constant [[Model.newsRawSchema]],
     * so every column it would select is already there, STRING, in order.
     */
@@ -139,8 +150,7 @@ object Jobs {
       import spark.implicits._
       // history up to the process date only: a rerun of an earlier date
       // must not see articles of a date that ran after it
-      val raw = Catalog.readTable(spark, cfg.newsDb, "news_raw")
-        .where($"dataproc" <= cfg.processDate)
+      val raw = read(spark, rawNews(cfg)).where($"dataproc" <= cfg.processDate)
 
       val dated = CleanOps.parseDate(
         CleanOps.parseDate(
@@ -161,64 +171,46 @@ object Jobs {
         Seq("link"), Seq($"extracted_at".asc, $"title".asc))
       val complete = CleanOps.dropNullsIn(deduped, Seq("title", "link", "source"))
 
-      publish(spark, complete, cfg, cfg.refinedNews, cfg.newsDb, "news_clean",
-        Model.newsRawSchema)
+      publish(spark, complete, cfg, Table(cfg.newsDb, "news_clean", cfg.refinedNews,
+        Model.newsRawSchema))
     }
 
-  /** Every job's tail: tag the rows with the process date (P3), write them
-    * partitioned by `dataproc +: subPartitions` (K1/K2; every partition
-    * column is a STRING), and register the external table over `root`
-    * (D1/D2, D6/D8).
+  /** Every job's tail: tag the rows with the process date (P3) and insert
+    * them into `t` (K1/K2 through K3), columns in the table's order.
     *
     * Running a date again replaces that date's partitions and leaves every
-    * other date's alone. A write that produces no rows for the date
-    * replaces nothing, so the date's earlier output stays.
-    *
-    * Registration does the date's work only. A table this session's
-    * catalog does not know yet is created and repaired once (MSCK), which
-    * is how a fresh JVM's in-memory catalog rediscovers the history. After
-    * that, one ADD PARTITION statement registers the directories under
-    * `root/dataproc=D`, the reference's boto3 fallback; nothing else is
-    * listed. A partition written by anything but this method stays
-    * invisible to the session until MSCK runs or a fresh JVM starts.
+    * other date's alone (the table's dynamic partition overwrite). A write
+    * that produces no rows for the date replaces nothing, so the date's
+    * earlier output stays. The insert registers the partitions it creates
+    * and lists nothing else. A partition written other than by an insert
+    * through its table stays invisible to the session until MSCK runs or a
+    * fresh JVM starts.
     */
-  private def publish(spark: SparkSession, df: DataFrame, cfg: Config, root: String,
-                      db: String, table: String, dataSchema: StructType,
-                      subPartitions: Seq[String] = Nil,
-                      disableDictionary: Boolean = false): Unit = {
-    val partitions = "dataproc" +: subPartitions
-    ParquetIO.writePartitioned(CleanOps.withProcessDate(df, cfg.processDate),
-      root, partitions, disableDictionary)
-    if (Catalog.tableExists(spark, db, table))
-      Catalog.addPartitions(spark, db, table,
-        partitionDirs(spark, root, partitions, cfg.processDate))
-    else {
-      Catalog.ensureDatabase(spark, db)
-      Catalog.createExternalTable(spark, db, table, dataSchema,
-        partitions.map(_ -> "STRING"), root)
-      Catalog.repairTable(spark, db, table)
-    }
+  private def publish(spark: SparkSession, df: DataFrame, cfg: Config, t: Table): Unit = {
+    register(spark, t)
+    Catalog.appendToTable(CleanOps.withProcessDate(df, cfg.processDate)
+      .select((t.dataSchema.fieldNames ++ t.partitions).map(col).toSeq: _*), t.db, t.name)
   }
 
-  /** The partition directories under `root/dataproc=date`, one level per
-    * partition column, as (spec, location). Lists nothing outside the date.
+  /** S5 — `t`'s rows through the catalog; a filter on its partition
+    * columns lists only the matching partitions.
     */
-  private def partitionDirs(spark: SparkSession, root: String, partitions: Seq[String],
-                            date: String): Seq[(Map[String, String], String)] = {
-    val top = new Path(root, ExternalCatalogUtils.getPartitionPathString(partitions.head, date))
-    val fs = top.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dateDir = if (fs.exists(top)) Seq(Map(partitions.head -> date) -> top) else Nil
-    partitions.tail.foldLeft(dateDir) { case (dirs, column) =>
-      val prefix = ExternalCatalogUtils.escapePathName(column) + "="
-      for {
-        (spec, dir) <- dirs
-        sub <- fs.listStatus(dir).toSeq
-        name = sub.getPath.getName
-        if sub.isDirectory && name.startsWith(prefix)
-      } yield (spec + (column -> ExternalCatalogUtils.unescapePathName(name.drop(prefix.length)))) ->
-        sub.getPath
-    }.map { case (spec, dir) => spec -> dir.toString }
+  private def read(spark: SparkSession, t: Table): DataFrame = {
+    register(spark, t)
+    Catalog.readTable(spark, t.db, t.name)
   }
+
+  /** The first touch of `t` in this session, by a read or a write, creates
+    * it over its root (D1/D2) and repairs it once (D6): how a fresh JVM's
+    * in-memory catalog rediscovers the history.
+    */
+  private def register(spark: SparkSession, t: Table): Unit =
+    if (!Catalog.tableExists(spark, t.db, t.name)) {
+      Catalog.ensureDatabase(spark, t.db)
+      Catalog.createExternalTable(spark, t.db, t.name, t.dataSchema,
+        t.partitions.map(_ -> "STRING"), t.root, t.options)
+      Catalog.repairTable(spark, t.db, t.name)
+    }
 }
 
 object Pipeline {

@@ -494,7 +494,7 @@ object CoreQueries {
           Tables.lineitem(spark, dir).select("l_orderkey", "l_returnflag")
             .repartition(col("l_returnflag")),
           out, Seq("l_returnflag"))
-        graft.io.ParquetIO.readPartitioned(spark, out)
+        spark.read.parquet(out)
           .groupBy($"l_returnflag".cast("string").as("l_returnflag"))
           .agg(count(lit(1)).as("n"))
       }),
@@ -519,16 +519,16 @@ object CoreQueries {
             .withColumn("dataproc", lit("2024-01-15"))
             .repartition(col("dataproc"), col("setor")),
           out, Seq("dataproc", "setor"))
-        graft.io.ParquetIO.readPartitioned(spark, out)
+        spark.read.parquet(out)
           .groupBy($"dataproc".cast("string").as("dataproc"),
             $"setor".cast("string").as("setor"))
           .agg(count(lit(1)).as("n"))
       }),
 
     // K3 — catalog-mediated write: external partitioned table registered in
-    // the catalog, rows appended THROUGH the table (insertInto), scanned
-    // back via the catalog (S5). Fresh location + drop/recreate so repeated
-    // runs in one JVM don't double-append.
+    // the catalog, rows inserted THROUGH the table (insertInto, the same
+    // insert every pipeline write uses), scanned back via the catalog (S5).
+    // Fresh location + drop/recreate so every run starts from an empty table.
     GQ("k3_catalog_write",
       Some("""SELECT o_orderstatus, count(*) AS n,
              |       CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
@@ -545,12 +545,6 @@ object CoreQueries {
         val loc = graft.Scratch.fresh("k3")
         Catalog.ensureDatabase(spark, db)
         Catalog.dropTable(spark, db, table)
-        val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-        // pre-create the (empty) location: CreateDataSourceTableCommand
-        // stats it (FileStreamSink.hasMetadata) and logs a full benign
-        // FileNotFoundException stack for a passing gate otherwise —
-        // stderr noise a real failure could hide in
-        fs.mkdirs(new org.apache.hadoop.fs.Path(loc)): Unit
         Catalog.createExternalTable(spark, db, table,
           StructType(Seq(StructField("o_orderkey", LongType),
             StructField("o_totalprice", DoubleType))),

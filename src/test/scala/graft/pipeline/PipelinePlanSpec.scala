@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 
 import graft.{Posture, SparkSpec}
-import graft.io.{Catalog, ParquetIO}
+import graft.io.Catalog
 import graft.ops._
 import graft.pipeline.Model.RawQuote
 
@@ -71,7 +71,8 @@ class PipelinePlanSpec extends AnyFunSuite with SparkSpec {
 
   /** TransformStocksJob's rows as the two-exchange plan computed them. */
   private def parentStocks(c: Jobs.Config): DataFrame = {
-    val raw = ParquetIO.readPartitioned(spark, c.rawStocks, Map("dataproc" -> c.processDate))
+    val raw = Catalog.readTable(spark, c.stockDb, "stock_prices_best_row")
+      .where($"dataproc" === c.processDate)
     val cleaned = CleanOps.filterValid(
       CleanOps.castColumns(raw, Map("date" -> DateType, "close" -> DoubleType,
         "high" -> DoubleType, "low" -> DoubleType, "open" -> DoubleType,
